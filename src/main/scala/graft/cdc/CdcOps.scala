@@ -84,13 +84,18 @@ object CdcOps {
 
   /** A3: last-write-wins upsert snapshot per key — the Kudu upsert
     * semantic [ref: KuduManager.scala:72,112-114] as one window over a
-    * hash shuffle on the key. Ordering: current_ts then id (ties at
-    * second granularity are broken by the monotonic record id, like
-    * Kafka log order breaks ties within a batch).
+    * hash shuffle on the key (or over any partitioning already
+    * clustered on it — the store's range exchange). Ordering:
+    * current_ts then id (ties at second granularity are broken by the
+    * monotonic record id, like Kafka log order breaks ties within a
+    * batch); a null current_ts sorts below every timestamp. Rows that
+    * tie on (current_ts, id) are replays of one record; `tieBreak`
+    * (descending keys) decides between them when the caller can
+    * order replays, as the store's merge does (the later batch wins).
     */
-  def snapshot(parsed: DataFrame, key: Column): DataFrame = {
+  def snapshot(parsed: DataFrame, key: Column, tieBreak: Seq[Column] = Nil): DataFrame = {
     val w = Window.partitionBy(key)
-      .orderBy(col("current_ts").desc, col("id").desc)
+      .orderBy(Seq(col("current_ts").desc, col("id").desc) ++ tieBreak: _*)
     parsed.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")
@@ -102,10 +107,16 @@ object CdcOps {
     * a map-side-heavy shrink), then full-outer joined against the
     * base; per key the later row wins by (current_ts, id) — the same
     * total order `snapshot` uses, so compact(snapshot(A), B) ==
-    * snapshot(A ∪ B) for ANY split of the change log. At 100 TB the
-    * base is a bucketed table: the only full shuffle is the (small)
-    * delta's; the reference achieves this incrementally via per-record
-    * Kudu upserts [ref: KuduManager.scala:72,112-114].
+    * snapshot(A ∪ B) for ANY split of the change log (an exact
+    * (current_ts, id) tie goes to the delta). At 100 TB the base is a
+    * bucketed table: the only full shuffle is the (small) delta's; the
+    * reference achieves this incrementally via per-record Kudu upserts
+    * [ref: KuduManager.scala:72,112-114].
+    *
+    * This is the A16 operator. The SnapshotStore merge folds the same
+    * identity in UNION form instead — snapshot(base ∪ delta) inside
+    * the range exchange that writes its files — because a store
+    * rewrite shuffles the base anyway and the union needs no join.
     */
   def compactSnapshot(base: DataFrame, deltas: DataFrame, keyCol: String): DataFrame = {
     val cols = base.columns.toSeq
@@ -125,19 +136,15 @@ object CdcOps {
 
   /** A4: soft-delete snapshot: physical deletes become logical
     * `delete_state='1'` rows whose payload is nulled (a D record only
-    * carries its key [ref: KuduManager.scala:74-80]).
+    * carries its key [ref: KuduManager.scala:74-80]). The decoration
+    * derives only from op_type, so it is idempotent: stored rows that
+    * re-enter the store's merge fold already decorated come out the
+    * same.
     */
-  def softDeleteSnapshot(parsed: DataFrame, key: Column): DataFrame =
-    decorateSoftDelete(snapshot(parsed, key))
-
-  /** The soft-delete decoration alone (idempotent): derive
-    * delete_state from op_type and null the payload of D rows. Split
-    * out so the incremental compaction path can apply it to an
-    * already-snapshotted frame.
-    */
-  def decorateSoftDelete(snap: DataFrame): DataFrame = {
+  def softDeleteSnapshot(parsed: DataFrame, key: Column,
+                         tieBreak: Seq[Column] = Nil): DataFrame = {
     val isDel = col("op_type") === "D"
-    snap
+    snapshot(parsed, key, tieBreak)
       .withColumn("delete_state", when(isDel, "1").otherwise("0"))
       .withColumn("value", when(isDel, lit(null)).otherwise(col("value")))
       .withColumn("event_type", when(isDel, lit(null)).otherwise(col("event_type")))

@@ -3,8 +3,9 @@ package graft.store
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cdc.CdcOps
@@ -57,7 +58,7 @@ final case class ManifestRow(path: String, rows: Long, minKey: Long,
   * another writer advanced the pointer first (re-read, re-fold,
   * retry — the Delta/Iceberg protocol). On a real cluster the same
   * seam is where a full table format slots in — the merge fold
-  * (CdcOps.compactSnapshot) is unchanged.
+  * (CdcOps.softDeleteSnapshot over base ∪ delta) is unchanged.
   */
 final class SnapshotStore(
     val spark: SparkSession,
@@ -79,10 +80,10 @@ final class SnapshotStore(
   Files.createDirectories(manifestDir)
 
   /** Instrumentation: rows collected to the driver by the last
-    * [[mergeWith]] file-hit planning pass. Bounded by the manifest's
-    * elementary-segment count (<= 2 × files), NEVER by delta key
-    * cardinality — specs assert this stays tiny under a
-    * million-distinct-key merge.
+    * file-hit planning pass ([[hitSegments]]). Bounded by the delta's
+    * partitions × the manifest's elementary-segment count (<= 2 ×
+    * files), NEVER by delta key cardinality — specs assert this stays
+    * tiny under a million-distinct-key merge.
     */
   @volatile private[graft] var lastMergeSummaryRows: Long = -1L
 
@@ -92,6 +93,13 @@ final class SnapshotStore(
     * delta flips this on and a dim-shaped one leaves it off.
     */
   @volatile private[graft] var lastIndexMergeFallback: Boolean = false
+
+  /** Instrumentation: did the last data-file write fall back to the
+    * second stats job (re-reading the just-written files) instead of
+    * the stats observed during the write? Specs pin that the CDC
+    * merges stay on the observed path on both manifest formats.
+    */
+  @volatile private[graft] var lastStatsFallback: Boolean = false
 
   def currentVersion: Option[Long] = protocol.readPointer(pointer)
 
@@ -472,20 +480,24 @@ final class SnapshotStore(
     base.filter(col(indexCol.get) === lit(value))
   }
 
-  /** Write `df` as version `v`'s NEW data files (range-clustered on
-    * the key) and return their manifest entries. One small stats job
-    * over the just-written files collects the key-range index (what
-    * real formats do at write time).
-    */
   private def attemptToken(): String =
     java.lang.Long.toHexString(
       java.util.concurrent.ThreadLocalRandom.current().nextLong() & 0xffffffffL)
 
+  /** Write `df` as version `v`'s NEW data files (range-clustered on
+    * the key) and return their manifest entries, with the per-file
+    * stats collected during the write.
+    *
+    * Only NON-FATAL failures are candidates for the retry contract:
+    * an OOM, a linkage error or an interrupt surfaces as itself, never
+    * relabelled as a retryable conflict, and a converted failure keeps
+    * the original error as its cause.
+    */
   private def writeDataFiles(df: DataFrame, v: Long): Seq[DataFileEntry] =
     try writeDataFilesInner(df, v)
     catch {
       case e: ConcurrentCommitException => throw e
-      case e: Throwable
+      case NonFatal(e)
           if currentVersion != (if (v == 0L) None else Some(v - 1L)) =>
         // the pointer moved past this attempt's basis while it was
         // writing: a concurrent winner committed, and its vacuum may
@@ -498,8 +510,29 @@ final class SnapshotStore(
         throw new ConcurrentCommitException(
           s"write of v$v in $root lost its attempt dir to a concurrent " +
             s"winner's vacuum (${e.getClass.getSimpleName}: ${e.getMessage}) " +
-            "— re-read the snapshot, re-fold, retry")
+            "— re-read the snapshot, re-fold, retry", e)
     }
+
+  /** Is `df` already range-partitioned on the key into exactly
+    * `filesPerCommit` partitions? Read from the frame's own physical
+    * plan (the AQE wrapper reports no partitioning, so its input plan
+    * is asked): [[merge]] folds inside such an exchange, and its
+    * output is then written as it is.
+    */
+  private def rangeClusteredOnKey(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    plan.outputPartitioning match {
+      case RangePartitioning(Seq(order), n) =>
+        n == filesPerCommit &&
+          plan.output.find(_.name == keyCol).exists(order.child.semanticEquals)
+      case _ => false
+    }
+  }
 
   private def writeDataFilesInner(df: DataFrame, v: Long): Seq[DataFileEntry] = {
     // attempt-unique directory: two optimistic writers racing to the
@@ -509,13 +542,18 @@ final class SnapshotStore(
     // about directory naming; a losing attempt's orphans are
     // reference-count-collected by the next successful vacuum.
     val dataDir = Paths.get(root, "data", s"v$v-${attemptToken()}")
-    // evaluate the fold lineage ONCE (r16): repartitionByRange's
-    // range-boundary sampling is its own pass over the input, so an
-    // unpersisted fold would run end-to-end twice (sample, then
-    // write). Staging the fold costs one materialization bounded by
-    // the affected slice (never the table — merge planning already
-    // restricted it) and is released before this method returns.
-    val staged = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // A frame that is already range-clustered on the key (the CDC
+    // merge folds inside its range exchange) is written as it is: one
+    // sample job, one exchange, and the stage that folds is the stage
+    // that writes. Any other frame (commit, optimize, purge, the
+    // generic mergeWith folds) is staged ONCE and then clustered:
+    // repartitionByRange's boundary sampling is its own pass over the
+    // input, so an unpersisted fold would run end-to-end twice
+    // (sample, then write). The stage is bounded by the affected
+    // slice and released before this method returns.
+    val staged =
+      if (rangeClusteredOnKey(df)) None
+      else Some(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // Per-file manifest stats (rows, key range, secondary Bloom)
     // are collected DURING the write via observe() + FileStatsAgg
     // (r17, verdict item 4): the old path ran a SECOND job that
@@ -540,7 +578,8 @@ final class SnapshotStore(
     }
     val obs = new org.apache.spark.sql.Observation(s"fstats-${attemptToken()}")
     try {
-      val clustered = staged.repartitionByRange(filesPerCommit, col(keyCol))
+      val clustered =
+        staged.fold(df)(_.repartitionByRange(filesPerCommit, col(keyCol)))
       val toWrite =
         if (!integralKey) clustered
         else {
@@ -557,7 +596,7 @@ final class SnapshotStore(
             .select(df.columns.map(col).toIndexedSeq: _*)
         }
       toWrite.write.mode("overwrite").parquet(dataDir.toString)
-    } finally staged.unpersist(blocking = false)
+    } finally staged.foreach(_.unpersist(blocking = false))
     val fromObserve: Option[Seq[DataFileEntry]] =
       if (!integralKey) None
       else {
@@ -589,6 +628,7 @@ final class SnapshotStore(
           DataFileEntry(path, rows, mn, mx, bloom)
         })
       }
+    lastStatsFallback = fromObserve.isEmpty
     fromObserve.getOrElse {
       // fallback stats job (pre-r17 path). Read back through df's OWN
       // schema: exact by construction (no footer-inference job), and
@@ -866,23 +906,55 @@ final class SnapshotStore(
   }
 
   /** The Kudu-role MERGE, file-level copy-on-write: fold a batch of
-    * parsed CDC change rows into the stored snapshot via the
-    * incremental compaction fold (compact(snapshot(A), B) ==
-    * snapshot(A ∪ B) for any log split). Only data files whose key
-    * range intersects a delta key are read, merged and rewritten;
-    * every other file CARRIES OVER into the new manifest by
+    * parsed CDC change rows into the stored snapshot. Only data files
+    * whose key range intersects a delta key are read, merged and
+    * rewritten; every other file CARRIES OVER into the new manifest by
     * reference — merge cost scales with the delta's key locality,
     * never with table size (the reference achieves the same
     * incrementality via per-record Kudu upserts
-    * [ref: KuduManager.scala:72-114]). Soft-delete decoration is
-    * recomputed for merged rows (delete_state derives from op_type;
-    * D rows' payloads are nulled) [ref: KuduManager.scala:74-80].
+    * [ref: KuduManager.scala:72-114]).
+    *
+    * The fold runs in UNION form inside the write's own exchange: the
+    * affected base rows (delete_state dropped) and the keyed delta are
+    * unioned, range-repartitioned ONCE on the key into
+    * `filesPerCommit` partitions, and snapshotted by
+    * [[CdcOps.softDeleteSnapshot]] — the kernel `init` uses, sound
+    * because compact(snapshot(A), B) == snapshot(A ∪ B) for any log
+    * split. The window's key clustering is satisfied by the range
+    * partitioning, so the fold adds no exchange, and
+    * [[writeDataFiles]] writes the frame as it is: no staging, no
+    * second range exchange, no join.
+    *
+    * Semantics equal [[CdcOps.softDeleteSnapshot]] over the whole log:
+    * per key the greatest (current_ts, id) wins, a null current_ts
+    * loses to any timestamp, and a delete keeps its D row with the
+    * payload nulled (delete_state derives from op_type)
+    * [ref: KuduManager.scala:74-80]. Tie rule: a delta row that ties
+    * a stored row on (current_ts, id) replaces it — the later batch
+    * wins, as in [[CdcOps.compactSnapshot]]; ties inside one batch
+    * keep one of the tied rows.
     */
   def merge(deltas: DataFrame): Long =
     mergeWith(deltas,
-      init = keyed => CdcOps.softDeleteSnapshot(keyed, col(keyCol)),
-      fold = (baseAffected, keyed) => CdcOps.decorateSoftDelete(
-        CdcOps.compactSnapshot(baseAffected.drop("delete_state"), keyed, keyCol)))
+      init = keyed => clusteredSnapshot(keyed),
+      fold = (baseAffected, keyed) => {
+        val base = baseAffected.drop("delete_state")
+        val cols = base.columns.toSeq.map(col)
+        clusteredSnapshot(
+          base.withColumn("_graft_later", lit(false))
+            .unionByName(keyed.select(cols: _*).withColumn("_graft_later", lit(true))),
+          tieBreak = Seq(col("_graft_later").desc))
+          .drop("_graft_later")
+      })
+
+  /** [[CdcOps.softDeleteSnapshot]] over ONE range exchange on the key
+    * into `filesPerCommit` partitions — the write's own clustering.
+    */
+  private def clusteredSnapshot(rows: DataFrame,
+                                tieBreak: Seq[Column] = Nil)
+      : DataFrame =
+    CdcOps.softDeleteSnapshot(rows.repartitionByRange(filesPerCommit, col(keyCol)),
+      col(keyCol), tieBreak)
 
   /** Hard delete (right-to-be-forgotten, r14): physically remove the
     * rows whose key appears in `keys`, file-level copy-on-write —
@@ -1269,9 +1341,11 @@ final class SnapshotStore(
     // double-count window this guard closes.)
     if (txn.exists(id => lastTxn.exists(_ >= id)))
       return currentVersion.getOrElse(-1L)
-    // NOTE: `deltas` is evaluated twice (key-set collection, then the
-    // fold) — callers with an expensive delta lineage should persist
-    // it first (the streaming sink does).
+    // NOTE: `deltas` is evaluated more than once (key-set collection,
+    // then the fold; a fold written from inside its range exchange,
+    // as merge's is, also feeds the range sample) — callers with an
+    // expensive delta lineage should persist it first (the streaming
+    // sink does).
     //
     // Null-key policy: a row whose key is null (or fails the long
     // cast — e.g. from_json on a malformed line nulls the field) has
@@ -1302,16 +1376,15 @@ final class SnapshotStore(
         // 2×files of them, and every segment lies either fully inside
         // or fully outside each file's range. A distributed pass maps
         // every delta key to its segment (per-partition binary
-        // search + local dedup), and only the DISTINCT HIT SEGMENTS
-        // come back to the driver: the collected summary is bounded
-        // by manifest size, never by delta cardinality, and the
-        // file-hit decision it yields is EXACT (a file is hit iff
-        // some hit segment starts within its range), not a
-        // conservative over-approximation.
+        // search + local dedup), and only each partition's HIT
+        // SEGMENTS come back to the driver: the collected summary is
+        // bounded by partitions × manifest size, never by delta
+        // cardinality, and the file-hit decision it yields is EXACT
+        // (a file is hit iff some hit segment starts within its
+        // range), not a conservative over-approximation.
         val bnd: Array[Long] =
           (all.map(_.minKey) ++ all.map(_.maxKey + 1L)).distinct.sorted.toArray
         val hitSegs: Array[Int] = hitSegments(keyed, bnd)
-        lastMergeSummaryRows = hitSegs.length.toLong
         if (hitSegs.isEmpty) return cur // empty fold: no version churn
         // segment j covers [bnd(j), bnd(j+1)); j = -1 (below all
         // files) and j = len-1 (above: the top boundary is
@@ -1356,14 +1429,15 @@ final class SnapshotStore(
   /** The distributed delta→segment pass shared by both merge paths:
     * map every delta key to its elementary segment (per-partition
     * binary search + local dedup) and return only the DISTINCT hit
-    * segments — driver traffic bounded by manifest size, never by
-    * delta cardinality.
+    * segments. One job, no shuffle: each partition sends its deduped
+    * segment ids and the driver takes the distinct, so driver traffic
+    * is bounded by partitions × segments, never by delta cardinality.
     */
   private def hitSegments(keyed: DataFrame, bnd: Array[Long]): Array[Int] = {
     val bndB = spark.sparkContext.broadcast(bnd)
     import keyed.sparkSession.implicits._
     try {
-      keyed.select(col(keyCol).cast("long")).as[Long]
+      val perPartition = keyed.select(col(keyCol).cast("long")).as[Long]
         .mapPartitions { it =>
           val b = bndB.value
           val seen = new java.util.HashSet[Integer]()
@@ -1377,7 +1451,9 @@ final class SnapshotStore(
             seen.add(lo - 1)
           }
           seen.iterator().asScala.map(_.intValue)
-        }.distinct().collect()
+        }.collect()
+      lastMergeSummaryRows = perPartition.length.toLong
+      perPartition.distinct
     } finally bndB.unpersist(blocking = false)
   }
 
@@ -1407,7 +1483,6 @@ final class SnapshotStore(
     val bnd: Array[Long] =
       (ranges.map(_._1) ++ ranges.map(_._2 + 1L)).distinct.sorted
     val hitSegs = hitSegments(keyed, bnd)
-    lastMergeSummaryRows = hitSegs.length.toLong
     if (hitSegs.isEmpty) return cur // empty fold: no version churn
     val hitStarts: Array[Long] = hitSegs
       .filter(j => j >= 0 && j < bnd.length - 1).map(bnd(_)).sorted
@@ -1691,8 +1766,8 @@ final class SnapshotStore(
   * built from — the caller's move is re-read + re-fold + retry (the
   * content is stale, not just the version number).
   */
-final class ConcurrentCommitException(msg: String)
-  extends RuntimeException(msg)
+final class ConcurrentCommitException(msg: String, cause: Throwable = null)
+  extends RuntimeException(msg, cause)
 
 object SnapshotStore {
   /** A dot-prefixed `_deletes` staging dir older than this belongs to

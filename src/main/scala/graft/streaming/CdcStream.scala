@@ -139,20 +139,21 @@ object CdcStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Incremental compaction (A16) through the table-format seam:
-        // only the DELTA is snapshotted (a window over the batch),
-        // then folded into the stored base via a keyed full-outer
-        // merge — compact(snapshot(A), B) == snapshot(A ∪ B), so
-        // semantics equal replaying the whole log while each batch's
-        // window shuffle is delta-sized; with a bucketed base the
-        // merge join needs no base-side exchange (plan-shape spec'd).
+        // Incremental compaction through the table-format seam: the
+        // batch is folded into the stored files its keys touch, as
+        // snapshot(affected base ∪ batch) inside the ONE range
+        // exchange that clusters the rewritten files —
+        // compact(snapshot(A), B) == snapshot(A ∪ B), so semantics
+        // equal replaying the whole log, and the fold adds no shuffle
+        // of its own (4 jobs per batch, plan-shape spec'd).
         // delete_state is recomputed after every merge; logical
         // deletes survive because the D record itself stays in the
         // snapshot [ref: KuduManager.scala:74-80].
         val store = new SnapshotStore(batch.sparkSession, snapshotDir, snapshotKey)
-        // persist: the copy-on-write merge evaluates the delta twice
-        // (key-set for file pruning, then the fold) — without a cache
-        // the source micro-batch would be re-scanned per pass
+        // persist: the copy-on-write merge reads the delta three times
+        // (key-set for file pruning, range sampling, the fold) —
+        // without a cache the source micro-batch would be re-scanned
+        // per pass
         val parsed = decode(batch).persist()
         try store.merge(parsed)
         finally parsed.unpersist()

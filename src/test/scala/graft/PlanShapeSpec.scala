@@ -259,6 +259,29 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("store CDC merge: ONE range exchange on the key over base ∪ delta, no join, no staging") {
+    // the copy-on-write merge folds inside the range exchange that
+    // clusters its output files: the written plan shuffles base ∪ delta
+    // once, with no hash exchange for a join and no cached fold
+    val store = new graft.store.SnapshotStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-plan").toString, "user_id")
+    val parsed = CdcOps.parse(ChangeModel.changeLines(Tables(spark, sf).events))
+    store.merge(parsed.filter(pmod(col("id"), lit(3)) =!= 0))
+    val (_, rec) = SparkEvents.record(spark)(
+      store.merge(parsed.filter(pmod(col("id"), lit(3)) === 0)))
+    val writes = rec.plans.filter(_.contains("InsertIntoHadoopFsRelationCommand"))
+    assert(writes.size == 1, s"expected one data-file write, got ${writes.size}")
+    // AQE prints the final plan, then the initial one: pin the final
+    val p = writes.head.split("== Initial Plan ==").head
+    val ranges = "Exchange rangepartitioning\\(user_id".r.findAllIn(p).length
+    assert(ranges == 1, s"expected 1 range exchange on the key, got $ranges:\n$p")
+    assert("Exchange ".r.findAllIn(p).length == 1, s"the fold must add no exchange:\n$p")
+    assert(!p.contains("hashpartitioning(b_user_id") && !p.contains("FullOuter"), p)
+    assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"),
+      s"the fold must not be staged:\n$p")
+    assert(p.contains("Union") && p.contains("Window"), p)
+  }
+
   test("TPC-H shapes: anti/semi joins broadcast, custdist pre-aggregates before the outer join") {
     // Q16: NOT IN decorrelates to a BROADCAST anti-join (excluded set
     // is tiny); no correlated per-row probe survives to the plan

@@ -1598,4 +1598,192 @@ class StoreSpec extends AnyFunSuite {
       case _ => ()
     }
   }
+
+  /** One parsed change record in [[CdcOps.parse]]'s column contract:
+    * (table, op_type, current_ts, id, user_id, event_type, value).
+    */
+  private type Change =
+    (String, String, Option[String], Long, Long, Option[String], Option[Double])
+
+  private def changeFrame(rows: Seq[Change]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("table", "op_type", "current_ts", "id", "user_id", "event_type", "value")
+  }
+
+  test("CDC merge in k slices equals the whole-log soft-delete snapshot (randomized)") {
+    // seed -> manifest kind: the TSV and parquet merge paths both fold
+    // through store.merge
+    Seq(11L -> 4096, 23L -> 2, 37L -> 4096).foreach { case (seed, parquetFrom) =>
+      val rng = new scala.util.Random(seed)
+      var nextId = 0L
+      def ts(): Option[String] =
+        // few distinct seconds, so (current_ts) ties are common and the
+        // id decides; one change in ten has no timestamp at all
+        if (rng.nextInt(10) == 0) None
+        else Some(f"2024-01-01 00:00:${rng.nextInt(6)}%02d")
+      def change(op: String, key: Long, at: Option[String] = ts()): Change = {
+        nextId += 1
+        ("db.events", op, at, nextId, key,
+          Some(s"e${rng.nextInt(3)}"), Some(rng.nextInt(1000).toDouble))
+      }
+      def randomOp(): String = Seq("I", "U", "U", "D")(rng.nextInt(4))
+      val k = 2 + rng.nextInt(3)
+      // slice 0 seeds keys [1000, 1100); later slices reach below and
+      // above every file's range, and a D of key 1000 is followed by a
+      // later U of it
+      val first = (0 until 300).map(_ => change(randomOp(), 1000L + rng.nextInt(100))) :+
+        change("D", 1000L, Some("2024-01-01 00:00:08"))
+      val later = (1 until k).map { s =>
+        val fresh = (0 until 150).map(_ => change(randomOp(), 900L + rng.nextInt(300)))
+        val revive =
+          if (s == 1) Seq(change("U", 1000L, Some("2024-01-01 00:00:09"))) else Nil
+        fresh ++ revive
+      }
+      // exact replays (same record, same (current_ts, id)) inside a
+      // slice and across slices
+      val withReplays = (first +: later).zipWithIndex.map { case (slice, i) =>
+        val earlier = ((first +: later).take(i + 1)).flatten
+        slice ++ Seq.fill(10)(earlier(rng.nextInt(earlier.size)))
+      }
+      // an all-new-key delta: keys below and above everything stored
+      val allNew = (1L to 5L).map(key => change("I", key)) ++
+        (5000L to 5004L).map(key => change(randomOp(), key))
+      val slices = withReplays :+ allNew
+      val store = new SnapshotStore(spark, newRoot(), "user_id",
+        parquetManifestFrom = parquetFrom)
+      slices.indices.foreach { i =>
+        store.merge(changeFrame(slices(i)))
+        val log = changeFrame(slices.take(i + 1).flatten)
+        withClue(s"seed $seed, after slice $i of ${slices.size}: ") {
+          assertSameRows(store.read().get,
+            CdcOps.softDeleteSnapshot(log, col("user_id")))
+        }
+        if (i == 0)
+          assert(store.readRange(1000L, 1000L).head().getAs[String]("delete_state") == "1")
+      }
+      val revived = store.readRange(1000L, 1000L).collect()
+      assert(revived.length == 1 &&
+        revived.head.getAs[String]("delete_state") == "0",
+        s"seed $seed: a U after a D must revive the key")
+      if (parquetFrom == 2)
+        assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
+          s"${store.root}/_manifests/m${store.currentVersion.get}.parquet")),
+          "the parquet seed must fold through the parquet manifest path")
+    }
+  }
+
+  test("CDC merge tie rule: exact replays collapse, and a tied later batch wins") {
+    val store = new SnapshotStore(spark, newRoot(), "user_id")
+    val at = Some("2024-01-01 00:00:01")
+    val a: Change = ("db.events", "I", at, 7L, 1L, Some("e0"), Some(1.0))
+    val other: Change = ("db.events", "I", at, 8L, 2L, Some("e1"), Some(5.0))
+    // a replay inside one batch keeps one row
+    store.merge(changeFrame(Seq(a, a, other)))
+    assert(store.read().get.count() == 2L)
+    // an exact replay in a later batch changes nothing
+    store.merge(changeFrame(Seq(a)))
+    assertSameRows(store.read().get,
+      CdcOps.softDeleteSnapshot(changeFrame(Seq(a, a, other, a)), col("user_id")))
+    // a different record under the same (current_ts, id): the later
+    // batch wins the tie, as compactSnapshot's rule has it
+    store.merge(changeFrame(Seq(a.copy(_7 = Some(2.0)))))
+    assert(store.readRange(1L, 1L).head().getAs[Double]("value") == 2.0)
+    store.merge(changeFrame(Seq(a.copy(_2 = "D"))))
+    val deleted = store.readRange(1L, 1L).head()
+    assert(deleted.getAs[String]("delete_state") == "1" && deleted.isNullAt(
+      deleted.fieldIndex("value")))
+    assertSameRows(store.readRange(2L, 2L),
+      CdcOps.softDeleteSnapshot(changeFrame(Seq(other)), col("user_id")))
+  }
+
+  test("CDC merges stay on the observed stats path on both manifest formats") {
+    import spark.implicits._
+    Seq(4096, 2).foreach { parquetFrom =>
+      val store = new SnapshotStore(spark, newRoot(), "user_id",
+        filesPerCommit = 8, parquetManifestFrom = parquetFrom)
+      def check(what: String): Unit = {
+        assert(!store.lastStatsFallback, s"$what fell back to the stats job")
+        store.manifest(store.currentVersion.get).foreach { e =>
+          val r = spark.read.parquet(e.path)
+            .agg(count(lit(1)), min(col("user_id")), max(col("user_id"))).head()
+          assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((e.rows, e.minKey, e.maxKey)),
+            s"$what: manifest stats disagree with ${e.path}")
+        }
+      }
+      val log = parsedLog
+      // fewer distinct keys than filesPerCommit: some range partitions
+      // stay empty, on the first commit and on an all-new-key merge
+      store.merge(log.filter(col("user_id") === log.agg(min(col("user_id"))).as[Long].head()))
+      check("a one-key first commit")
+      store.merge(log)
+      check("a full-log merge")
+      store.merge(log.filter(pmod(col("id"), lit(7)) === 0)
+        .withColumn("current_ts", lit("2099-01-01 00:00:00.000000")))
+      check("a rewriting merge")
+      store.merge(log.limit(2).withColumn("user_id", col("user_id") + 1000000L))
+      check("a two-key all-new merge")
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
+        s"${store.root}/_manifests/m${store.currentVersion.get}.parquet")) == (parquetFrom == 2))
+    }
+  }
+
+  test("a TSV-manifest copy-on-write CDC merge runs at most 4 Spark jobs") {
+    val store = new SnapshotStore(spark, newRoot(), "user_id")
+    val log = parsedLog
+    store.merge(log.filter(pmod(col("id"), lit(3)) =!= 0))
+    // a micro-batch as the streaming sink hands it over: spread over
+    // the source's partitions and persisted. (When one input partition
+    // holds most of base ∪ delta, Spark's range sampling re-samples it:
+    // one more job.)
+    val delta = log.filter(pmod(col("id"), lit(3)) === 0).repartition(4).persist()
+    try {
+      delta.count()
+      val (_, rec) = SparkEvents.record(spark)(store.merge(delta))
+      // planning pass, range sample, range exchange, write
+      assert(rec.jobs.size <= 4, s"the merge ran ${rec.jobs.size} jobs: ${rec.jobs}")
+    } finally delta.unpersist()
+    assertSameRows(store.read().get, CdcOps.softDeleteSnapshot(log, col("user_id")))
+  }
+
+  test("a fatal error during a merge's write surfaces as itself, not as a retryable conflict") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+    // planning any frame that carries a `_fault` column throws `fault`:
+    // an error raised inside the store's write, on the driver
+    @volatile var fault: Throwable = null
+    object FailPlanning extends SparkStrategy {
+      def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+        case p: Project if p.projectList.exists(_.name == "_fault") => throw fault
+        case _ => Nil
+      }
+    }
+    def attempt(e: Throwable): Throwable = {
+      val root = newRoot()
+      val store = new SnapshotStore(spark, root, "k")
+      store.commit(Seq((1L, 1L), (2L, 2L)).toDF("k", "v"))
+      fault = e
+      // a concurrent writer wins while this merge folds, so the
+      // pointer has moved past the attempt's basis when its write fails
+      val fold = (_: DataFrame, d: DataFrame) => {
+        new SnapshotStore(spark, root, "k").commit(Seq((3L, 3L)).toDF("k", "v"))
+        d.withColumn("_fault", lit(1))
+      }
+      intercept[Throwable](store.mergeWith(
+        spark.range(1L, 2L).select(col("id").as("k"), lit(9L).as("v")),
+        identity[DataFrame], fold))
+    }
+    spark.experimental.extraStrategies = Seq(FailPlanning)
+    try {
+      val oom = new OutOfMemoryError("injected")
+      assert(attempt(oom) eq oom, "a fatal error must not be relabelled retryable")
+      val io = new java.io.IOException("injected")
+      attempt(io) match {
+        case c: graft.store.ConcurrentCommitException =>
+          assert(c.getCause eq io, "the retryable conflict must chain its cause")
+        case other => fail(s"a non-fatal write error under a moved pointer must be " +
+          s"a retryable conflict, got $other")
+      }
+    } finally spark.experimental.extraStrategies = Nil
+  }
 }
