@@ -1,8 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
-/** Driver-run benchmark: one JSON line with per-query wall times.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+
+/** Driver-run benchmark: per-query wall times as JSON — a full stdout
+  * line, a compact summary line, and a written file that adds each
+  * query's job/stage/task/GC profile.
   *
   * A warmup pass (smallest SF) runs first so JVM/JIT/codegen/AQE
   * startup cost isn't billed to whichever query happens to run
@@ -12,22 +18,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // see GraftSession: the inferred size(generator)>0 filter
-      // re-runs expensive generator-child kernels below the spread
-      // exchange; excluding the rule is result-neutral and
-      // scale-independent (r16, measured + plan-verified)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt, "graft-bench")
+    // one listener for the whole run: each timed sample runs under its
+    // own job group, and the reported sample's counts land in the
+    // written file's "profile" (read after spark.stop() drains the bus)
+    val profile = new JobGroupProfile
+    spark.sparkContext.addSparkListener(profile)
     // Bench-only log hygiene (VERDICT r13 item 7): the suite's
     // domain-bounded windows (daily grids, octave bins, one-row
     // moments — all PlanShape-allowlisted) emit hundreds of benign
@@ -74,7 +70,7 @@ object Bench {
     benched.foreach { case (_, fn) =>
       try fn(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     // two timed iterations, report the min — strips residual JIT/GC
@@ -83,7 +79,9 @@ object Bench {
     // posting lists) pay for it every time: timings are cold-cache
     // end-to-end, never a warm re-read.
     // a crashing query must NOT be reported as a fast success: track
-    // failure and emit a -1 sentinel + error list in the JSON
+    // failure and emit a -1 sentinel + error list in the JSON; a
+    // fatal error (OOM, linkage) is not a query failure and ends the
+    // run instead of booking -1 on a poisoned JVM
     // the action is a noop-sink WRITE, not count(): count() lets
     // Catalyst prune every column the count doesn't need — measured
     // 2-8x under-billing on projection-heavy queries (q_cdc_parse's
@@ -91,8 +89,9 @@ object Bench {
     // dropped). The noop sink materializes every output column of
     // the exact plan the correctness gate checks, the same work the
     // DuckDB baseline's fetchall() pays — honest on both sides.
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+    var samples = 0
+    def timeOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame): Sample = {
       spark.catalog.clearCache()
       // clearCache() only drops the SQL cache — localCheckpoint()ed
       // generation RDDs from iterative operators (connected
@@ -113,11 +112,16 @@ object Bench {
       // Purge them (outside the timer) so BOTH timed samples of every
       // query derive from the parquet inputs.
       graft.sources.DerivedTable.purgeLanded(spark)
+      samples += 1
+      val group = s"bench-$samples-$name"
+      spark.sparkContext.setJobGroup(group, name)
+      val gc0 = gcMillis()
       val t0 = System.nanoTime()
       val ok = try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true
-      } catch { case _: Throwable => false }
-      ((System.nanoTime() - t0) / 1e9, ok)
+      } catch { case NonFatal(_) => false }
+      finally spark.sparkContext.clearJobGroup()
+      Sample((System.nanoTime() - t0) / 1e9, ok, group, gcMillis() - gc0)
     }
     // ALWAYS min-of-2: transient host contention (observed 2-12x
     // inflation on single runs) is the dominant noise source, and a
@@ -151,39 +155,13 @@ object Bench {
         """"([A-Za-z0-9_]+)":(-?[0-9.]+)""".r.findAllMatchIn(qs)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case NonFatal(_) => Map.empty }
 
-    // SUITE-ORDER INTERFERENCE instrumentation (r15 verdict task 2):
-    // per-query JVM/session metrics appended to bench_probe.jsonl when
-    // SPARK_GRAFT_PROBE is set, so an inflated in-suite reading can be
-    // correlated against GC time, heap occupancy and accumulated
-    // session state instead of guessed at. Dev-only; the driver never
-    // sets it.
-    val probe = sys.env.contains("SPARK_GRAFT_PROBE")
-    def gcMillis(): Long = {
-      var s = 0L
-      val it = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.iterator()
-      while (it.hasNext) s += math.max(0L, it.next().getCollectionTime)
-      s
-    }
-    def heapUsedMb(): Long =
-      (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) >> 20
-    val probeOut = new StringBuilder
-    // GC cadence knob for the same investigation: the post-suite
-    // re-triage pass (which historically reads 3-13x FASTER than the
-    // in-suite numbers for the same queries in the same JVM) differs
-    // from the in-suite path in exactly one respect — it runs
-    // System.gc() immediately before timing, while the suite collects
-    // only every N queries. Sweeping N isolates how much of the
-    // in-suite floor is uncollected-garbage pressure.
-    val gcEvery = sys.env.get("SPARK_GRAFT_GC_EVERY").map(_.toInt).getOrElse(25)
-    var sinceGc = 0
     // every query whose transient-stall guard FIRED is re-triaged
     // post-suite (ADVICE r10: a fired guard biases its reading toward
     // history even when the third run recovers — so no in-suite
     // number for a guard-fired query is committed as-is)
-    val guardFired = scala.collection.mutable.ArrayBuffer.empty[String]
+    val guardFired = mutable.ArrayBuffer.empty[String]
     // DECORRELATED min-of-2 (r15 verdict task 2, closed r16): the two
     // timed iterations used to run back-to-back, so a multi-second
     // host transient (co-tenant load in the driver's window — the
@@ -200,57 +178,45 @@ object Bench {
     // the rare backstop instead of a per-window tax. Same total work,
     // same cold-cache discipline per sample (timeOnce clears
     // SQL cache + persistent RDDs every call).
+    var sinceGc = 0
     def gcTick(): Unit = {
-      // periodic full GC: compact the old gen every `gcEvery` queries
+      // periodic full GC: compact the old gen every GcEvery queries
       // so heap fragmentation from earlier queries isn't billed to
       // later ones (~8 pauses per pass, outside any timer)
       sinceGc += 1
-      if (sinceGc >= gcEvery) { System.gc(); sinceGc = 0 }
+      if (sinceGc >= GcEvery) { System.gc(); sinceGc = 0 }
     }
-    val pass1: Map[String, (Double, Boolean, Long)] =
-      benched.map { case (name, fn) =>
-        gcTick()
-        val gc0 = if (probe) gcMillis() else 0L
-        val (t1, ok1) = timeOnce(fn)
-        name -> (t1, ok1, if (probe) gcMillis() - gc0 else 0L)
-      }.toMap
-    val insuite = benched.map { case (name, fn) =>
-      val (t1, ok1, gcP1) = pass1(name)
-      if (!ok1) name -> (-1.0)
+    val pass1: Map[String, Sample] =
+      benched.map { case (name, fn) => gcTick(); name -> timeOnce(name, fn) }.toMap
+    val insuite: Seq[(String, Sample)] = benched.map { case (name, fn) =>
+      val s1 = pass1(name)
+      if (!s1.ok) name -> s1
       else {
         gcTick()
-        val gc0 = if (probe) gcMillis() else 0L
-        val (t2, ok2) = timeOnce(fn)
-        if (probe) {
-          probeOut.append(f"""{"q":"$name","t1":$t1%.3f,"t2":$t2%.3f""" +
-            s""","gc_ms":${gcP1 + (gcMillis() - gc0)},"heap_mb":${heapUsedMb()}}""" + "\n")
-        }
-        if (!ok2) name -> (-1.0)
-        else {
-          val best = math.min(t1, t2)
-          // transient-stall guard: one loaded host window can inflate
-          // BOTH iterations of an adjacent query block (r9:
-          // q_bootstrap_ci billed 11.5s vs 1.8s quiet; r10: six
-          // readings 3-6x their standalone cost from in-suite memory
-          // pressure). Any reading whose min-of-2 exceeds 2x the
-          // previous committed number is marked for the POST-SUITE
-          // re-triage pass below — the suite keeps moving, and the
-          // committed artifact never carries an unverified outlier.
-          // 2.5x (ADVICE r14): the r13 2.0x trigger sat exactly ON
-          // the documented 2x window-to-window host-variance band
-          // for 1-2s readings, so clean readings fired the re-triage
-          // pass and inflated suite wall time (r14: 13 retriage rows,
-          // most of which re-measured at their committed level).
-          // 2.5x sits above the noise band while still well under
-          // the 3-6x genuine suite-drift signatures the guard was
-          // built for (r13 quartet: +80-160% compounded over TWO
-          // rounds — a one-round 2.5x trigger still catches that
-          // before it compounds). The >1s absolute floor still keeps
-          // milliseconds-scale jitter from triggering re-runs.
-          val prev = prevReadings.getOrElse(name, -1.0)
-          if (prev > 0 && best > 2.5 * prev && best > 1.0) guardFired += name
-          name -> best
-        }
+        val best = Sample.best(s1, timeOnce(name, fn))
+        // transient-stall guard: one loaded host window can inflate
+        // BOTH iterations of an adjacent query block (r9:
+        // q_bootstrap_ci billed 11.5s vs 1.8s quiet; r10: six
+        // readings 3-6x their standalone cost from in-suite memory
+        // pressure). Any reading whose min-of-2 exceeds 2x the
+        // previous committed number is marked for the POST-SUITE
+        // re-triage pass below — the suite keeps moving, and the
+        // committed artifact never carries an unverified outlier.
+        // 2.5x (ADVICE r14): the r13 2.0x trigger sat exactly ON
+        // the documented 2x window-to-window host-variance band
+        // for 1-2s readings, so clean readings fired the re-triage
+        // pass and inflated suite wall time (r14: 13 retriage rows,
+        // most of which re-measured at their committed level).
+        // 2.5x sits above the noise band while still well under
+        // the 3-6x genuine suite-drift signatures the guard was
+        // built for (r13 quartet: +80-160% compounded over TWO
+        // rounds — a one-round 2.5x trigger still catches that
+        // before it compounds). The >1s absolute floor still keeps
+        // milliseconds-scale jitter from triggering re-runs.
+        val prev = prevReadings.getOrElse(name, -1.0)
+        if (best.ok && prev > 0 && best.sec > 2.5 * prev && best.sec > 1.0)
+          guardFired += name
+        name -> best
       }
     }
     // post-suite self-re-triage: re-measure every guard-fired query
@@ -263,54 +229,26 @@ object Bench {
     // only if even the re-triage stays >3x its previous committed
     // reading — that is a genuine regression signal, not suite noise.
     val byName = benched.toMap
-    val retriaged: Map[String, (Double, Double)] = guardFired.toSeq.map { name =>
+    val insuiteByName = insuite.toMap
+    val retriaged: Map[String, (Sample, Sample)] = guardFired.toSeq.map { name =>
       System.gc()
       val fn = byName(name)
-      val (a, okA) = timeOnce(fn)
-      val (b, okB) = timeOnce(fn)
-      val stand = if (okA && okB) math.min(a, b) else -1.0
-      name -> (insuite.toMap.getOrElse(name, -1.0), stand)
+      val a = timeOnce(name, fn)
+      val b = timeOnce(name, fn)
+      name -> (insuiteByName(name), Sample.best(a, b))
     }.toMap
-    val outliers = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = insuite.map { case (name, v) =>
+    val outliers = mutable.ArrayBuffer.empty[String]
+    val results: Seq[(String, Sample)] = insuite.map { case (name, s) =>
       retriaged.get(name) match {
-        case Some((ins, stand)) if stand >= 0 =>
-          val best = math.min(ins, stand)
+        case Some((ins, stand)) if stand.ok =>
+          val best = Sample.best(ins, stand)
           val prev = prevReadings.getOrElse(name, -1.0)
-          if (prev > 0 && best > 3.0 * prev && best > 1.0) outliers += name
+          if (prev > 0 && best.sec > 3.0 * prev && best.sec > 1.0) outliers += name
           name -> best
-        case Some(_) => outliers += name; name -> v
-        case None => name -> v
+        case Some(_) => outliers += name; name -> s
+        case None => name -> s
       }
     }
-    // The one-line stdout JSON carries the FULL per-query map (r17,
-    // verdict item 1): the driver's per-query round-over-round and
-    // scaling comparison was BLIND for two rounds (PERF n_common=0,
-    // empty scaling.per_query) because this line printed
-    // "queries":{} on the theory that the driver's bounded stdout
-    // tail could not fit it — a theory the driver's own captured
-    // tail disproves (BENCH_r16's tail is far longer than this
-    // line). bench.json remains the committed copy. (sbt's
-    // LoggedOutput "[info] " prefix issue stays fixed via
-    // run/outputStrategy := StdoutOutput in build.sbt.)
-    def ms(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val errors = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val errJson = errors.mkString("[", ",", "]")
-    val outJson = outliers.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // guard-fired queries commit BOTH readings (ADVICE r10): the
-    // re-triaged standalone number is what "queries" carries, the
-    // in-suite one stays visible here for context-effect triage
-    val retrJson = retriaged.toSeq.sortBy(_._1).map { case (k, (ins, st)) =>
-      "\"" + k + "\":{\"insuite\":" + ms(ins) + ",\"standalone\":" + ms(st) + "}"
-    }.mkString("{", ",", "}")
-    def mkJson(entries: Seq[(String, Double)]): String = {
-      val qs = entries.map { case (k, v) => "\"" + k + "\":" + ms(v) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"queries_full":"bench.json","errors":$errJson,"outliers":$outJson,"retriaged":$retrJson,"n_queries":${results.size},"sf":"$sfDir"}"""
-    }
-    val fullJson = mkJson(results.toSeq)
-    println(fullJson)
     // the complete map also goes to a committed file — the durable
     // copy. ONLY a full-suite run at the canonical benchmark SF AND
     // the canonical core count may write bench.json: filtered triage
@@ -319,15 +257,92 @@ object Bench {
     // the driver's 8-core scaling pass used to clobber the committed
     // 32-core table and poison the stall guard's prevReadings with
     // 8-core numbers) write bench_filtered.json (untracked) instead.
-    try {
-      val out = java.nio.file.Paths.get(
-        if (canonicalRun) "bench.json" else "bench_filtered.json")
-      java.nio.file.Files.write(out, (fullJson + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
-    if (probe) try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_probe.jsonl"),
-      probeOut.toString.getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    val outFile = if (canonicalRun) "bench.json" else "bench_filtered.json"
+    def ms(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    val errors = results.collect { case (k, s) if !s.ok => "\"" + k + "\"" }
+    val total = results.collect { case (_, s) if s.ok => s.sec }.sum
+    val errJson = errors.mkString("[", ",", "]")
+    val outJson = outliers.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // guard-fired queries commit BOTH readings (ADVICE r10): the
+    // re-triaged standalone number is what "queries" carries, the
+    // in-suite one stays visible here for context-effect triage
+    val retrJson = retriaged.toSeq.sortBy(_._1).map { case (k, (ins, st)) =>
+      "\"" + k + "\":{\"insuite\":" + ms(ins.reading) + ",\"standalone\":" + ms(st.reading) + "}"
+    }.mkString("{", ",", "}")
+    val qsJson = results.map { case (k, s) => "\"" + k + "\":" + ms(s.reading) }
+      .mkString("{", ",", "}")
+    def mkJson(queries: String, rest: String): String =
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$queries,"queries_full":"$outFile","errors":$errJson,"outliers":$outJson$rest}"""
+    val fullRest = s""","retriaged":$retrJson,"n_queries":${results.size},"sf":"$sfDir""""
+    // Two stdout lines. The first carries the FULL per-query map, for
+    // per-query comparison across runs. At 281 queries it is ~6.5 KB,
+    // longer than a bounded stdout tail keeps (BENCH_r17's tail starts
+    // mid-map), so the LAST line is a compact summary that always fits:
+    // the total, counts and error/outlier lists with an empty map.
+    // The written file is the complete copy, profile included.
+    println(mkJson(qsJson, fullRest))
+    println(mkJson("{}", s""","n_queries":${results.size}"""))
     spark.stop()
+    // per-query profile of the sample whose wall "queries" reports:
+    // Spark jobs, completed stages and finished tasks of its job
+    // group, and the JVM's GC time inside its timer. spark.stop()
+    // drained the listener bus, so the counts are final.
+    val profJson = results.map { case (k, s) =>
+      val c = profile.counts(s.group)
+      "\"" + k + "\":{\"jobs\":" + c(0) + ",\"stages\":" + c(1) + ",\"tasks\":" +
+        c(2) + ",\"gc_ms\":" + s.gcMs + "}"
+    }.mkString("{", ",", "}")
+    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
+      (mkJson(qsJson, fullRest + s""","profile":$profJson""") + "\n").getBytes("UTF-8"))
+    catch { case NonFatal(_) => () }
+  }
+
+  /** Full GCs between timed queries: one every this many samples. */
+  private val GcEvery = 25
+
+  private def gcMillis(): Long = {
+    var s = 0L
+    val it = java.lang.management.ManagementFactory
+      .getGarbageCollectorMXBeans.iterator()
+    while (it.hasNext) s += math.max(0L, it.next().getCollectionTime)
+    s
+  }
+
+  /** One timed run of a query: wall seconds, success, the job group
+    * its Spark jobs ran under, and JVM GC milliseconds inside the timer. */
+  private final case class Sample(sec: Double, ok: Boolean, group: String, gcMs: Long) {
+    def reading: Double = if (ok) sec else -1.0
+  }
+  private object Sample {
+    /** The sample a min-of-2 reports: a failure wins (the query books
+      * -1), otherwise the faster run. */
+    def best(a: Sample, b: Sample): Sample =
+      if (!a.ok) a else if (!b.ok) b else if (b.sec < a.sec) b else a
+  }
+
+  /** Counts jobs, completed stages and finished tasks per job group.
+    * Stages are attributed through the group their submitting job
+    * carried, and tasks through their stage. Events arrive on the
+    * listener bus's one thread, and [[counts]] is read only after
+    * `spark.stop()` has joined that thread, so the maps need no lock. */
+  private final class JobGroupProfile extends SparkListener {
+    private val stageGroup = mutable.HashMap.empty[Int, String]
+    private val byGroup = mutable.HashMap.empty[String, Array[Long]]
+    private def bump(group: Option[String], i: Int): Unit =
+      group.foreach(g => byGroup.getOrElseUpdate(g, new Array[Long](3))(i) += 1)
+    private def groupOf(props: java.util.Properties): Option[String] =
+      Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+
+    /** (jobs, stages, tasks) of one group; zeros for a group that ran none. */
+    def counts(group: String): Array[Long] = byGroup.getOrElse(group, new Array[Long](3))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      bump(groupOf(e.properties), 0)
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      groupOf(e.properties).foreach(stageGroup.put(e.stageInfo.stageId, _))
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      bump(stageGroup.get(e.stageInfo.stageId), 1)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      bump(stageGroup.get(e.stageId), 2)
   }
 }

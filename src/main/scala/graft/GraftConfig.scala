@@ -111,21 +111,13 @@ object GraftConfig {
     env.get("GRAFT_CONF").filter(f => Files.exists(Paths.get(f)))
       .map(load).getOrElse(GraftConfig())
 
-  /** A session shaped by the config (parallelism knobs only — the
-    * rest of the config feeds the stream drivers and stores).
+  /** A [[GraftSession]] shaped by the config (parallelism knobs only —
+    * the rest of the config feeds the stream drivers and stores). The
+    * shuffle width is a runtime SQL conf, set on the returned session.
     */
   def session(cfg: GraftConfig, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[${cfg.sessionCores}]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cfg.shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cfg.sessionCores, appName)
+    spark.conf.set("spark.sql.shuffle.partitions", cfg.shufflePartitions.toString)
     spark
   }
 }

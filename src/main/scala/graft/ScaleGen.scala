@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-side scale-up generator (r15 verdict task 7): replicate the
@@ -25,13 +25,7 @@ object ScaleGen {
     val k = fStr.toInt
     require(k >= 1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt, "graft-scalegen")
     val t = graft.sources.Tables(spark, src)
 
     def stride(df: DataFrame, key: String): Long =

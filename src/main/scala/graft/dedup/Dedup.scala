@@ -740,7 +740,6 @@ object Dedup {
           "connected components did not converge in 64 star rounds — " +
             "O(log n) bounds this at well beyond any real graph; the " +
             "edge frame is non-deterministic across evaluations")
-      val tR0 = System.nanoTime()
       // LAZY checkpoint (r17, verdict item 5): the convergence stats
       // aggregate is the round's first action, so one job both
       // computes the round's edges (persisting the blocks — local
@@ -753,8 +752,6 @@ object Dedup {
       prev = cur
       cur = stats(edges)
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] round $rounds%d edges=${cur._1}%d ${(System.nanoTime()-tR0)/1e9}%.2f s")
     }
     lastCcRounds = rounds
     // at the fixpoint every non-root node appears exactly once as u

@@ -41,12 +41,6 @@ object DerivedTable {
       root => Tables.loadCached(spark, root))
   }
 
-  /** Format-generic twin of [[readOrBuild]]: same fingerprint-keyed
-    * atomic landing, but the caller supplies the writer and reader —
-    * the seam the CSV/JSON/ORC interchange round-trips land through
-    * (their on-disk bytes ARE the thing under test, so the landing
-    * format must be the interchange format, not parquet).
-    */
   /** The canonical landed-artifact root for a (family, corpus,
     * params) triple — ONE place owns the tmpdir + hex(fingerprint)
     * layout, so every landing (parquet, interchange formats, the
@@ -58,6 +52,12 @@ object DerivedTable {
       sys.props("java.io.tmpdir"), s"graft-$family",
       java.lang.Long.toHexString(fingerprint(dir, sources, params))).toString
 
+  /** Format-generic twin of [[readOrBuild]]: same fingerprint-keyed
+    * atomic landing, but the caller supplies the writer and reader —
+    * the seam the CSV/JSON/ORC interchange round-trips land through
+    * (their on-disk bytes ARE the thing under test, so the landing
+    * format must be the interchange format, not parquet).
+    */
   def readOrBuildAs(spark: SparkSession, family: String, dir: String,
                     sources: Seq[String], params: String)
                    (write: String => Unit)

@@ -50,8 +50,7 @@ object ExplainDump {
     "q_key_skew", "q_join_size_est", "q_lateness_audit",
     "q_robust_stats", "q_equidepth_bins", "q_robust_anomaly",
     "q_communities", "q_export_shards", "q_session_features",
-    "q_min_cost", "q_hll_distinct", "q_quantile_tdigest",
-    "q_text_langid", "q_revenue_share", "q_bootstrap_ci",
+    "q_quantile_tdigest", "q_text_langid", "q_bootstrap_ci",
     "q_negative_sample", "q_bm25",
     "q_lm_backoff", "q_span_mask", "q_ngram_coverage",
     "q_quality_confusion", "q_pack_eval", "q_tokenizer_fertility",
@@ -60,7 +59,7 @@ object ExplainDump {
     "q_csv_roundtrip", "q_orc_roundtrip", "q_store_timetravel",
     "q_store_changes", "q_cdc_route", "q_partitioned_scan",
     "q_bucketed_join", "q_typed_agg", "q_sql_surface",
-    "q_quantile_sketch", "q_dedup_edit", "q_substring_excise",
+    "q_dedup_edit", "q_substring_excise",
     // round-9 additions
     "q_lm_score",
     // round-10 additions

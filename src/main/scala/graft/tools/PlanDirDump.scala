@@ -1,6 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Dev-only (r16): dump `explain("formatted")` of named queries, one
   * file per query, into a directory — the plans/r16 before/after
@@ -15,7 +16,6 @@ object PlanDirDump {
     val names = args(2).split(',').toSeq
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession.local(32, "plan-dir-dump")
-    spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {
@@ -25,7 +25,7 @@ object PlanDirDump {
         Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)
         println(s"[plandump] wrote $name")
       } catch {
-        case e: Throwable => println(s"[plandump] $name FAILED: ${e.getMessage}")
+        case NonFatal(e) => println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
     }
     spark.stop()

@@ -1,6 +1,7 @@
 package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming-drive wall-time tracker (r10 verdict task 5): the 20
@@ -22,7 +23,6 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = graft.GraftSession.local(32, "stream-bench")
-    spark.sparkContext.setLogLevel("WARN")
     val inputRows = new AtomicLong(0)
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -41,7 +41,7 @@ object StreamBench {
         try {
           val df = graft.SparkEntry.queries(name)(spark, sfDir)
           (df.count(), true)
-        } catch { case _: Throwable => (-1L, false) }
+        } catch { case NonFatal(_) => (-1L, false) }
       val wall = (System.nanoTime() - t0) / 1e9
       // drain the async listener bus before reading the counter
       Thread.sleep(300)

@@ -19,7 +19,6 @@ object StressGen {
     val out = if (args.length > 1) args(1) else "/tmp/stress5"
     val factor = if (args.length > 2) args(2).toInt else 5
     val spark = graft.GraftSession.local(32, "stress-gen")
-    spark.sparkContext.setLogLevel("WARN")
     val Off = 100000000L
 
     def rep(df: DataFrame, keyCols: Seq[String]): DataFrame =

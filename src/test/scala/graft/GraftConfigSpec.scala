@@ -45,6 +45,16 @@ class GraftConfigSpec extends AnyFunSuite {
     assert(GraftConfig.load(f) === cfg)
   }
 
+  test("session() is GraftSession's configuration at the configured shuffle width") {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    val s = GraftConfig.session(GraftConfig(sessionCores = 4, shufflePartitions = 7))
+    try {
+      assert(s.conf.get("spark.sql.shuffle.partitions") === "7")
+      assert(s.conf.get("spark.sql.optimizer.excludedRules")
+        .contains("InferFiltersFromGenerate"))
+    } finally s.conf.set("spark.sql.shuffle.partitions", before)
+  }
+
   test("kafka.* passes through verbatim; kafka.broker/topic stay typed") {
     val p = new java.util.Properties()
     p.setProperty("kafka.broker", "hostA:9092")
