@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 import graft.cdc.{CdcOps, ChangeModel}
-import graft.sources.Tables
+import graft.sources.{DerivedTable, Tables}
 import graft.streaming.{CdcStream, RateListener}
 
 /** Runnable streaming ingest demo — the ConsumerMain of this engine
@@ -19,7 +19,7 @@ object StreamDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = GraftSession.local(cores = 4, appName = "graft-stream-demo")
 
-    val work = Files.createTempDirectory("graft-demo")
+    val work = Paths.get(DerivedTable.scratch("graft-demo"))
     val linesDir = work.resolve("lines"); Files.createDirectories(linesDir)
     val snapDir = work.resolve("snapshot")
     val ckptDir = work.resolve("checkpoint")

@@ -769,71 +769,46 @@ object Dedup {
     (labels.unionAll(singletons), () => ())
   }
 
-  private val clusterTableLock = new Object
-
   /** C19/C36 shared lineage: the PERSISTED cluster map. Real curation
     * pipelines run connected components once and persist the
     * (id, cluster_id) table; every downstream report (keep/drop
     * decisions, size distributions, canonical picks) reads that
-    * table instead of re-running CC. This materializes the
-    * trigram-Jaccard dup-cluster map through [[graft.store.SnapshotStore]]
-    * keyed by a fingerprint of the corpus files (path/size/mtime) and
-    * the clustering parameters — a corpus or parameter change
-    * invalidates the key and triggers a fresh build; otherwise every
-    * caller in any JVM reads the same committed snapshot.
+    * table instead of re-running CC. This lands the trigram-Jaccard
+    * dup-cluster map as a [[graft.store.SnapshotStore]] through
+    * [[graft.sources.DerivedTable]], keyed by a fingerprint of the
+    * corpus files (path/size/mtime) and the clustering parameters — a
+    * corpus or parameter change invalidates the key and triggers a
+    * fresh build; otherwise every caller in this session reads the
+    * same committed snapshot.
     *
     * At 100 TB this is the difference between paying the CC rounds
     * once per pipeline run vs once per report.
     */
   def clustersTable(spark: org.apache.spark.sql.SparkSession, dir: String,
                     docs: => DataFrame, minJaccard: Double = 0.5,
-                    lenBand: Int = 20): DataFrame = clusterTableLock.synchronized {
-    val root = clusterStoreRoot(dir, minJaccard, lenBand)
-    val store = new graft.store.SnapshotStore(spark, root, keyCol = "id")
-    if (store.currentVersion.isEmpty) {
+                    lenBand: Int = 20): DataFrame =
+    graft.sources.DerivedTable.readOrBuildAs(spark, "cluster-store", dir,
+      Seq("documents"), clusterParams(minJaccard, lenBand))(tmp => {
       val d = docs
       val pairs = ngramJaccardPairs(d, minJaccard = minJaccard, lenBand = lenBand)
         .select("id_a", "id_b")
       val (cc, release) =
         connectedComponentsReleasable(pairs, d.select(col("doc_id").as("id")))
-      store.commit(cc) // an action: the snapshot parquet is written here
+      // an action: the snapshot parquet is written here
+      new graft.store.SnapshotStore(spark, tmp, keyCol = "id").commit(cc)
       release()
-    }
-    store.read().getOrElse(
-      throw new IllegalStateException(s"cluster table commit failed under $root"))
-  }
+    })(root => new graft.store.SnapshotStore(spark, root, keyCol = "id").read()
+      .getOrElse(throw new IllegalStateException(s"cluster table commit failed under $root")))
 
-  /** Deterministic store location for [[clustersTable]]'s snapshot —
-    * package-visible so specs can open the same store and assert
-    * version behavior. */
+  private def clusterParams(minJaccard: Double, lenBand: Int): String =
+    s"j=$minJaccard,b=$lenBand"
+
+  /** [[clustersTable]]'s store location — package-visible so specs
+    * can open the same store and assert version behavior. */
   private[graft] def clusterStoreRoot(dir: String, minJaccard: Double,
                                       lenBand: Int): String =
-    java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-cluster-store",
-      java.lang.Long.toHexString(
-        corpusFingerprint(dir, s"j=$minJaccard,b=$lenBand"))).toString
-
-  /** Fingerprint of every file under `dir/documents.parquet`
-    * (name, size, mtime) plus the clustering parameters — the cache
-    * key for [[clustersTable]]. Metadata-only: never reads data. */
-  private def corpusFingerprint(dir: String, params: String): Long = {
-    import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Paths.get(dir, "documents.parquet")
-    val parts: Seq[String] =
-      if (!java.nio.file.Files.exists(base)) Seq(s"missing:$base")
-      else {
-        val s = java.nio.file.Files.walk(base)
-        try s.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map(p => s"$p:${java.nio.file.Files.size(p)}:" +
-            java.nio.file.Files.getLastModifiedTime(p).toMillis)
-          .toVector.sorted
-        finally s.close()
-      }
-    (parts :+ params).foldLeft(1125899906842597L) { (h, x) =>
-      x.foldLeft(h * 31 + x.length)((a, c) => a * 131 + c)
-    }
-  }
+    graft.sources.DerivedTable.rootFor("cluster-store", dir,
+      Seq("documents"), clusterParams(minJaccard, lenBand))
 
   /** C5 at scale: LSH-bucketed near-dup candidates — pairs only form
     * within a random-hyperplane sign bucket, so work is

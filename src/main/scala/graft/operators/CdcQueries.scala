@@ -278,57 +278,32 @@ object CdcQueries {
       .orderBy(col("user_id"))
   }
 
-  private val storeLock = new Object
-
   /** The two-merge snapshot-store history shared by q_store_changes
     * and q_store_timetravel: even-id changes merged as v1, odd-id as
-    * v2. Built ONCE per corpus at a fingerprint-keyed root (the
-    * clustersTable discipline) — manifests are root-RELATIVE, so the
-    * store is relocatable: it is built at a pid-unique path and
-    * published by atomic rename, and no process can ever observe a
-    * partially-built store. Queries over a landed
-    * store bill only their read (file-level diff / as-of scan), the
-    * way a real pipeline reads its committed table instead of
-    * re-ingesting the feed. Replaces the per-construction temp store
-    * that leaked a full two-version directory every build
-    * (deleteOnExit cannot remove non-empty dirs).
+    * v2. Landed ONCE per corpus in the session through
+    * [[graft.sources.DerivedTable.readOrBuildAs]] (manifests are
+    * root-relative, so the store is built at a tmp path and renamed
+    * into place like any landing). Queries over a landed store bill
+    * only their read (file-level diff / as-of scan), the way a real
+    * pipeline reads its committed table instead of re-ingesting the
+    * feed.
     */
   private def twoMergeStore(spark: SparkSession,
                             dir: String): graft.store.SnapshotStore =
-    storeLock.synchronized {
-      val root = graft.sources.DerivedTable.rootFor(
-        "change-store", dir, Seq("events"), "two-merge-even-odd")
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root))) {
-        // build at a pid-unique path, publish by ATOMIC RENAME (the
-        // manifests are root-relative, so the store is relocatable):
-        // a concurrent builder in another JVM either wins the rename
-        // or discards its build — no process can observe a partial
-        // store, and nothing ever deletes a directory another
-        // process may be reading
-        val tmp = root + ".build-" + ProcessHandle.current().pid()
-        val b = new graft.store.SnapshotStore(spark, tmp, "user_id")
-        // stage the parse ONCE (r17, guide §5): mergeWith reads its
-        // delta twice (key-segment pass + fold) per merge, so the
-        // JSON parse lineage ran up to 4x per build — invisible while
-        // the landed store was a cross-run cache, billed per sample
-        // now that the bench purges landed roots. Released before
-        // return; build-sized, never table-sized.
-        val p = parsed(spark, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          b.merge(p.filter(pmod(col("id"), lit(2)) === 0))
-          b.merge(p.filter(pmod(col("id"), lit(2)) =!= 0))
-        } finally p.unpersist(blocking = false)
-        try java.nio.file.Files.move(
-          java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(root),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.FileAlreadyExistsException
-                     | _: java.nio.file.DirectoryNotEmptyException =>
-          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-        }
-      }
-      new graft.store.SnapshotStore(spark, root, "user_id")
-    }
+    graft.sources.DerivedTable.readOrBuildAs(spark, "change-store", dir,
+      Seq("events"), "two-merge-even-odd")(tmp => {
+      val b = new graft.store.SnapshotStore(spark, tmp, "user_id")
+      // stage the parse ONCE (r17, guide §5): mergeWith reads its
+      // delta twice (key-segment pass + fold) per merge, so the JSON
+      // parse lineage ran up to 4x per build. Released before return;
+      // build-sized, never table-sized.
+      val p = parsed(spark, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        b.merge(p.filter(pmod(col("id"), lit(2)) === 0))
+        b.merge(p.filter(pmod(col("id"), lit(2)) =!= 0))
+      } finally p.unpersist(blocking = false)
+    })(root => new graft.store.SnapshotStore(spark, root, "user_id"))
 
   /** A21 under the gate: version-diff read on the snapshot store —
     * `changes(v1, v2)` over a two-merge history must equal the
@@ -374,38 +349,26 @@ object CdcQueries {
     * This is the reference's many-executor Kudu-client reality
     * [ref: KuduManager.scala:72-114 — concurrent per-record upserts]
     * re-expressed at the table-format layer. Landed once per corpus
-    * (fingerprint-keyed root, atomic-rename publish).
+    * in the session through [[graft.sources.DerivedTable.readOrBuildAs]].
     */
   def qStoreConcurrent(spark: SparkSession, dir: String): DataFrame = {
-    val store = storeLock.synchronized {
-      val root = graft.sources.DerivedTable.rootFor(
-        "ccstore", dir, Seq("events"), "cas-two-writer-v1")
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root))) {
-        val tmp = root + ".build-" + ProcessHandle.current().pid()
-        val b = new graft.store.SnapshotStore(spark, tmp, "user_id")
-        val p = parsed(spark, dir).localCheckpoint(true)
-        val barrier = new java.util.concurrent.CyclicBarrier(2)
-        def writer(side: Long): Thread = new Thread(() => {
-          val half = p.filter(pmod(col("id"), lit(2)) === side)
-          barrier.await()
-          var done = false
-          while (!done) {
-            try { b.merge(half); done = true }
-            catch { case _: graft.store.ConcurrentCommitException => () }
-          }
-        })
-        val (t0, t1) = (writer(0L), writer(1L))
-        t0.start(); t1.start(); t0.join(); t1.join()
-        try java.nio.file.Files.move(
-          java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(root),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.FileAlreadyExistsException
-                     | _: java.nio.file.DirectoryNotEmptyException =>
-          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    val store = graft.sources.DerivedTable.readOrBuildAs(spark, "ccstore", dir,
+      Seq("events"), "cas-two-writer-v1")(tmp => {
+      val b = new graft.store.SnapshotStore(spark, tmp, "user_id")
+      val p = parsed(spark, dir).localCheckpoint(true)
+      val barrier = new java.util.concurrent.CyclicBarrier(2)
+      def writer(side: Long): Thread = new Thread(() => {
+        val half = p.filter(pmod(col("id"), lit(2)) === side)
+        barrier.await()
+        var done = false
+        while (!done) {
+          try { b.merge(half); done = true }
+          catch { case _: graft.store.ConcurrentCommitException => () }
         }
-      }
-      new graft.store.SnapshotStore(spark, root, "user_id")
-    }
+      })
+      val (t0, t1) = (writer(0L), writer(1L))
+      t0.start(); t1.start(); t0.join(); t1.join()
+    })(root => new graft.store.SnapshotStore(spark, root, "user_id"))
     store.read().get
       .select(col("user_id"), col("id").as("last_id"), col("delete_state"),
         col("event_type"), col("value"))
@@ -513,7 +476,7 @@ object CdcQueries {
   def qForgetDocs(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
       .select(col("doc_id"), col("source"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("gq-forget").toString
+    val root = graft.sources.DerivedTable.scratch("gq-forget")
     val store = new graft.store.SnapshotStore(spark, root, "doc_id",
       filesPerCommit = 8)
     store.commit(docs)
@@ -541,7 +504,7 @@ object CdcQueries {
   def qForgetDocsMor(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
       .select(col("doc_id"), col("source"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("gq-forget-mor").toString
+    val root = graft.sources.DerivedTable.scratch("gq-forget-mor")
     val store = new graft.store.SnapshotStore(spark, root, "doc_id",
       filesPerCommit = 8)
     store.commit(docs)
@@ -568,7 +531,7 @@ object CdcQueries {
   def qForgetAudit(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
       .select(col("doc_id"), col("source"), col("n_chars"))
-    val root = java.nio.file.Files.createTempDirectory("gq-fa").toString
+    val root = graft.sources.DerivedTable.scratch("gq-fa")
     val store = new graft.store.SnapshotStore(spark, root, "doc_id",
       filesPerCommit = 8)
     store.commit(docs)
@@ -603,7 +566,7 @@ object CdcQueries {
       .select(col("event_id"), col("user_id"),
         pmod(col("user_id"), lit(3)).as("tier"),
         round(col("value") * 100).cast("long").as("cents"))
-    val root = java.nio.file.Files.createTempDirectory("gq-ivm").toString
+    val root = graft.sources.DerivedTable.scratch("gq-ivm")
     val store = new graft.store.SnapshotStore(spark, root, "event_id",
       filesPerCommit = 8, indexCol = Some("user_id"))
     store.commit(facts)

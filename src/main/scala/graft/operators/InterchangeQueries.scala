@@ -9,7 +9,7 @@ import graft.sources.{DerivedTable, Tables, Writers}
   * format and oracle-comparing a full-column exact aggregate against
   * the parquet original in DuckDB. The interchange copy lands once
   * per corpus through the [[DerivedTable]] seam (fingerprint-keyed,
-  * atomic rename — the same discipline as every landed artifact), so
+  * renamed into place — the same discipline as every landing), so
   * the gate bills the READ path plus the aggregate, the way a real
   * pipeline consumes an exported dataset.
   *
@@ -21,10 +21,6 @@ import graft.sources.{DerivedTable, Tables, Writers}
   * corrupted in transit moves at least one sum.
   */
 object InterchangeQueries {
-  // same-JVM serialization for the bucketed-table landing (see land()
-  // in qBucketedJoin) — the cross-JVM race is handled by atomic rename
-  private val bucketLock = new Object
-
   /** Shared round-trip check body: read-back frame → one exact
     * aggregate per event_type. */
   private def auditAgg(back: DataFrame): DataFrame =
@@ -154,9 +150,8 @@ object InterchangeQueries {
 
   /** D1 under the gate: bucketed co-located join. Orders and
     * customer land as 8-bucket tables on the join key (bucketBy +
-    * sortBy through the session warehouse — Spark's bucketing lives
-    * in the catalog, so the landing is per-session, overwrite-
-    * idempotent, fingerprint-named per corpus); the MERGE hint forces
+    * sortBy, landed through [[DerivedTable]] and registered in the
+    * session catalog, fingerprint-named per corpus); the MERGE hint forces
     * the sort-merge path where bucketing eliminates BOTH shuffles
     * (the small side would otherwise broadcast and bypass the
     * machinery under test — PlanShapeSpec pins the no-exchange
@@ -170,48 +165,28 @@ object InterchangeQueries {
       dir, Seq("orders", "customer"), "bucket8-v1"))
     val oT = s"graft_orders_b_$fp"
     val cT = s"graft_cust_b_$fp"
-    // EXTERNAL path-based tables under tmpdir: bucket metadata lives
-    // in the session catalog (Spark bucketing is catalog state), but
-    // a managed table's warehouse location would outlive the catalog
-    // across JVMs and block re-registration. The DATA lands once per
-    // corpus with the atomic-rename discipline (write through a
-    // pid-unique external table, rename the directory into place —
-    // bucket ids ride the parquet file NAMES, so the files are
-    // relocatable; a concurrent JVM either wins the rename or
-    // discards its build, and no reader ever sees a partial write);
-    // each session then registers DDL over the landed location.
-    // bucketLock serializes same-JVM landers: without it two threads
-    // racing a cold landing collide on the shared tmp table/path and
-    // on the tableExists->CREATE TABLE window (cross-JVM races are
-    // already handled by the atomic rename; the tmp suffix adds the
-    // thread id so even an unsynchronized caller cannot collide)
+    // EXTERNAL path-based tables: bucket metadata lives in the
+    // session catalog (Spark bucketing is catalog state), while the
+    // DATA lands through DerivedTable like any derived table (written
+    // through a tmp external table, renamed into place — bucket ids
+    // ride the parquet file NAMES, so the files are relocatable); the
+    // session then registers DDL over the landed location. A fresh
+    // landing means a reset deleted whatever an existing registration
+    // points at, so it is dropped first — through the SQL command
+    // path, which also invalidates the cached file listing.
     def land(df: DataFrame, name: String, key: String,
-             ddlCols: String): Unit = bucketLock.synchronized {
-      if (!spark.catalog.tableExists(name)) {
-        val root = java.nio.file.Paths.get(
-          sys.props("java.io.tmpdir"), "graft-bucketed", name)
-        if (!java.nio.file.Files.exists(root)) {
-          val pid = s"${ProcessHandle.current().pid()}_${Thread.currentThread().getId}"
-          val tmpName = s"${name}_tmp_$pid"
-          val tmpPath = root.toString + ".tmp-" + pid
-          df.write.bucketBy(8, key).sortBy(key)
-            .option("path", tmpPath)
-            .mode("overwrite").format("parquet").saveAsTable(tmpName)
-          spark.sql(s"DROP TABLE IF EXISTS $tmpName") // external: files stay
-          try java.nio.file.Files.move(
-            java.nio.file.Paths.get(tmpPath), root,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException
-                       | _: java.nio.file.DirectoryNotEmptyException =>
-            org.apache.commons.io.FileUtils.deleteDirectory(
-              new java.io.File(tmpPath))
-          }
-        }
+             ddlCols: String): Unit =
+      DerivedTable.readOrBuildAs(spark, "bucketed", dir,
+        Seq("orders", "customer"), name)(tmp => {
+        df.write.bucketBy(8, key).sortBy(key)
+          .option("path", tmp)
+          .mode("overwrite").format("parquet").saveAsTable(s"${name}_tmp")
+        spark.sql(s"DROP TABLE IF EXISTS ${name}_tmp") // external: files stay
+        spark.sql(s"DROP TABLE IF EXISTS $name")
+      })(root => if (!spark.catalog.tableExists(name))
         spark.sql(s"CREATE TABLE $name ($ddlCols) USING parquet " +
           s"CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS " +
-          s"LOCATION '$root'")
-      }
-    }
+          s"LOCATION '$root'"))
     land(t.orders.select(col("o_orderkey"), col("o_custkey"),
       col("o_totalprice")), oT, "o_custkey",
       "o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE")
@@ -275,7 +250,7 @@ object InterchangeQueries {
     */
   def qWidenEvolution(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val root = java.nio.file.Files.createTempDirectory("gq-widen").toString
+    val root = DerivedTable.scratch("gq-widen")
     val store = new graft.store.SnapshotStore(spark, root, "doc_id",
       filesPerCommit = 8)
     store.commit(docs.select(col("doc_id"), col("source"),
@@ -311,7 +286,7 @@ object InterchangeQueries {
     */
   def qRenameEvolution(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val root = java.nio.file.Files.createTempDirectory("gq-rename").toString
+    val root = DerivedTable.scratch("gq-rename")
     val store = new graft.store.SnapshotStore(spark, root, "doc_id",
       filesPerCommit = 8)
     store.commit(docs.select(col("doc_id"), col("source"), col("n_chars")))

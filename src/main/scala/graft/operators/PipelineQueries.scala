@@ -157,7 +157,7 @@ object PipelineQueries {
   def qForgetNeardup(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.NearDupStream
     val docs = Tables(spark, dir).documents
-    val root = java.nio.file.Files.createTempDirectory("gq-forget-nd").toString
+    val root = graft.sources.DerivedTable.scratch("gq-forget-nd")
     NearDupStream.mergeBatch(docs, root, txn = Some(0L))
     NearDupStream.forget(spark, root,
       docs.filter(pmod(col("doc_id"), lit(13)) === 0)
@@ -377,7 +377,7 @@ object PipelineQueries {
   def qForgetAnn(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir).embeddings
     val (cents, lists) = Ann.ivfIndexFrames(emb, nLists = 8)
-    val root = java.nio.file.Files.createTempDirectory("gq-forget-ann").toString
+    val root = graft.sources.DerivedTable.scratch("gq-forget-ann")
     val store = new graft.store.SnapshotStore(spark, root, "neighbor_id",
       filesPerCommit = 8)
     store.commit(lists)

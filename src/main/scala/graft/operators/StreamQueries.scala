@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.cdc.ChangeModel
+import graft.sources.DerivedTable.scratch
 import graft.sources.Tables
 import graft.streaming.{AggStream, CdcStream, ChecksumStream, EventStream, KafkaCdcSource}
 
@@ -23,12 +24,6 @@ import graft.streaming.{AggStream, CdcStream, ChecksumStream, EventStream, Kafka
   */
 object StreamQueries {
 
-  private def tmp(prefix: String): String = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p.toString
-  }
-
   /** A9 under the gate: the full CDC ingest — JSON change lines
     * arriving in TWO deterministic chunks, checkpointed foreachBatch
     * MERGE through the SnapshotStore seam — then the stored snapshot.
@@ -37,9 +32,9 @@ object StreamQueries {
     */
   def qStreamCdcSnapshot(spark: SparkSession, dir: String): DataFrame = {
     val lines = ChangeModel.changeLines(Tables(spark, dir).events).select("line")
-    val linesDir = tmp("gq-cdc-lines")
-    val snapDir = tmp("gq-cdc-snap")
-    val ckpt = tmp("gq-cdc-ckpt")
+    val linesDir = scratch("gq-cdc-lines")
+    val snapDir = scratch("gq-cdc-snap")
+    val ckpt = scratch("gq-cdc-ckpt")
     // first arrival: even ids; second arrival: the rest — interleaved
     // key ranges, so the second merge REWRITES files, not just appends
     val idIsEven = get_json_object(col("line"), "$.after.ID").cast("long") % 2 === 0
@@ -73,9 +68,9 @@ object StreamQueries {
     import graft.cdc.AvroChangeModel
     val bodies = AvroChangeModel
       .avroChangeLines(Tables(spark, dir).events).select(col("id"), col("body"))
-    val linesDir = tmp("gq-avro-lines")
-    val snapDir = tmp("gq-avro-snap")
-    val ckpt = tmp("gq-avro-ckpt")
+    val linesDir = scratch("gq-avro-lines")
+    val snapDir = scratch("gq-avro-snap")
+    val ckpt = scratch("gq-avro-ckpt")
     bodies.filter(col("id") % 2 === 0).select("body").coalesce(1)
       .write.mode("overwrite").parquet(linesDir + "/batch0")
     val stream = spark.readStream
@@ -123,9 +118,9 @@ object StreamQueries {
         get_json_object(col("line"), "$.after.USER_ID").cast("long"))
       .join(broadcast(quarters.withColumnRenamed("user_id", "uid")), Seq("uid"))
       .localCheckpoint(true)
-    val linesDir = tmp("gq-opt-lines")
-    val snapDir = tmp("gq-opt-snap")
-    val ckpt = tmp("gq-opt-ckpt")
+    val linesDir = scratch("gq-opt-lines")
+    val snapDir = scratch("gq-opt-snap")
+    val ckpt = scratch("gq-opt-ckpt")
     val maxFiles = 6
     var nOpt = 0L
     lines.filter(col("q") === 1).select("line").coalesce(1)
@@ -185,15 +180,15 @@ object StreamQueries {
     import java.nio.file.{Paths, StandardCopyOption, StandardOpenOption}
     val lines = ChangeModel.changeLines(Tables(spark, dir).events)
       .withColumn("id", get_json_object(col("line"), "$.after.ID").cast("long"))
-    val segDir = tmp("gq-kseam-seg")
-    val snapDir = tmp("gq-kseam-snap")
-    val consumedDir = tmp("gq-kseam-consumed")
+    val segDir = scratch("gq-kseam-seg")
+    val snapDir = scratch("gq-kseam-snap")
+    val consumedDir = scratch("gq-kseam-consumed")
     val logPath = segDir + "/offset.log"
     // two "Kafka partitions" of topic pub, keyed by id parity; the
     // arrival split interleaves within each partition so phase B
     // rewrites keys phase A already stored
     def writePhase(p: Int, phaseA: Boolean): Unit = {
-      val out = tmp(s"gq-kseam-w$p")
+      val out = scratch(s"gq-kseam-w$p")
       lines.filter(expr(s"id % 2 = $p AND ((id div 2) % 2 = 0) = $phaseA"))
         .select("line").coalesce(1).write.mode("overwrite").text(out)
       val part = {
@@ -218,7 +213,7 @@ object StreamQueries {
     spark.streams.addListener(listener)
     try {
       val qa = CdcStream.startFromLines(readSeam("earliest"), snapDir,
-        tmp("gq-kseam-ckptA"), Some(consumedDir))
+        scratch("gq-kseam-ckptA"), Some(consumedDir))
       qa.processAllAvailable(); qa.stop()
       val expectA = graft.streaming.GraftLines.segments(segDir)
         .map { case (t, p, f) =>
@@ -244,7 +239,7 @@ object StreamQueries {
         .ListHasAsScala(Files.readAllLines(Paths.get(logPath))).asScala.toSeq
       val qb = CdcStream.startFromLines(
         readSeam(KafkaCdcSource.offsetLogToStartingOffsets(logLines)), snapDir,
-        tmp("gq-kseam-ckptB"), Some(consumedDir))
+        scratch("gq-kseam-ckptB"), Some(consumedDir))
       qb.processAllAvailable(); qb.stop()
     } finally spark.streams.removeListener(listener)
     val counts = spark.read.parquet(consumedDir).agg(
@@ -277,12 +272,12 @@ object StreamQueries {
     import java.nio.file.{Paths, StandardCopyOption, StandardOpenOption}
     val lines = ChangeModel.mixedChangeLines(Tables(spark, dir).events)
       .withColumn("id", get_json_object(col("line"), "$.after.ID").cast("long"))
-    val topicDirs = Map("t_events" -> tmp("gq-mt-events"),
-                        "t_orders" -> tmp("gq-mt-orders"))
-    val storeRoot = tmp("gq-mt-stores")
+    val topicDirs = Map("t_events" -> scratch("gq-mt-events"),
+                        "t_orders" -> scratch("gq-mt-orders"))
+    val storeRoot = scratch("gq-mt-stores")
     // topic routing mirrors mixedChangeLines: even ids are PUB.EVENTS
     def writePhase(topic: String, parity: Int, phaseA: Boolean): Unit = {
-      val out = tmp(s"gq-mt-w$parity")
+      val out = scratch(s"gq-mt-w$parity")
       lines.filter(expr(s"id % 2 = $parity AND ((id div 2) % 2 = 0) = $phaseA"))
         .select("line").coalesce(1).write.mode("overwrite").text(out)
       val part = {
@@ -301,7 +296,7 @@ object StreamQueries {
     val fanIn = readTopic(topicDirs("t_events"))
       .unionByName(readTopic(topicDirs("t_orders")))
     val q = CdcStream.startRouted(fanIn, Seq("events", "orders"), storeRoot,
-      tmp("gq-mt-ckpt"))
+      scratch("gq-mt-ckpt"))
     q.processAllAvailable()
     writePhase("t_events", 0, phaseA = false)
     writePhase("t_orders", 1, phaseA = false)
@@ -334,7 +329,7 @@ object StreamQueries {
       .select(col("event_id"), col("user_id"),
         pmod(col("user_id"), lit(3)).as("tier"),
         round(col("value") * 100).cast("long").as("cents"))
-    val root = tmp("gq-sivm-store")
+    val root = scratch("gq-sivm-store")
     val store = new graft.store.SnapshotStore(spark, root, "event_id",
       filesPerCommit = 8, indexCol = Some("user_id"))
     store.commit(facts)
@@ -342,14 +337,14 @@ object StreamQueries {
       .filter(pmod(col("user_id"), lit(5)) === 0)
       .withColumn("new_tier", pmod(col("user_id"), lit(3)) + 10)
       .localCheckpoint(true)
-    val dimDir = tmp("gq-sivm-dim")
+    val dimDir = scratch("gq-sivm-dim")
     def arrive(mod10: Int, sub: String): Unit =
       users.filter(pmod(col("user_id"), lit(10)) === mod10)
         .coalesce(1).write.mode("overwrite").parquet(s"$dimDir/$sub")
     arrive(0, "b0")
     val q = spark.readStream
       .schema("user_id LONG, new_tier LONG").parquet(dimDir + "/*/")
-      .writeStream.option("checkpointLocation", tmp("gq-sivm-ckpt"))
+      .writeStream.option("checkpointLocation", scratch("gq-sivm-ckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = new graft.store.SnapshotStore(batch.sparkSession, root,
           "event_id", filesPerCommit = 8, indexCol = Some("user_id"))
@@ -390,20 +385,20 @@ object StreamQueries {
   def qStreamForget(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
       .select(col("doc_id"), col("source"), col("n_chars"))
-    val root = tmp("gq-sforget-store")
+    val root = scratch("gq-sforget-store")
     val store = new graft.store.SnapshotStore(spark, root, "doc_id",
       filesPerCommit = 8)
     store.commit(docs)
     val forget = docs.filter(pmod(col("doc_id"), lit(13)) === 0)
       .select(col("doc_id")).localCheckpoint(true)
-    val keyDir = tmp("gq-sforget-keys")
+    val keyDir = scratch("gq-sforget-keys")
     def arrive(mod26: Int, sub: String): Unit =
       forget.filter(pmod(col("doc_id"), lit(26)) === mod26)
         .coalesce(1).write.mode("overwrite").parquet(s"$keyDir/$sub")
     arrive(0, "b0")
     val q = spark.readStream
       .schema("doc_id LONG").parquet(keyDir + "/*/")
-      .writeStream.option("checkpointLocation", tmp("gq-sforget-ckpt"))
+      .writeStream.option("checkpointLocation", scratch("gq-sforget-ckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = new graft.store.SnapshotStore(batch.sparkSession, root,
           "doc_id", filesPerCommit = 8)
@@ -428,9 +423,9 @@ object StreamQueries {
   def qStreamDedup(spark: SparkSession, dir: String): DataFrame = {
     val events = Tables(spark, dir).events
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-    val inDir = tmp("gq-dedup-in")
-    val outDir = tmp("gq-dedup-out")
-    val ckpt = tmp("gq-dedup-ckpt")
+    val inDir = scratch("gq-dedup-in")
+    val outDir = scratch("gq-dedup-out")
+    val ckpt = scratch("gq-dedup-ckpt")
     events.write.mode("overwrite").parquet(inDir + "/a")
     events.write.mode("overwrite").parquet(inDir + "/b")
     val streamIn = spark.readStream.schema(
@@ -454,9 +449,9 @@ object StreamQueries {
   def qStreamAggTable(spark: SparkSession, dir: String): DataFrame = {
     val events = Tables(spark, dir).events
       .select(col("event_id"), col("user_id"), col("value"))
-    val inDir = tmp("gq-agg-in")
-    val storeDir = tmp("gq-agg-store")
-    val ckpt = tmp("gq-agg-ckpt")
+    val inDir = scratch("gq-agg-in")
+    val storeDir = scratch("gq-agg-store")
+    val ckpt = scratch("gq-agg-ckpt")
     events.filter(col("event_id") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
     val q = AggStream.start(spark, inDir + "/*/", inDir + "/batch0", storeDir, ckpt)
@@ -480,9 +475,9 @@ object StreamQueries {
   def qStreamChecksum(spark: SparkSession, dir: String): DataFrame = {
     val events = Tables(spark, dir).events
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val inDir = tmp("gq-ck-in")
-    val storeDir = tmp("gq-ck-store")
-    val ckpt = tmp("gq-ck-ckpt")
+    val inDir = scratch("gq-ck-in")
+    val storeDir = scratch("gq-ck-store")
+    val ckpt = scratch("gq-ck-ckpt")
     events.filter(col("event_id") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
     val q = ChecksumStream.start(spark, inDir + "/*/", inDir + "/batch0",
@@ -508,9 +503,9 @@ object StreamQueries {
     import spark.implicits._
     val events = Tables(spark, dir).events
       .select(col("user_id"), col("ts"), col("event_id"))
-    val inDir = tmp("gq-sess-in")
-    val outDir = tmp("gq-sess-out")
-    val ckpt = tmp("gq-sess-ckpt")
+    val inDir = scratch("gq-sess-in")
+    val outDir = scratch("gq-sess-out")
+    val ckpt = scratch("gq-sess-ckpt")
     // time-split arrivals (per-user order preserved): sessions that
     // straddle the cut exercise state continuity, not just replay
     val mm = events.agg(min(unix_micros(col("ts"))).as("lo"),
@@ -548,9 +543,9 @@ object StreamQueries {
     import spark.implicits._
     val events = Tables(spark, dir).events
       .select(col("ts"), col("event_type"), col("value"))
-    val inDir = tmp("gq-win-in")
-    val outDir = tmp("gq-win-out")
-    val ckpt = tmp("gq-win-ckpt")
+    val inDir = scratch("gq-win-in")
+    val outDir = scratch("gq-win-out")
+    val ckpt = scratch("gq-win-ckpt")
     events.coalesce(1).write.mode("overwrite").parquet(inDir + "/batch0")
     val streamIn = spark.readStream.schema(events.schema).parquet(inDir + "/*/")
     val agg = streamIn
@@ -585,9 +580,9 @@ object StreamQueries {
     */
   def qStreamIngest(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val inDir = tmp("gq-ing-in")
-    val storeDir = tmp("gq-ing-store")
-    val ckpt = tmp("gq-ing-ckpt")
+    val inDir = scratch("gq-ing-in")
+    val storeDir = scratch("gq-ing-store")
+    val ckpt = scratch("gq-ing-ckpt")
     docs.filter(col("doc_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
     val q = graft.streaming.IngestStream.start(
@@ -613,9 +608,9 @@ object StreamQueries {
     */
   def qStreamSketch(spark: SparkSession, dir: String): DataFrame = {
     val events = Tables(spark, dir).events.select(col("ts"), col("user_id"))
-    val inDir = tmp("gq-sk-in")
-    val storeDir = tmp("gq-sk-store")
-    val ckpt = tmp("gq-sk-ckpt")
+    val inDir = scratch("gq-sk-in")
+    val storeDir = scratch("gq-sk-store")
+    val ckpt = scratch("gq-sk-ckpt")
     events.filter(col("user_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
     val q = graft.streaming.SketchStream.start(
@@ -650,9 +645,9 @@ object StreamQueries {
   def qStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     val events = Tables(spark, dir).events
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val inDir = tmp("gq-ssj-in")
-    val outDir = tmp("gq-ssj-out")
-    val ckpt = tmp("gq-ssj-ckpt")
+    val inDir = scratch("gq-ssj-in")
+    val outDir = scratch("gq-ssj-out")
+    val ckpt = scratch("gq-ssj-ckpt")
     val mm = events.agg(min(unix_micros(col("ts"))).as("lo"),
       max(unix_micros(col("ts"))).as("hi")).head
     val cut = (mm.getLong(0) + mm.getLong(1)) / 2
@@ -684,9 +679,9 @@ object StreamQueries {
     import spark.implicits._
     val events = Tables(spark, dir).events
       .select(col("ts"), col("user_id"), col("event_type"))
-    val inDir = tmp("gq-hll-in")
-    val outDir = tmp("gq-hll-out")
-    val ckpt = tmp("gq-hll-ckpt")
+    val inDir = scratch("gq-hll-in")
+    val outDir = scratch("gq-hll-out")
+    val ckpt = scratch("gq-hll-ckpt")
     events.coalesce(1).write.mode("overwrite").parquet(inDir + "/batch0")
     val streamIn = spark.readStream.schema(events.schema).parquet(inDir + "/*/")
     val q = EventStream.windowedApproxUsers(streamIn)
@@ -740,9 +735,9 @@ object StreamQueries {
     try {
       val events = Tables(spark, dir).events
         .select(col("user_id"), col("ts"), col("event_id"))
-      val inDir = tmp("gq-tws-in")
-      val outDir = tmp("gq-tws-out")
-      val ckpt = tmp("gq-tws-ckpt")
+      val inDir = scratch("gq-tws-in")
+      val outDir = scratch("gq-tws-out")
+      val ckpt = scratch("gq-tws-ckpt")
       val mm = events.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
       val cut = (mm.getLong(0) + mm.getLong(1)) / 2
@@ -783,9 +778,9 @@ object StreamQueries {
     */
   def qStreamRateLimit(spark: SparkSession, dir: String): DataFrame = {
     val lines = ChangeModel.changeLines(Tables(spark, dir).events).select("line")
-    val linesDir = tmp("gq-rate-lines")
-    val snapDir = tmp("gq-rate-snap")
-    val ckpt = tmp("gq-rate-ckpt")
+    val linesDir = scratch("gq-rate-lines")
+    val snapDir = scratch("gq-rate-snap")
+    val ckpt = scratch("gq-rate-ckpt")
     val idMod = get_json_object(col("line"), "$.after.ID").cast("long") % 4
     (0 until 4).foreach { m =>
       lines.filter(idMod === m).coalesce(1)
@@ -812,9 +807,9 @@ object StreamQueries {
     */
   def qStreamDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val inDir = tmp("gq-dec-in")
-    val outDir = tmp("gq-dec-out")
-    val ckpt = tmp("gq-dec-ckpt")
+    val inDir = scratch("gq-dec-in")
+    val outDir = scratch("gq-dec-out")
+    val ckpt = scratch("gq-dec-ckpt")
     val evalGrams = docs.filter(col("source") === "src0")
       .select(explode(graft.functions.shingle_hashes(
         split(col("text"), " "), 5)).as("gh")).distinct()
@@ -861,9 +856,9 @@ object StreamQueries {
     */
   def qStreamCoverage(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val inDir = tmp("gq-cov-in")
-    val storeDir = tmp("gq-cov-store")
-    val ckpt = tmp("gq-cov-ckpt")
+    val inDir = scratch("gq-cov-in")
+    val storeDir = scratch("gq-cov-store")
+    val ckpt = scratch("gq-cov-ckpt")
     val train = docs.filter(col("source") =!= "src0")
     train.filter(col("doc_id") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
@@ -916,9 +911,9 @@ object StreamQueries {
   def qStreamSyncLog(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
       .select(col("event_id"), col("user_id"), col("event_type"))
-    val inDir = tmp("gq-slog-in")
-    val logDir = tmp("gq-slog-log")
-    val ckpt = tmp("gq-slog-ckpt")
+    val inDir = scratch("gq-slog-in")
+    val logDir = scratch("gq-slog-log")
+    val ckpt = scratch("gq-slog-ckpt")
     val listener = new graft.streaming.RateListener(Some(logDir))
     spark.streams.addListener(listener)
     try {
@@ -968,10 +963,10 @@ object StreamQueries {
     */
   def qStreamAnnIndex(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir).embeddings
-    val inDir = tmp("gq-ivf-in")
-    val indexDir = tmp("gq-ivf-index")
-    val storeDir = tmp("gq-ivf-store")
-    val ckpt = tmp("gq-ivf-ckpt")
+    val inDir = scratch("gq-ivf-in")
+    val indexDir = scratch("gq-ivf-index")
+    val storeDir = scratch("gq-ivf-store")
+    val ckpt = scratch("gq-ivf-ckpt")
     graft.streaming.IvfStream.landCentroids(emb, indexDir, nLists = 8)
     emb.filter(col("vec_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
@@ -996,10 +991,10 @@ object StreamQueries {
     */
   def qStreamAnnPq(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir).embeddings
-    val inDir = tmp("gq-ivfpq-in")
-    val indexDir = tmp("gq-ivfpq-index")
-    val storeDir = tmp("gq-ivfpq-store")
-    val ckpt = tmp("gq-ivfpq-ckpt")
+    val inDir = scratch("gq-ivfpq-in")
+    val indexDir = scratch("gq-ivfpq-index")
+    val storeDir = scratch("gq-ivfpq-store")
+    val ckpt = scratch("gq-ivfpq-ckpt")
     graft.streaming.IvfStream.landIvfPq(emb, indexDir, nLists = 8, m = 8, k = 16)
     emb.filter(col("vec_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
@@ -1025,9 +1020,9 @@ object StreamQueries {
     */
   def qStreamNeardup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val inDir = tmp("gq-nd-in")
-    val storeDir = tmp("gq-nd-store")
-    val ckpt = tmp("gq-nd-ckpt")
+    val inDir = scratch("gq-nd-in")
+    val storeDir = scratch("gq-nd-store")
+    val ckpt = scratch("gq-nd-ckpt")
     docs.filter(col("doc_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
     val q = graft.streaming.NearDupStream.start(
@@ -1050,9 +1045,9 @@ object StreamQueries {
     */
   def qStreamQualityGate(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val inDir = tmp("gq-qg-in")
-    val storeDir = tmp("gq-qg-store")
-    val ckpt = tmp("gq-qg-ckpt")
+    val inDir = scratch("gq-qg-in")
+    val storeDir = scratch("gq-qg-store")
+    val ckpt = scratch("gq-qg-ckpt")
     docs.filter(col("doc_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
     val q = graft.streaming.QualityGateStream.start(
@@ -1085,11 +1080,11 @@ object StreamQueries {
   def qStreamLate(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
       .select(col("event_id"), col("ts"), col("event_type"))
-    val inDir = tmp("gq-late-in")
-    val accDir = tmp("gq-late-acc")
-    val lateDir = tmp("gq-late-q")
-    val hwmDir = tmp("gq-late-hwm")
-    val ckpt = tmp("gq-late-ckpt")
+    val inDir = scratch("gq-late-in")
+    val accDir = scratch("gq-late-acc")
+    val lateDir = scratch("gq-late-q")
+    val hwmDir = scratch("gq-late-hwm")
+    val ckpt = scratch("gq-late-ckpt")
     ev.filter(col("event_id") % 3 =!= 0).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
     val q = graft.streaming.LateRouterStream.start(
@@ -1124,27 +1119,27 @@ object StreamQueries {
   def qStreamBackfill(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
       .select(col("event_id"), col("ts"), col("event_type"))
-    val inDir = tmp("gq-bf-in")
-    val accDir = tmp("gq-bf-acc")
-    val lateDir = tmp("gq-bf-q")
-    val hwmDir = tmp("gq-bf-hwm")
+    val inDir = scratch("gq-bf-in")
+    val accDir = scratch("gq-bf-acc")
+    val lateDir = scratch("gq-bf-q")
+    val hwmDir = scratch("gq-bf-hwm")
     ev.filter(col("event_id") % 3 =!= 0).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
     val q = graft.streaming.LateRouterStream.start(
       spark, inDir + "/*/", inDir + "/batch0", accDir, lateDir, hwmDir,
-      tmp("gq-bf-ck1"), delayMicros = 3600L * 1000000L)
+      scratch("gq-bf-ck1"), delayMicros = 3600L * 1000000L)
     q.processAllAvailable()
     ev.filter(col("event_id") % 3 === 0).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch1")
     q.processAllAvailable()
     q.stop()
-    val accStore = tmp("gq-bf-as")
-    val lateStore = tmp("gq-bf-ls")
+    val accStore = scratch("gq-bf-as")
+    val lateStore = scratch("gq-bf-ls")
     val qa = graft.streaming.BackfillStream.start(
-      spark, accDir + "/*/", inDir + "/batch0", accStore, tmp("gq-bf-ck2"))
+      spark, accDir + "/*/", inDir + "/batch0", accStore, scratch("gq-bf-ck2"))
     qa.processAllAvailable(); qa.stop()
     val ql = graft.streaming.BackfillStream.start(
-      spark, lateDir + "/*/", inDir + "/batch0", lateStore, tmp("gq-bf-ck3"))
+      spark, lateDir + "/*/", inDir + "/batch0", lateStore, scratch("gq-bf-ck3"))
     ql.processAllAvailable(); ql.stop()
     val a = graft.streaming.BackfillStream.readTable(spark, accStore).get
       .select(col("d"), col("event_type"), col("n").as("na"))
@@ -1170,9 +1165,9 @@ object StreamQueries {
     */
   def qStreamDrift(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val inDir = tmp("gq-drift-in")
-    val storeDir = tmp("gq-drift-store")
-    val ckpt = tmp("gq-drift-ckpt")
+    val inDir = scratch("gq-drift-in")
+    val storeDir = scratch("gq-drift-store")
+    val ckpt = scratch("gq-drift-ckpt")
     val ref = docs
       .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
       .select(col("n_chars").as("v"))

@@ -88,19 +88,34 @@ class ContractSpec extends AnyFunSuite {
     assert(wrong.isEmpty, wrong.mkString("; "))
   }
 
+  /** File names under `src/main/scala` whose text matches `pattern`. */
+  private def mainSourcesMatching(pattern: scala.util.matching.Regex): Seq[String] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try {
+      import scala.jdk.CollectionConverters._
+      files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .filter(p => pattern.findFirstIn(java.nio.file.Files.readString(p)).nonEmpty)
+        .map(_.getFileName.toString).sorted
+    } finally files.close()
+  }
+
   test("GraftSession is the only place a SparkSession is built") {
     // Verify, Bench and the deploy entry points must run one session
     // configuration; a second builder chain is where they drift apart
-    val builder = """SparkSession\s*\.\s*builder""".r
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val builders = try {
-      import scala.jdk.CollectionConverters._
-      files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-        .filter(p => builder.findFirstIn(java.nio.file.Files.readString(p)).nonEmpty)
-        .map(_.getFileName.toString).sorted
-    } finally files.close()
+    val builders = mainSourcesMatching("""SparkSession\s*\.\s*builder""".r)
     assert(builders == Seq("GraftSession.scala"),
       s"files that build a SparkSession: ${builders.mkString(", ")} (only GraftSession.scala may)")
+  }
+
+  test("DerivedTable is the only place graft picks a temporary directory") {
+    // a directory made under the shared tmpdir outlives the session
+    // and is visible to every other process on the host; derived and
+    // scratch files belong under DerivedTable's session root
+    val tmpUsers = mainSourcesMatching("""java\.io\.tmpdir|createTempDirectory""".r)
+      .filterNot(_ == "DerivedTable.scala")
+    assert(tmpUsers.isEmpty,
+      s"files that use java.io.tmpdir or createTempDirectory: ${tmpUsers.mkString(", ")} " +
+        "(route them through DerivedTable)")
   }
 
   test("SURVEY.md §2: checklist ids and operator names are unique") {
@@ -240,5 +255,35 @@ class ContractSpec extends AnyFunSuite {
       catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(100)}") }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("a landing reset clears only this session's root; landings re-land") {
+    import java.nio.file.{Files, Paths}
+    import graft.sources.DerivedTable
+    val sf = "/root/testdata/sf0.001"
+    // another graft process's files under the shared tmpdir
+    val foreign = Files.createTempDirectory(Paths.get(sys.props("java.io.tmpdir")), "graft-x")
+    Files.writeString(foreign.resolve("marker"), "not this session's")
+    try {
+      var builds = 0
+      def land() = DerivedTable.readOrBuild(spark, "reset-probe", sf, Seq("region"), "v1") {
+        builds += 1
+        spark.range(3).toDF("id")
+      }
+      assert(land().count() == 3 && builds == 1)
+      val root = Paths.get(DerivedTable.rootFor("reset-probe", sf, Seq("region"), "v1"))
+      assert(Files.isDirectory(root) &&
+        root.startsWith(Paths.get(org.apache.spark.SparkFiles.getRootDirectory())),
+        s"landing $root is not under the session's SparkFiles root")
+      assert(land().count() == 3 && builds == 1, "a landed root must be read, not rebuilt")
+      val bucketed = graft.operators.InterchangeQueries.qBucketedJoin(spark, sf).collect().toSeq
+      DerivedTable.reset()
+      assert(Files.exists(foreign.resolve("marker")), "reset deleted another process's files")
+      assert(!Files.exists(root), "reset left this session's landing in place")
+      assert(land().count() == 3 && builds == 2 && Files.isDirectory(root))
+      // the bucketed tables' registrations outlive their deleted files
+      assert(bucketed.nonEmpty &&
+        graft.operators.InterchangeQueries.qBucketedJoin(spark, sf).collect().toSeq == bucketed)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(foreign.toFile)
   }
 }
