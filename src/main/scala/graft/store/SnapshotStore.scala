@@ -14,17 +14,11 @@ import graft.sources.Tables
 /** One data file of a committed snapshot version, with its key-range
   * index entry (rows + min/max of the store's key column) and, when
   * the store declares a secondary index column, that file's Bloom
-  * blob over the column's xxhash64 values.
+  * blob over the column's xxhash64 values. It is one line of the
+  * version's TSV manifest: `path rows minKey maxKey [bloom-base64]`.
   */
 final case class DataFileEntry(path: String, rows: Long, minKey: Long, maxKey: Long,
                                bloom: Option[Array[Byte]] = None)
-
-/** One manifest row in the PARQUET manifest representation (path is
-  * store-root-relative, bloom null when the store has no secondary
-  * index) — the schema `SnapshotStore.manifestFrame` exposes.
-  */
-final case class ManifestRow(path: String, rows: Long, minKey: Long,
-                             maxKey: Long, bloom: Array[Byte])
 
 /** Minimal table-format seam over parquet — the role Kudu plays in
   * the reference: a continuously-upserted, snapshot-readable table
@@ -37,9 +31,14 @@ final case class ManifestRow(path: String, rows: Long, minKey: Long,
   *     token keeps concurrent optimistic writers out of each other's
   *     output directories (the manifest records exact paths, so
   *     readers never depend on directory naming).
-  *   - `_manifests/m<N>.tsv` — version N's manifest: the explicit
-  *     data-file list plus a per-file key-range index
-  *     (path, rows, minKey, maxKey).
+  *   - `_manifests/m<N>.tsv` — version N's manifest, the one on-disk
+  *     format: a header line (key, schema, rename log, txn watermark,
+  *     deletion-vector tag) and then the explicit data-file list with
+  *     a per-file key-range index, one [[DataFileEntry]] per line
+  *     (path, rows, minKey, maxKey, and the Bloom blob when the store
+  *     has a secondary index). Planning parses it on the driver.
+  *   - `_deletes/dv<N>.parquet` — version N's merge-on-read deletion
+  *     vector, when it has one (see [[purgeMor]]).
   *   - `LATEST` — pointer to the current version, flipped by atomic
   *     rename; commit order is data files -> manifest -> pointer, so
   *     a crash at any point leaves the previous version intact.
@@ -68,7 +67,6 @@ final class SnapshotStore(
     keepVersions: Int = 2,
     indexCol: Option[String] = None,
     indexBits: Int = 1 << 14,
-    parquetManifestFrom: Int = 4096,
     maxPlannedBroadcast: Int = 1 << 16,
     protocol: CommitProtocol = AtomicRenameCommit) {
 
@@ -80,10 +78,11 @@ final class SnapshotStore(
   Files.createDirectories(manifestDir)
 
   /** Instrumentation: rows collected to the driver by the last
-    * file-hit planning pass ([[hitSegments]]). Bounded by the delta's
-    * partitions × the manifest's elementary-segment count (<= 2 ×
-    * files), NEVER by delta key cardinality — specs assert this stays
-    * tiny under a million-distinct-key merge.
+    * file-hit planning pass ([[hitSegments]], run by [[mergeWith]] and
+    * [[purgeMor]]). Bounded by the delta's partitions × the manifest's
+    * elementary-segment count (<= 2 × files), NEVER by delta key
+    * cardinality — specs assert this stays tiny under a
+    * million-distinct-key merge.
     */
   @volatile private[graft] var lastMergeSummaryRows: Long = -1L
 
@@ -97,7 +96,7 @@ final class SnapshotStore(
   /** Instrumentation: did the last data-file write fall back to the
     * second stats job (re-reading the just-written files) instead of
     * the stats observed during the write? Specs pin that the CDC
-    * merges stay on the observed path on both manifest formats.
+    * merges stay on the observed path.
     */
   @volatile private[graft] var lastStatsFallback: Boolean = false
 
@@ -116,81 +115,69 @@ final class SnapshotStore(
 
   /** The blobless twin of [[manifest]] for consumers that never probe
     * Bloom blobs on the driver (plain reads, range planning, change
-    * feeds, vacuum): on a parquet-backed manifest the blob column is
-    * the bulk of the manifest's bytes at the 10⁵-10⁶-file scale this
-    * path targets, so it is column-pruned out of the collect entirely
-    * (bloom = None); the TSV branch skips the Base64 decode.
+    * feeds, vacuum): it skips the Base64 decode of every blob, which
+    * is the bulk of a secondary-indexed manifest's bytes (bloom = None).
     */
   private def manifestLite(v: Long): Seq[DataFileEntry] =
     manifestEntries(v, withBlooms = false)
 
-  private def manifestEntries(v: Long, withBlooms: Boolean): Seq[DataFileEntry] =
-    if (entriesParquet(v))
-      // parquet-backed manifest (large stores): the driver needs the
-      // file list to construct scans — same as Spark's own source
-      // planning — but PLANNING against the manifest (mergeWith)
-      // reads the frame distributed and column-pruned instead
-      (if (withBlooms) manifestFrame(v)
-       else manifestFrame(v).select(col("path"), col("rows"),
-         col("minKey"), col("maxKey"), lit(null).cast("binary").as("bloom")))
-        .orderBy(col("minKey"), col("path")).collect().toSeq
-        .map(r => DataFileEntry(resolvePath(r.getAs[String]("path")),
-          r.getAs[Long]("rows"), r.getAs[Long]("minKey"), r.getAs[Long]("maxKey"),
-          Option(r.getAs[Array[Byte]]("bloom"))))
-    else
-      Files.readAllLines(manifestDir.resolve(s"m$v.tsv")).asScala.toSeq
-        .filterNot(l => l.startsWith("#") || l.isEmpty)
-        .map { l =>
-          l.split("\t") match {
-            case Array(p, r, mn, mx) =>
-              DataFileEntry(resolvePath(p), r.toLong, mn.toLong, mx.toLong)
-            case Array(p, r, mn, mx, b64) =>
-              DataFileEntry(resolvePath(p), r.toLong, mn.toLong, mx.toLong,
-                if (withBlooms) Some(java.util.Base64.getDecoder.decode(b64))
-                else None)
-            case _ => throw new IllegalStateException(
-              s"corrupt manifest ${manifestDir.resolve(s"m$v.tsv")}: " +
-                s"expected 4 or 5 tab-separated fields, got line: $l")
-          }
+  private def manifestEntries(v: Long, withBlooms: Boolean): Seq[DataFileEntry] = {
+    val path = manifestDir.resolve(s"m$v.tsv")
+    val lines = Files.readAllLines(path).asScala.toSeq
+    lines.headOption.foreach(requireTsvEntries(v, _))
+    lines.filterNot(l => l.startsWith("#") || l.isEmpty)
+      .map { l =>
+        l.split("\t") match {
+          case Array(p, r, mn, mx) =>
+            DataFileEntry(resolvePath(p), r.toLong, mn.toLong, mx.toLong)
+          case Array(p, r, mn, mx, b64) =>
+            DataFileEntry(resolvePath(p), r.toLong, mn.toLong, mx.toLong,
+              if (withBlooms) Some(java.util.Base64.getDecoder.decode(b64))
+              else None)
+          case _ => throw new IllegalStateException(
+            s"corrupt manifest $path: " +
+              s"expected 4 or 5 tab-separated fields, got line: $l")
         }
-
-  private def manifestParquet(v: Long): java.nio.file.Path =
-    manifestDir.resolve(s"m$v.parquet")
-
-  /** Is version v's entry list parquet-backed? Dispatched on the
-    * COMMITTED header's `entries=parquet` tag, never on
-    * m{v}.parquet existence: a crash in [[publishParquet]] between
-    * the parquet-dir move and the header-TSV write leaves a stale
-    * directory with no committed header, and that stale entry list
-    * must never shadow a subsequently committed TSV entry list at
-    * the same version.
-    */
-  private def entriesParquet(v: Long): Boolean = {
-    val tsv = manifestDir.resolve(s"m$v.tsv")
-    // header-tag check reads ONE line, not the whole manifest — a
-    // TSV-backed manifest can carry thousands of entries with
-    // multi-KB bloom blobs, and this runs before every parse
-    Files.exists(tsv) && {
-      val r = Files.newBufferedReader(tsv)
-      try Option(r.readLine()).exists(_.contains(" entries=parquet"))
-      finally r.close()
-    }
+      }
   }
 
-  /** Version v's manifest as a Spark frame — (path root-relative,
-    * rows, minKey, maxKey, bloom|null). The 100-TB planning surface
-    * (r10 verdict task 3): a table at that scale has 10⁵-10⁶ data
-    * files, and its manifest is itself a dataset — merge planning
-    * joins against this frame instead of parsing a driver-sized TSV.
-    * Small (TSV-backed) manifests lift to a local frame for API
-    * uniformity.
+  /** Stores persisted by older builds with more than 4096 data files
+    * kept their entry list in a parquet side table, and their TSV holds
+    * only a header tagged ` entries=parquet`. This build reads TSV
+    * entry lists only, so such a version fails here, by name, instead
+    * of reading as a version with no data files.
     */
-  def manifestFrame(v: Long): DataFrame = {
-    val pq = manifestParquet(v)
-    if (entriesParquet(v)) Tables.loadCached(spark, pq.toString)
-    else spark.createDataFrame(manifest(v).map(e =>
-      ManifestRow(relativizePath(e.path), e.rows, e.minKey, e.maxKey,
-        e.bloom.orNull)))
+  private def requireTsvEntries(v: Long, header: String): Unit =
+    if (header.contains(" entries=parquet"))
+      throw new IllegalStateException(
+        s"manifest v$v of store $root keeps its entry list in the retired " +
+          "parquet manifest format, which this build does not read; migrate " +
+          "the store by running optimize() on it with an older build that " +
+          "still reads that format (the rewrite into filesPerCommit files " +
+          "publishes a TSV manifest), then reopen it here")
+
+  /** Version v's manifest header, parsed once from the FIRST line only:
+    * a manifest can carry thousands of entries with multi-KB Bloom
+    * blobs, and every read consults the header.
+    */
+  private def header(v: Long): SnapshotStore.Header = {
+    val r = Files.newBufferedReader(manifestDir.resolve(s"m$v.tsv"))
+    val h = try Option(r.readLine()).getOrElse("") finally r.close()
+    requireTsvEntries(v, h)
+    def tag(name: String): Option[String] =
+      s" $name=(\\S+)".r.findFirstMatchIn(h).map(_.group(1))
+    def b64(s: String): String =
+      new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
+    SnapshotStore.Header(
+      txn = " txn=(-?\\d+)".r.findFirstMatchIn(h).map(_.group(1).toLong),
+      schema = tag("schema").map(s => org.apache.spark.sql.types.DataType
+        .fromJson(b64(s)).asInstanceOf[org.apache.spark.sql.types.StructType]),
+      renames = tag("renames").map(s => b64(s).split(";").toSeq.filter(_.nonEmpty)
+        .map { tok =>
+          val Array(rv, f, t) = tok.split(">")
+          (rv.toLong, f, t)
+        }).getOrElse(Seq.empty),
+      dv = tag("dv"))
   }
 
   /** Transaction id of the last applied commit (None before any
@@ -200,11 +187,7 @@ final class SnapshotStore(
     * side file could desync from the pointer on a crash between the
     * two writes).
     */
-  def lastTxn: Option[Long] = currentVersion.flatMap { v =>
-    Files.readAllLines(manifestDir.resolve(s"m$v.tsv")).asScala
-      .headOption.flatMap(h => "txn=(-?\\d+)".r.findFirstMatchIn(h))
-      .map(_.group(1).toLong)
-  }
+  def lastTxn: Option[Long] = currentVersion.flatMap(header(_).txn)
 
   /** The table schema recorded in a version's manifest header (what
     * real formats keep in metadata): the CURRENT schema applies to
@@ -214,11 +197,7 @@ final class SnapshotStore(
     * schema resolution).
     */
   def schemaOf(v: Long): Option[org.apache.spark.sql.types.StructType] =
-    Files.readAllLines(manifestDir.resolve(s"m$v.tsv")).asScala
-      .headOption.flatMap(h => "schema=(\\S+)".r.findFirstMatchIn(h))
-      .map(m => org.apache.spark.sql.types.DataType.fromJson(
-        new String(java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8"))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    header(v).schema
 
   /** Snapshot-isolated read of the current version (None if nothing
     * has been committed yet).
@@ -241,15 +220,7 @@ final class SnapshotStore(
     * are rare events).
     */
   private[graft] def renamesOf(v: Long): Seq[(Long, String, String)] =
-    Files.readAllLines(manifestDir.resolve(s"m$v.tsv")).asScala
-      .headOption.flatMap(h => "renames=(\\S+)".r.findFirstMatchIn(h))
-      .map(m => new String(java.util.Base64.getDecoder.decode(m.group(1)),
-          "UTF-8")
-        .split(";").toSeq.filter(_.nonEmpty).map { tok =>
-          val Array(rv, f, t) = tok.split(">")
-          (rv.toLong, f, t)
-        })
-      .getOrElse(Seq.empty)
+    header(v).renames
 
   private def encodeRenames(r: Seq[(Long, String, String)]): String =
     java.util.Base64.getEncoder.encodeToString(
@@ -269,10 +240,7 @@ final class SnapshotStore(
     * outstanding per-file key tombstones (r14 verdict task 4). None
     * when the version has no merge-on-read deletes outstanding.
     */
-  private[graft] def dvName(v: Long): Option[String] =
-    Files.readAllLines(manifestDir.resolve(s"m$v.tsv")).asScala
-      .headOption.flatMap(h => "dv=(\\S+)".r.findFirstMatchIn(h))
-      .map(_.group(1))
+  private[graft] def dvName(v: Long): Option[String] = header(v).dv
 
   /** Version v's deletion vector as a frame — (path root-relative,
     * key long): "the row with this key in this data file is deleted".
@@ -281,9 +249,8 @@ final class SnapshotStore(
     * never mentions) while the purged row in the old carried file
     * stays masked.
     */
-  private def dvFrame(v: Long): Option[DataFrame] =
-    dvName(v).map(n => Tables.loadCached(spark,
-      deletesDir.resolve(n).toString))
+  private def dvFrame(name: Option[String]): Option[DataFrame] =
+    name.map(n => Tables.loadCached(spark, deletesDir.resolve(n).toString))
 
   /** SCHEMA EVOLUTION: every file read goes through the
     * manifest-recorded schema — the parquet reader null-fills columns
@@ -359,13 +326,13 @@ final class SnapshotStore(
   }
 
   private def readFiles(v: Long, files: Seq[String]): DataFrame = {
-    val rens = renamesOf(v)
-    val base = schemaOf(v) match {
-      case Some(st) if rens.nonEmpty => readGenerations(st, rens, files)
+    val h = header(v)
+    val base = h.schema match {
+      case Some(st) if h.renames.nonEmpty => readGenerations(st, h.renames, files)
       case Some(st) => spark.read.schema(st).parquet(files: _*)
       case None     => spark.read.parquet(files: _*)
     }
-    dvFrame(v) match {
+    dvFrame(h.dv) match {
       case None => base
       case Some(dv) =>
         val dvAbs = dv.select(
@@ -433,30 +400,15 @@ final class SnapshotStore(
     // everything — a silent false NEGATIVE, the one failure mode the
     // index must never have
     val lit0 = Literal(value)
-    val colType = currentVersion.flatMap(schemaOf)
-      .flatMap(st => st.fields.find(_.name == indexCol.get).map(_.dataType))
-      .getOrElse(lit0.dataType)
-    val probe = if (lit0.dataType == colType) lit0
-                else Cast(lit0, colType, Some("UTC"))
-    val h = XxHash64(Seq(probe), 42L).eval(null).asInstanceOf[Long]
     currentVersion.toSeq.flatMap { v =>
-      if (entriesParquet(v)) {
-        // parquet-backed manifest: probe the blobs IN SPARK with the
-        // same codegen'd membership kernel the query path uses — at
-        // 10⁵-10⁶ files the manifest's Bloom column is the bulk of
-        // its bytes, and it never reaches the driver; only surviving
-        // entries (bounded by the value's file locality + fpp) do
-        import org.apache.spark.sql.functions.{col, lit => flit}
-        manifestFrame(v)
-          .filter(col("bloom").isNull ||
-            graft.functions.bloom_might_contain(col("bloom"), flit(h)))
-          .orderBy(col("minKey"), col("path")).collect().toSeq
-          .map(r => DataFileEntry(resolvePath(r.getAs[String]("path")),
-            r.getAs[Long]("rows"), r.getAs[Long]("minKey"),
-            r.getAs[Long]("maxKey"), Option(r.getAs[Array[Byte]]("bloom"))))
-      } else
-        manifest(v).filter(f =>
-          f.bloom.forall(b => graft.functions.BloomAlgos.mightContain(b, h)))
+      val colType = schemaOf(v)
+        .flatMap(st => st.fields.find(_.name == indexCol.get).map(_.dataType))
+        .getOrElse(lit0.dataType)
+      val probe = if (lit0.dataType == colType) lit0
+                  else Cast(lit0, colType, Some("UTC"))
+      val h = XxHash64(Seq(probe), 42L).eval(null).asInstanceOf[Long]
+      manifest(v).filter(f =>
+        f.bloom.forall(b => graft.functions.BloomAlgos.mightContain(b, h)))
     }
   }
 
@@ -650,24 +602,20 @@ final class SnapshotStore(
     }
   }
 
-  /** Publish a manifest (new + carried-over entries) as version `v`
-    * and flip the pointer — data files first, manifest second,
-    * pointer last and atomic, so a crash leaves the previous version
-    * intact.
+  /** The manifest header line: schema, rename log, txn watermark and
+    * deletion-vector tag ride it atomically with the version. The
+    * schema, the rename log and the watermark carry forward from the
+    * current version's header (`prior`) when the commit states none.
     */
-  /** The manifest header line: schema/txn ride it atomically with
-    * the version in BOTH representations (the TSV is always written,
-    * so lastTxn/schemaOf/versions never branch on the format).
-    */
-  private def headerLine(txn: Option[Long],
+  private def headerLine(prior: Option[SnapshotStore.Header],
+                         txn: Option[Long],
                          schema: Option[org.apache.spark.sql.types.StructType],
-                         parquetEntries: Boolean,
-                         dv: Option[String] = None,
-                         renames: Option[Seq[(Long, String, String)]] = None)
+                         dv: Option[String],
+                         renames: Option[Seq[(Long, String, String)]])
       : String = {
     // like the txn watermark below, the recorded schema carries
     // forward if a caller ever publishes without one
-    val schemaTag = schema.orElse(currentVersion.flatMap(schemaOf))
+    val schemaTag = schema.orElse(prior.flatMap(_.schema))
       .map(st => " schema=" +
         java.util.Base64.getEncoder.encodeToString(st.json.getBytes("UTF-8")))
       .getOrElse("")
@@ -675,12 +623,11 @@ final class SnapshotStore(
     // or optimize() interleaved with the additive stream): lastTxn
     // reads only the current header, so dropping it here would
     // silently re-open the double-count window the guard closes
-    val effTxn = txn.orElse(lastTxn)
+    val effTxn = txn.orElse(prior.flatMap(_.txn))
     // the rename log carries forward like the schema — files written
     // before a rename outlive many commits, so every version must
     // keep the mapping; only renameColumn itself appends
-    val effRenames = renames
-      .getOrElse(currentVersion.map(renamesOf).getOrElse(Seq.empty))
+    val effRenames = renames.getOrElse(prior.map(_.renames).getOrElse(Seq.empty))
     val renameTag =
       if (effRenames.isEmpty) "" else s" renames=${encodeRenames(effRenames)}"
     // the dv tag does NOT carry forward: absence means "no
@@ -689,8 +636,7 @@ final class SnapshotStore(
     // resurrect tombstones for rewritten files
     s"# graft-manifest v1 key=$keyCol" + schemaTag + renameTag +
       effTxn.map(t => s" txn=$t").getOrElse("") +
-      dv.map(d => s" dv=$d").getOrElse("") +
-      (if (parquetEntries) " entries=parquet" else "")
+      dv.map(d => s" dv=$d").getOrElse("")
   }
 
   /** Optimistic-concurrency commit point (r12 verdict task 5). The
@@ -731,9 +677,8 @@ final class SnapshotStore(
     * name for the header tag, or None when no tombstone survives
     * (the common case: no MoR delete outstanding costs nothing).
     */
-  private def stageDv(v: Long, dvAdd: Option[DataFrame],
+  private def stageDv(v: Long, curDv: Option[DataFrame], dvAdd: Option[DataFrame],
                       survivingRel: DataFrame): Option[(java.nio.file.Path, String)] = {
-    val curDv = currentVersion.flatMap(dvFrame)
     val combined = (curDv, dvAdd) match {
       case (None, None)       => return None
       case (Some(a), Some(b)) => a.unionByName(b)
@@ -768,6 +713,11 @@ final class SnapshotStore(
         org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
     }
 
+  /** Publish a manifest (new + carried-over entries) as version `v`
+    * and flip the pointer — data files first, manifest second,
+    * pointer last and atomic, so a crash leaves the previous version
+    * intact.
+    */
   private def publish(v: Long, entries: Seq[DataFileEntry],
                       txn: Option[Long] = None,
                       schema: Option[org.apache.spark.sql.types.StructType] = None,
@@ -776,23 +726,18 @@ final class SnapshotStore(
                       renames: Option[Seq[(Long, String, String)]] = None)
       : Long = {
     require(entries.nonEmpty, "commit of an empty snapshot is not supported")
-    // past the parquet threshold the entry list stops being
-    // driver-text: land it as the parquet manifest instead (a
-    // growing TSV store auto-migrates at its next publish)
-    if (entries.size > parquetManifestFrom)
-      return publishParquet(v, manifestRowsDf(entries), nonEmpty = true, txn,
-        schema, expectedParent, dvAdd, renames)
+    val prior = currentVersion.map(header)
     // deletion-vector carry: only run the survivor job when a DV
     // exists or this commit adds tombstones — every other publish
     // stays DV-free with zero extra work
+    val curDv = dvFrame(prior.flatMap(_.dv))
     val dvStage =
-      if (dvAdd.isEmpty && currentVersion.flatMap(dvName).isEmpty) None
+      if (dvAdd.isEmpty && curDv.isEmpty) None
       else {
         import spark.implicits._
-        stageDv(v, dvAdd, entries.map(e => relativizePath(e.path)).toDF("path"))
+        stageDv(v, curDv, dvAdd, entries.map(e => relativizePath(e.path)).toDF("path"))
       }
-    val body = (headerLine(txn, schema, parquetEntries = false,
-      dv = dvStage.map(_._2), renames = renames) +:
+    val body = (headerLine(prior, txn, schema, dvStage.map(_._2), renames) +:
       entries.sortBy(e => (e.minKey, e.path))
         // runtime entries carry absolute paths; the manifest ROW is
         // root-relative (see manifest() — relocatability)
@@ -806,12 +751,6 @@ final class SnapshotStore(
     Files.writeString(tmpM, body)
     try withCommitLock {
       casCheck(v, expectedParent)
-      // a crashed publishParquet at this same version may have left a
-      // stale m{v}.parquet with no committed header; remove it before
-      // committing the TSV entry list so nothing can ever shadow it
-      // (manifest dispatch reads the header tag, this keeps disk clean)
-      if (Files.exists(manifestParquet(v)))
-        org.apache.commons.io.FileUtils.deleteDirectory(manifestParquet(v).toFile)
       landDv(dvStage)
       protocol.landFile(tmpM, manifestDir.resolve(s"m$v.tsv"))
       flipPointer(v)
@@ -821,65 +760,6 @@ final class SnapshotStore(
         // orphaned data files are reference-count-collected by the
         // next successful publish's vacuum
         Files.deleteIfExists(tmpM); dropDvStage(dvStage); throw e
-    }
-    vacuum(v)
-    v
-  }
-
-  private def manifestRowsDf(entries: Seq[DataFileEntry]): DataFrame =
-    spark.createDataFrame(entries.map(e =>
-      ManifestRow(relativizePath(e.path), e.rows, e.minKey, e.maxKey,
-        e.bloom.orNull)))
-
-  /** Publish a version whose entry list is a FRAME (new + carried):
-    * the large-table twin of [[publish]] — entries land as parquet
-    * written by Spark (carried entries never round-trip the driver),
-    * the TSV keeps only the header so the pointer/txn/schema
-    * protocol is unchanged, and the commit order (data files →
-    * manifest → header → pointer) keeps every crash point safe.
-    */
-  private def publishParquet(v: Long, allEntries: DataFrame, nonEmpty: Boolean,
-                             txn: Option[Long],
-                             schema: Option[org.apache.spark.sql.types.StructType],
-                             expectedParent: Option[Long] = None,
-                             dvAdd: Option[DataFrame] = None,
-                             renames: Option[Seq[(Long, String, String)]] = None)
-      : Long = {
-    // same invariant as the TSV path: new ∪ carried must be nonEmpty —
-    // a carried-only commit (delete-heavy fold that empties the
-    // affected slice but leaves untouched files) is a legal version
-    require(nonEmpty, "commit of an empty snapshot is not supported")
-    val target = manifestParquet(v)
-    val tmp = manifestDir.resolve(s".m$v.${attemptToken()}.parquet.tmp")
-    allEntries.select(col("path"), col("rows"), col("minKey"), col("maxKey"),
-        col("bloom"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    // deletion-vector carry (same skip-fast discipline as the TSV
-    // path); the survivor set reads the just-staged entry list, so
-    // the DV job never re-executes allEntries' lineage
-    val dvStage =
-      if (dvAdd.isEmpty && currentVersion.flatMap(dvName).isEmpty) None
-      else stageDv(v, dvAdd,
-        Tables.loadCached(spark, tmp.toString).select(col("path")))
-    // re-publish after a crash: clear the stale target before the
-    // atomic move (a directory move cannot REPLACE_EXISTING)
-    try withCommitLock {
-      casCheck(v, expectedParent)
-      if (Files.exists(target))
-        org.apache.commons.io.FileUtils.deleteDirectory(target.toFile)
-      protocol.landDir(tmp, target)
-      landDv(dvStage)
-      val tmpM = manifestDir.resolve(s".m$v.tsv.tmp")
-      Files.writeString(tmpM, headerLine(txn, schema, parquetEntries = true,
-        dv = dvStage.map(_._2), renames = renames))
-      protocol.landFile(tmpM, manifestDir.resolve(s"m$v.tsv"))
-      flipPointer(v)
-    } catch {
-      case e: ConcurrentCommitException =>
-        if (Files.exists(tmp))
-          org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        dropDvStage(dvStage)
-        throw e
     }
     vacuum(v)
     v
@@ -1040,21 +920,10 @@ final class SnapshotStore(
     // which files can a purge key live in — the same elementary-
     // segment pass as the CoW merges (driver traffic bounded by
     // manifest size, never by forget-batch cardinality)
-    val mf = manifestFrame(cur)
-    val ranges: Array[(Long, Long)] =
-      mf.select(col("minKey"), col("maxKey")).as[(Long, Long)].collect()
-    val bnd: Array[Long] =
-      (ranges.map(_._1) ++ ranges.map(_._2 + 1L)).distinct.sorted
-    val hitSegs = hitSegments(keyed, bnd)
-    val hitStarts: Array[Long] = hitSegs
-      .filter(j => j >= 0 && j < bnd.length - 1).map(bnd(_)).sorted
-    if (hitStarts.isEmpty) return cur // no covering file: provably a no-op
-    val hsDf = hitStarts.toSeq.toDF("hs")
-    val cond = col("hs") >= col("minKey") && col("hs") <= col("maxKey")
-    val aff = mf.join(broadcast(hsDf), cond, "left_semi")
-      .select(col("path"), col("minKey"), col("maxKey"))
-    if (aff.isEmpty) return cur // hit segments all in inter-file gaps
-    if (aff.limit(maxPlannedBroadcast + 1).count() > maxPlannedBroadcast)
+    val all = manifest(cur)
+    val affected = splitByHits(all, keyed).fold(Seq.empty[DataFileEntry])(_._1)
+    if (affected.isEmpty) return cur // no covering file: provably a no-op
+    if (affected.size > maxPlannedBroadcast)
       return mergeWith(keyed,
         init = _ => keyed.limit(0),
         fold = (baseAffected, k) =>
@@ -1066,17 +935,15 @@ final class SnapshotStore(
     // and an absent key's tombstone can never match a row — so the
     // DV stays bounded by |batch| × covering-files-per-key (≈1 on a
     // range-clustered table)
+    val aff = affected.map(e => (relativizePath(e.path), e.minKey, e.maxKey))
+      .toDF("path", "minKey", "maxKey")
     val dvAdd = keyed.select(col(keyCol).cast("long").as("key")).distinct()
       .join(broadcast(aff), col("key").between(col("minKey"), col("maxKey")))
       .select(col("path"), col("key"))
     // carried-only commit: every data file carries by reference, only
     // the DV and the header change
-    if (entriesParquet(cur))
-      publishParquet(v, mf, nonEmpty = true, txn, schemaOf(cur),
-        expectedParent = Some(cur), dvAdd = Some(dvAdd))
-    else
-      publish(v, manifest(cur), txn, schemaOf(cur),
-        expectedParent = Some(cur), dvAdd = Some(dvAdd))
+    publish(v, all, txn, schemaOf(cur),
+      expectedParent = Some(cur), dvAdd = Some(dvAdd))
     } finally keyed.unpersist(blocking = false)
   }
 
@@ -1094,7 +961,7 @@ final class SnapshotStore(
   def deletions(): DataFrame = {
     val v = currentVersion.getOrElse(
       throw new IllegalStateException(s"no committed version in $root"))
-    dvFrame(v).getOrElse {
+    dvFrame(dvName(v)).getOrElse {
       import org.apache.spark.sql.types._
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1138,12 +1005,8 @@ final class SnapshotStore(
     val newSchema = org.apache.spark.sql.types.StructType(
       st.fields.map(f => if (f.name == from) f.copy(name = to) else f))
     val log = renamesOf(cur) :+ ((v, from, to))
-    if (entriesParquet(cur))
-      publishParquet(v, manifestFrame(cur), nonEmpty = true, txn,
-        Some(newSchema), expectedParent = Some(cur), renames = Some(log))
-    else
-      publish(v, manifest(cur), txn, Some(newSchema),
-        expectedParent = Some(cur), renames = Some(log))
+    publish(v, manifest(cur), txn, Some(newSchema),
+      expectedParent = Some(cur), renames = Some(log))
   }
 
   /** Dim-update propagation (incremental view maintenance, r14): the
@@ -1153,10 +1016,11 @@ final class SnapshotStore(
     * across the key space, so key-range planning cannot prune — but
     * the SECONDARY BLOOM INDEX on the dim column can: file hits are
     * the blobs that might contain an affected dim key (probed with
-    * the same xxhash64 the write-side stats job used, distributed
-    * over the manifest frame, delta hashes broadcast — dim deltas
-    * are batch-bounded by nature), those files alone are read and
-    * re-folded through `fold(affectedRows, dimDelta)`, everything
+    * the same xxhash64 the write-side stats job used, on the driver
+    * against the manifest's blobs — dim deltas are batch-bounded by
+    * nature, so their distinct hashes are collected), those files
+    * alone are read and re-folded through `fold(affectedRows,
+    * dimDelta)`, everything
     * else carries by reference. Bloom false positives cost an
     * identical-content rewrite of the extra file, never wrongness;
     * false negatives cannot occur (write-side and probe hashing are
@@ -1191,64 +1055,33 @@ final class SnapshotStore(
         col(indexCol.get).cast(t)
       case _ => col(indexCol.get)
     }
-    val probes = dimDelta.select(xxhash64(dimProbe).as("h")).distinct()
-    // fat-delta guard (r14 verdict task 5): the Bloom plan broadcasts
-    // the distinct probe-hash set and tests it against every file's
-    // blob — O(files × probes). For the designed dim-delta shape
-    // (dozens-to-thousands of keys) that is the cheap path; a
-    // backfill-sized delta against a 10⁵-file manifest would mean a
-    // driver-sized broadcast and 10⁹⁺ bloom probes. Past the bound
-    // the index stops paying for itself anyway (most files hit), so
-    // fall back to the FULL fold: every file affected, carried =
-    // none, one plain full-snapshot publish. The guard itself is a
-    // limit+count — the driver stays bounded in both regimes.
-    lastIndexMergeFallback =
-      probes.limit(maxPlannedBroadcast + 1).count() > maxPlannedBroadcast
+    // fat-delta guard (r14 verdict task 5): the Bloom plan tests the
+    // distinct probe-hash set against every file's blob — O(files ×
+    // probes). For the designed dim-delta shape (dozens-to-thousands
+    // of keys) that is the cheap path; a backfill-sized delta would
+    // mean a driver-sized probe set. Past the bound the index stops
+    // paying for itself anyway (most files hit), so fall back to the
+    // FULL fold: every file affected, carried = none, one plain
+    // full-snapshot publish. The guard collects at most one hash past
+    // the bound — the driver stays bounded in both regimes.
+    val probes: Array[Long] = dimDelta.select(xxhash64(dimProbe)).distinct()
+      .limit(maxPlannedBroadcast + 1).as[Long].collect()
+    lastIndexMergeFallback = probes.length > maxPlannedBroadcast
     if (lastIndexMergeFallback) {
       val folded = fold(readVersion(cur), dimDelta)
       return publish(v, writeDataFiles(folded, v), txn, Some(folded.schema),
         expectedParent = Some(cur))
     }
-    val mf = manifestFrame(cur)
-    val mightHit = col("bloom").isNull ||
-      graft.functions.bloom_might_contain(col("bloom"), col("h"))
-    // only AFFECTED paths reach the driver — bounded by the delta's
-    // file locality + fpp, never by the table's file count (the
-    // mergeLarge planning discipline; the probe join runs over the
-    // manifest frame, so at 10⁵-10⁶ files the Bloom blobs never move)
-    val affectedPaths = mf.crossJoin(broadcast(probes)).filter(mightHit)
-      .select(col("path")).distinct().as[String].collect().toSeq
-    if (affectedPaths.isEmpty) return cur // no file can hold any affected key
-    val folded = fold(readFiles(cur, affectedPaths.map(resolvePath)), dimDelta)
-    // evolution guard, fast-pathed: dim folds normally preserve the
-    // schema (free StructType compare); only a reshaping fold pays
-    // the carried-existence check + validation
-    if (schemaOf(cur).exists(_ != folded.schema)) {
-      val hasCarried =
-        if (entriesParquet(cur))
-          !mf.join(broadcast(affectedPaths.toDF("path")), Seq("path"),
-            "left_anti").isEmpty
-        else manifest(cur).size > affectedPaths.length
-      if (hasCarried)
-        schemaOf(cur).foreach(validateCarriedEvolution(_, folded.schema))
-    }
-    val newEntries = writeDataFiles(folded, v)
-    if (entriesParquet(cur)) {
-      // parquet-manifest twin: carried entries stay a FRAME end-to-end
-      val hitDf = affectedPaths.toDF("path")
-      val carried = mf.join(broadcast(hitDf), Seq("path"), "left_anti")
-      publishParquet(v, carried.unionByName(manifestRowsDf(newEntries)),
-        // carried nonEmpty iff some file was NOT affected (the count
-        // only runs in the rare empty-fold case, by laziness)
-        nonEmpty = newEntries.nonEmpty || mf.count() > affectedPaths.length,
-        txn, Some(folded.schema), expectedParent = Some(cur))
-    } else {
-      val hitSet = affectedPaths.toSet
-      val carried = manifest(cur).filterNot(e =>
-        hitSet.contains(relativizePath(e.path)) || hitSet.contains(e.path))
-      publish(v, newEntries ++ carried, txn,
-        Some(folded.schema), expectedParent = Some(cur))
-    }
+    // a file is affected when some probe might be in its blob (a file
+    // with no blob is conservatively affected)
+    val (affected, carried) = manifest(cur).partition(e => probes.exists(h =>
+      e.bloom.forall(b => graft.functions.BloomAlgos.mightContain(b, h))))
+    if (affected.isEmpty) return cur // no file can hold any affected key
+    val folded = fold(readFiles(cur, affected.map(_.path)), dimDelta)
+    if (carried.nonEmpty)
+      schemaOf(cur).foreach(validateCarriedEvolution(_, folded.schema))
+    publish(v, writeDataFiles(folded, v) ++ carried, txn,
+      Some(folded.schema), expectedParent = Some(cur))
   }
 
   /** Schema-evolution validation for COMMITS THAT CARRY FILES (r15):
@@ -1363,44 +1196,12 @@ final class SnapshotStore(
         // would trip publish's non-empty invariant); report no-version
         if (keyed.isEmpty) -1L
         else commitAs(init(keyed), txn, basis = None)
-      case Some(cur) if entriesParquet(cur) =>
-        mergeLarge(cur, keyed, fold, txn, deleteOnly)
       case Some(cur) =>
         val v = cur + 1L
         val all = manifest(cur)
-        // Which stored files does the delta touch? The delta's
-        // distinct-key set can be BACKFILL-sized (1e8+ keys), so it
-        // must never materialize on the driver. Instead, decompose
-        // the manifest's file key-ranges into ELEMENTARY SEGMENTS —
-        // the boundaries are the sorted distinct endpoints, at most
-        // 2×files of them, and every segment lies either fully inside
-        // or fully outside each file's range. A distributed pass maps
-        // every delta key to its segment (per-partition binary
-        // search + local dedup), and only each partition's HIT
-        // SEGMENTS come back to the driver: the collected summary is
-        // bounded by partitions × manifest size, never by delta
-        // cardinality, and the file-hit decision it yields is EXACT
-        // (a file is hit iff some hit segment starts within its
-        // range), not a conservative over-approximation.
-        val bnd: Array[Long] =
-          (all.map(_.minKey) ++ all.map(_.maxKey + 1L)).distinct.sorted.toArray
-        val hitSegs: Array[Int] = hitSegments(keyed, bnd)
-        if (hitSegs.isEmpty) return cur // empty fold: no version churn
-        // segment j covers [bnd(j), bnd(j+1)); j = -1 (below all
-        // files) and j = len-1 (above: the top boundary is
-        // max(maxKey)+1) can hit nothing but still witness "delta
-        // has keys"
-        val hitStarts: Array[Long] = hitSegs
-          .filter(j => j >= 0 && j < bnd.length - 1).map(bnd(_)).sorted
-        def hit(f: DataFileEntry): Boolean = {
-          // any hit-segment start within [minKey, maxKey]? (file
-          // endpoints are themselves boundaries, so a segment
-          // containing a key of this file necessarily starts here)
-          val i = java.util.Arrays.binarySearch(hitStarts, f.minKey)
-          val from = if (i >= 0) i else -i - 1
-          from < hitStarts.length && hitStarts(from) <= f.maxKey
-        }
-        val (affected, carried) = all.partition(hit)
+        val split = splitByHits(all, keyed)
+        if (split.isEmpty) return cur // empty fold: no version churn
+        val (affected, carried) = split.get
         if (deleteOnly && affected.isEmpty) return cur // no-op purge
         // read the affected slice through readFiles (the manifest
         // schema), NEVER raw parquet: after an evolution, a raw read
@@ -1426,12 +1227,50 @@ final class SnapshotStore(
     }
   }
 
-  /** The distributed delta→segment pass shared by both merge paths:
-    * map every delta key to its elementary segment (per-partition
-    * binary search + local dedup) and return only the DISTINCT hit
-    * segments. One job, no shuffle: each partition sends its deduped
-    * segment ids and the driver takes the distinct, so driver traffic
-    * is bounded by partitions × segments, never by delta cardinality.
+  /** Which stored files does a delta touch? Splits a manifest into
+    * (affected, carried); None when the delta has no keys at all.
+    *
+    * The delta's distinct-key set can be BACKFILL-sized (1e8+ keys),
+    * so it must never materialize on the driver. Instead, decompose
+    * the manifest's file key-ranges into ELEMENTARY SEGMENTS — the
+    * boundaries are the sorted distinct endpoints, at most 2×files of
+    * them, and every segment lies either fully inside or fully outside
+    * each file's range. [[hitSegments]] maps every delta key to its
+    * segment in one distributed pass and returns only the hit
+    * segments, so the file-hit decision it yields is EXACT (a file is
+    * hit iff some hit segment starts within its range), not a
+    * conservative over-approximation.
+    */
+  private def splitByHits(all: Seq[DataFileEntry], keyed: DataFrame)
+      : Option[(Seq[DataFileEntry], Seq[DataFileEntry])] = {
+    val bnd: Array[Long] =
+      (all.map(_.minKey) ++ all.map(_.maxKey + 1L)).distinct.sorted.toArray
+    val hitSegs: Array[Int] = hitSegments(keyed, bnd)
+    if (hitSegs.isEmpty) None
+    else {
+      // segment j covers [bnd(j), bnd(j+1)); j = -1 (below all files)
+      // and j = len-1 (above: the top boundary is max(maxKey)+1) can
+      // hit nothing but still witness "delta has keys"
+      val hitStarts: Array[Long] = hitSegs
+        .filter(j => j >= 0 && j < bnd.length - 1).map(bnd(_)).sorted
+      def hit(f: DataFileEntry): Boolean = {
+        // any hit-segment start within [minKey, maxKey]? (file
+        // endpoints are themselves boundaries, so a segment
+        // containing a key of this file necessarily starts here)
+        val i = java.util.Arrays.binarySearch(hitStarts, f.minKey)
+        val from = if (i >= 0) i else -i - 1
+        from < hitStarts.length && hitStarts(from) <= f.maxKey
+      }
+      Some(all.partition(hit))
+    }
+  }
+
+  /** The distributed delta→segment pass behind [[splitByHits]]: map
+    * every delta key to its elementary segment (per-partition binary
+    * search + local dedup) and return only the DISTINCT hit segments.
+    * One job, no shuffle: each partition sends its deduped segment ids
+    * and the driver takes the distinct, so driver traffic is bounded
+    * by partitions × segments, never by delta cardinality.
     */
   private def hitSegments(keyed: DataFrame, bnd: Array[Long]): Array[Int] = {
     val bndB = spark.sparkContext.broadcast(bnd)
@@ -1457,77 +1296,15 @@ final class SnapshotStore(
     } finally bndB.unpersist(blocking = false)
   }
 
-  /** The copy-on-write merge against a PARQUET-backed manifest — the
-    * 10⁵-10⁶-file regime (r10 verdict task 3). Differences from the
-    * TSV path, all about what touches the driver:
-    *   - boundaries come from a column-pruned (minKey, maxKey) scan
-    *     of the manifest frame — 16 bytes/file, the Bloom blobs and
-    *     paths never move for planning;
-    *   - the file-hit decision is a distributed broadcast semi-join
-    *     of the manifest frame against the (delta-local) hit-segment
-    *     starts; only AFFECTED paths are collected — bounded by the
-    *     delta's key locality, not the table's file count;
-    *   - carried entries stay a frame end-to-end: the new manifest
-    *     is carried ∪ new written by Spark, so commit cost on the
-    *     driver is O(affected), sublinear in file count.
-    */
-  private def mergeLarge(cur: Long, keyed: DataFrame,
-                         fold: (DataFrame, DataFrame) => DataFrame,
-                         txn: Option[Long],
-                         deleteOnly: Boolean = false): Long = {
-    import keyed.sparkSession.implicits._
-    val v = cur + 1L
-    val mf = manifestFrame(cur)
-    val ranges: Array[(Long, Long)] =
-      mf.select(col("minKey"), col("maxKey")).as[(Long, Long)].collect()
-    val bnd: Array[Long] =
-      (ranges.map(_._1) ++ ranges.map(_._2 + 1L)).distinct.sorted
-    val hitSegs = hitSegments(keyed, bnd)
-    if (hitSegs.isEmpty) return cur // empty fold: no version churn
-    val hitStarts: Array[Long] = hitSegs
-      .filter(j => j >= 0 && j < bnd.length - 1).map(bnd(_)).sorted
-    val hsDf = hitStarts.toSeq.toDF("hs")
-    val cond = col("hs") >= col("minKey") && col("hs") <= col("maxKey")
-    val affectedPaths = mf.join(broadcast(hsDf), cond, "left_semi")
-      .select(col("path")).as[String].collect().toSeq.map(resolvePath)
-    if (deleteOnly && affectedPaths.isEmpty) return cur // no-op purge
-    val carried = mf.join(broadcast(hsDf), cond, "left_anti")
-    val baseAffected =
-      if (affectedPaths.isEmpty)
-        // no file covers any delta key (all-new keys): an empty
-        // keyed base of the stored schema, built WITHOUT touching a
-        // data file (manifests at this scale always record a schema)
-        schemaOf(cur).map(st => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st))
-          .getOrElse(readFiles(cur,
-            Seq(resolvePath(mf.select(col("path")).as[String].head()))).limit(0))
-      else readFiles(cur, affectedPaths)
-    val folded = fold(baseAffected, keyed)
-    if (affectedPaths.length < ranges.length) // some file carries
-      schemaOf(cur).foreach(validateCarriedEvolution(_, folded.schema))
-    val newEntries = writeDataFiles(folded, v)
-    publishParquet(v,
-      carried.unionByName(manifestRowsDf(newEntries)),
-      // carried is nonEmpty iff some manifest file was NOT affected
-      nonEmpty = newEntries.nonEmpty || affectedPaths.length < ranges.length,
-      txn, Some(folded.schema), expectedParent = Some(cur))
-  }
-
   /** Committed versions still readable (oldest first) — time travel
     * surface: `readVersion(v)` on any of these is snapshot-isolated.
     */
   def versions(): Seq[Long] = {
+    val manifestName = "m(\\d+)\\.tsv".r
     val ml = Files.list(manifestDir)
-    try {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      ml.forEach { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("m") && name.endsWith(".tsv") &&
-            name.stripPrefix("m").stripSuffix(".tsv").forall(_.isDigit))
-          buf += name.stripPrefix("m").stripSuffix(".tsv").toLong
-      }
-      buf.sorted.toSeq
-    } finally ml.close()
+    try ml.iterator().asScala.map(_.getFileName.toString)
+      .collect { case manifestName(n) => n.toLong }.toVector.sorted
+    finally ml.close()
   }
 
   /** Change feed between two committed versions — what downstream
@@ -1598,45 +1375,13 @@ final class SnapshotStore(
     // immediately yanks the directory out from under a live write
     // (r17: the two-writer race began failing once the winner reached
     // vacuum one job sooner).
-    val droppedRefs: Set[String] = {
-      val vs = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val ml = Files.list(manifestDir)
-      try ml.forEach { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("m") && name.endsWith(".tsv") &&
-            name.stripPrefix("m").stripSuffix(".tsv").forall(_.isDigit) &&
-            name.stripPrefix("m").stripSuffix(".tsv").toLong <= cutoff)
-          vs += name.stripPrefix("m").stripSuffix(".tsv").toLong
-      } finally ml.close()
-      vs.flatMap(v => manifestLite(v).map(e => normalizePath(e.path))).toSet
-    }
-    val mlisting = Files.list(manifestDir)
-    try mlisting.forEach { p =>
-      val name = p.getFileName.toString
-      if (name.startsWith("m") && name.endsWith(".tsv") &&
-          name.stripPrefix("m").stripSuffix(".tsv").forall(_.isDigit) &&
-          name.stripPrefix("m").stripSuffix(".tsv").toLong <= cutoff) {
-        Files.deleteIfExists(p)
-        // a parquet-backed version drops its entry frame with it
-        val pq = manifestParquet(name.stripPrefix("m").stripSuffix(".tsv").toLong)
-        if (Files.exists(pq))
-          org.apache.commons.io.FileUtils.deleteDirectory(pq.toFile)
-      }
-    } finally mlisting.close()
-    // union of paths still referenced by any retained manifest
-    val retainedVersions: Seq[Long] = {
-      val ml = Files.list(manifestDir)
-      try {
-        val versions = scala.collection.mutable.ArrayBuffer.empty[Long]
-        ml.forEach { p =>
-          val name = p.getFileName.toString
-          if (name.startsWith("m") && name.endsWith(".tsv") &&
-              name.stripPrefix("m").stripSuffix(".tsv").forall(_.isDigit))
-            versions += name.stripPrefix("m").stripSuffix(".tsv").toLong
-        }
-        versions.toSeq
-      } finally ml.close()
-    }
+    val dropped = versions().filter(_ <= cutoff)
+    val droppedRefs: Set[String] =
+      dropped.flatMap(v => manifestLite(v).map(e => normalizePath(e.path))).toSet
+    dropped.foreach(v => Files.deleteIfExists(manifestDir.resolve(s"m$v.tsv")))
+    // union of paths still referenced by any retained manifest (listed
+    // again, so a version committed meanwhile counts as retained)
+    val retainedVersions = versions()
     val retained: Set[String] =
       retainedVersions.flatMap(manifestLite(_).map(e => normalizePath(e.path))).toSet
     // deletion vectors are version-owned: drop any committed
@@ -1770,6 +1515,12 @@ final class ConcurrentCommitException(msg: String, cause: Throwable = null)
   extends RuntimeException(msg, cause)
 
 object SnapshotStore {
+  /** The fields of one manifest header line. */
+  private final case class Header(txn: Option[Long],
+                                  schema: Option[org.apache.spark.sql.types.StructType],
+                                  renames: Seq[(Long, String, String)],
+                                  dv: Option[String])
+
   /** A dot-prefixed `_deletes` staging dir older than this belongs to
     * a crashed writer (a live stage→land window is seconds) and is
     * reclaimed by vacuum. Spec-visible so the orphan case can age a

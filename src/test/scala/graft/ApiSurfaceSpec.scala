@@ -8,7 +8,7 @@ import graft.operators.TypedAggs
 import graft.sources.Tables
 
 /** SQL + typed-Dataset API surfaces. */
-class ApiSurfaceSpec extends AnyFunSuite {
+class ApiSurfaceSpec extends AnyFunSuite with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -231,7 +231,7 @@ class ApiSurfaceSpec extends AnyFunSuite {
     // per-segment binary sketches, round-tripped through parquet
     // (the store-then-merge lifecycle the sketch column exists for),
     // then merged back
-    val dir = java.nio.file.Files.createTempDirectory("hll-seg").toString
+    val dir = tempDir("hll-seg").toString
     rows.groupBy(col("seg")).agg(graft.functions.hll_sketch(col("k")).as("sk"))
       .write.mode("overwrite").parquet(dir)
     val merged = spark.read.parquet(dir)

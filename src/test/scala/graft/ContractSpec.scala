@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Guards on the driver contract itself: these failing means the
   * round's gate breaks regardless of operator correctness.
   */
-class ContractSpec extends AnyFunSuite {
+class ContractSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local(cores = 4, appName = "contract-spec")
 
@@ -262,7 +262,7 @@ class ContractSpec extends AnyFunSuite {
     import graft.sources.DerivedTable
     val sf = "/root/testdata/sf0.001"
     // another graft process's files under the shared tmpdir
-    val foreign = Files.createTempDirectory(Paths.get(sys.props("java.io.tmpdir")), "graft-x")
+    val foreign = tempDir("graft-x")
     Files.writeString(foreign.resolve("marker"), "not this session's")
     try {
       var builds = 0

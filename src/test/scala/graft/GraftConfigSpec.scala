@@ -16,17 +16,14 @@ import graft.streaming.CdcStream
   * verbatim (minus the two named keys), and a stream driver started
   * from config lands its state under the configured roots.
   */
-class GraftConfigSpec extends AnyFunSuite {
+class GraftConfigSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession =
     GraftSession.local(cores = 4, appName = "config-spec")
 
-  private def tmp(p: String) = {
-    val d = Files.createTempDirectory(p); d.toFile.deleteOnExit(); d
-  }
 
   test("an empty properties file is a valid deployment (all defaults)") {
-    val f = tmp("cfg").resolve("empty.properties")
+    val f = tempDir("cfg").resolve("empty.properties")
     Files.writeString(f, "")
     assert(GraftConfig.load(f.toString) === GraftConfig())
   }
@@ -40,7 +37,7 @@ class GraftConfigSpec extends AnyFunSuite {
       kafkaOptions = Map(
         "kafka.ssl.keystore.location" -> "/etc/ks.jks",
         "kafka.security.protocol" -> "SSL"))
-    val f = tmp("cfg").resolve("full.properties").toString
+    val f = tempDir("cfg").resolve("full.properties").toString
     cfg.save(f)
     assert(GraftConfig.load(f) === cfg)
   }
@@ -71,7 +68,7 @@ class GraftConfigSpec extends AnyFunSuite {
   }
 
   test("fromEnv reads GRAFT_CONF when set, defaults otherwise") {
-    val f = tmp("cfg").resolve("env.properties").toString
+    val f = tempDir("cfg").resolve("env.properties").toString
     GraftConfig(triggerMs = 333L).save(f)
     assert(GraftConfig.fromEnv(Map("GRAFT_CONF" -> f)).triggerMs === 333L)
     assert(GraftConfig.fromEnv(Map.empty) === GraftConfig())
@@ -85,7 +82,7 @@ class GraftConfigSpec extends AnyFunSuite {
   }
 
   test("a CDC stream started from config lands state under the configured roots") {
-    val work = tmp("cfg-stream")
+    val work = tempDir("cfg-stream")
     val cfg = GraftConfig(
       checkpointRoot = work.resolve("ckpts").toString,
       storeRoot = work.resolve("stores").toString,

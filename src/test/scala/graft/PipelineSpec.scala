@@ -12,7 +12,7 @@ import graft.text.TextAnalysis
 /** C-block behavior that the SQL oracle can't check: LSH recall,
   * SimHash detection, custom-expression codegen, multimodal batching.
   */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = GraftSession.local(cores = 4, appName = "pipeline-spec")
@@ -520,7 +520,7 @@ class PipelineSpec extends AnyFunSuite {
     val emb = Tables(spark, sf).embeddings
     val queries = emb.limit(8)
     val direct = Ann.ivfPqTopK(emb, queries, topK = 5).collect().toSeq
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-annidx").toString
+    val idxDir = tempDir("graft-annidx").toString
     Ann.saveIvfPqIndex(Ann.buildIvfPqIndex(emb), idxDir)
     val loaded = Ann.loadIvfPqIndex(spark, idxDir)
     // the loaded index must reproduce the direct composition exactly
@@ -555,7 +555,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("interchange: CSV and JSON round-trips are lossless; PERMISSIVE quarantines bad lines") {
     import graft.sources.Writers
-    val tmp = java.nio.file.Files.createTempDirectory("graft-io")
+    val tmp = tempDir("graft-io")
     def same(a: DataFrame, b: DataFrame): Unit = {
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         "round-trip not lossless")

@@ -14,7 +14,7 @@ import graft.streaming.KafkaCdcSource
   * products) are pinned here so a regression shows up as a red test,
   * not as a 100 TB incident.
   */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = GraftSession.local(cores = 4, appName = "plan-spec")
@@ -264,7 +264,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // clusters its output files: the written plan shuffles base ∪ delta
     // once, with no hash exchange for a join and no cached fold
     val store = new graft.store.SnapshotStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-plan").toString, "user_id")
+      tempDir("graft-plan").toString, "user_id")
     val parsed = CdcOps.parse(ChangeModel.changeLines(Tables(spark, sf).events))
     store.merge(parsed.filter(pmod(col("id"), lit(3)) =!= 0))
     val (_, rec) = SparkEvents.record(spark)(
@@ -484,7 +484,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("date-partitioned writes prune partitions on read") {
-    val out = java.nio.file.Files.createTempDirectory("graft-part")
+    val out = tempDir("graft-part")
     graft.sources.Writers.writeEventsByDay(Tables(spark, sf).events, out.toString)
     val read = spark.read.parquet(out.toString)
       .filter(col("event_date") === "2024-01-05")

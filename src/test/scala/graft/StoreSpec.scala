@@ -12,7 +12,7 @@ import graft.store.SnapshotStore
   * against the one-shot snapshot semantics (q_cdc_upsert's oracle),
   * snapshot isolation, manifest key-range pruning, vacuum retention.
   */
-class StoreSpec extends AnyFunSuite {
+class StoreSpec extends AnyFunSuite with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = GraftSession.local(cores = 4, appName = "store-spec")
@@ -21,7 +21,7 @@ class StoreSpec extends AnyFunSuite {
     CdcOps.parse(ChangeModel.changeLines(Tables(spark, sf).events))
 
   private def newRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft-store").toString
+    tempDir("graft-store").toString
 
   private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     val cols = a.columns.sorted.map(col).toSeq
@@ -248,21 +248,6 @@ class StoreSpec extends AnyFunSuite {
     assert(store.currentVersion.contains(vBefore))
     assert(store.read().get
       .filter(col("tenant") === 3L && col("tier") =!= 1000L).isEmpty)
-    // parquet-manifest twin: same fold, carried entries stay a frame
-    val pq = new SnapshotStore(spark, newRoot(), "k", filesPerCommit = 8,
-      indexCol = Some("tenant"), parquetManifestFrom = 0)
-    pq.commit(facts)
-    pq.mergeByIndex(delta, (affected, d) =>
-      affected.join(broadcast(d), Seq("tenant"), "left")
-        .select(col("k"), col("tenant"),
-          coalesce(col("new_tier"), col("tier")).as("tier")), txn = Some(1L))
-    val gotPq = pq.read().get
-    assert(gotPq.count() === 800)
-    assert(gotPq.filter(col("tenant") === 3L && col("tier") =!= 999L).isEmpty)
-    val pqCarried = pq.manifest(1L).map(_.path).toSet
-      .intersect(pq.manifest(0L).map(_.path).toSet)
-    assert(pqCarried.nonEmpty && pqCarried.size < pq.manifest(0L).size,
-      "parquet-manifest mergeByIndex must also prune")
   }
 
   test("optimize rewrites the fragmented table into the target file count") {
@@ -556,35 +541,26 @@ class StoreSpec extends AnyFunSuite {
       CdcOps.softDeleteSnapshot(log, col("user_id")))
   }
 
-  /** Build a parquet-manifest store whose v0 carries `n` SYNTHETIC
-    * entries (fake paths, key ranges far above the real data) on top
-    * of 4 real files over keys 0..999 — a 10⁵-file table fixture
-    * without writing 10⁵ real files. Planning must never read the
-    * fake paths as long as deltas stay inside the real key range.
+  /** Build a store whose v0 manifest carries `n` SYNTHETIC entries
+    * (fake paths, key ranges far above the real data), appended as
+    * lines to `m0.tsv`, on top of 4 real files over keys 0..999 — a
+    * 10⁵-file table fixture without writing 10⁵ real files. Planning
+    * must never read the fake paths as long as deltas stay inside the
+    * real key range.
     */
-  private def syntheticManifestStore(
-      n: Int,
-      proto: graft.store.CommitProtocol = graft.store.AtomicRenameCommit)
-      : SnapshotStore = {
+  private def syntheticManifestStore(n: Int): SnapshotStore = {
     import spark.implicits._
     val root = newRoot()
-    val store = new SnapshotStore(spark, root, "k", parquetManifestFrom = 2,
-      protocol = proto)
+    val store = new SnapshotStore(spark, root, "k")
     store.commit((0L until 1000L).map(k => (k, k * 2)).toDF("k", "a"))
-    val pq = s"$root/_manifests/m0.parquet"
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(pq)),
-      "threshold 2 must land v0 as a parquet manifest")
-    val synth = spark.range(n).select(
-      concat(lit("data/v0/synthetic-"), col("id"), lit(".parquet")).as("path"),
-      lit(10L).as("rows"),
-      (lit(1000000L) + col("id") * 10L).as("minKey"),
-      (lit(1000000L) + col("id") * 10L + 9L).as("maxKey"),
-      lit(null).cast("binary").as("bloom"))
-    spark.read.parquet(pq).unionByName(synth)
-      .write.mode("overwrite").parquet(pq + ".next")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(pq))
-    java.nio.file.Files.move(java.nio.file.Paths.get(pq + ".next"),
-      java.nio.file.Paths.get(pq))
+    val m0 = java.nio.file.Paths.get(root, "_manifests", "m0.tsv")
+    val synth = (0 until n).map { i =>
+      val lo = 1000000L + i * 10L
+      s"\ndata/v0/synthetic-$i.parquet\t10\t$lo\t${lo + 9L}"
+    }.mkString
+    java.nio.file.Files.writeString(m0, synth,
+      java.nio.file.StandardOpenOption.APPEND)
+    assert(store.manifest(0L).size == n + 4)
     store
   }
 
@@ -592,7 +568,7 @@ class StoreSpec extends AnyFunSuite {
     (b, d) => d.unionByName(b.join(d.select(col("k").as("dk")),
       col("k") === col("dk"), "left_anti").drop("dk"))
 
-  test("parquet manifest: 1e5-file merge planning is delta-local and sublinear in file count") {
+  test("1e5-entry manifest: merge planning is delta-local and sublinear") {
     import spark.implicits._
     def mergeOnce(store: SnapshotStore): Double = {
       val delta = (0L until 50L).map(k => (k, k * 7)).toDF("k", "a")
@@ -605,127 +581,62 @@ class StoreSpec extends AnyFunSuite {
     val big = syntheticManifestStore(100000)
     val tBig = mergeOnce(big)
     assert(big.currentVersion.contains(1L))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"${big.root}/_manifests/m1.parquet")),
-      "large merge must publish a parquet manifest")
     // planning summary stays delta-local: the collected hit-segment
     // count is independent of the 10⁵ carried entries
     assert(big.lastMergeSummaryRows > 0 && big.lastMergeSummaryRows <= 8,
       s"summary rows ${big.lastMergeSummaryRows} not delta-local")
     // carried entries survived by reference: v1 = 10⁵ synthetic +
     // unaffected real + filesPerCommit rewritten
-    val m1 = big.manifestFrame(1L)
-    assert(m1.filter(col("path").contains("synthetic-")).count() == 100000L)
-    assert(m1.count() < 100000L + 10L)
-    // merge correctness through the large path (read only the real
+    val m1 = big.manifest(1L)
+    assert(m1.count(_.path.contains("synthetic-")) == 100000)
+    assert(m1.size < 100000 + 10)
+    // merge correctness on the large manifest (read only the real
     // key range — the synthetic paths are fixture, not data)
     val merged = big.readRange(0L, 999L)
     assert(merged.count() == 1000L)
     assert(merged.filter(col("k") === 5L).select(col("a")).as[Long].head() == 35L)
     // sublinear: 10x the manifest must NOT cost ~10x the merge — the
-    // delta work is O(log files) and the carried rewrite is a
-    // distributed column copy (generous 6x bound + noise floor
-    // absorbs job-launch variance on a shared host)
+    // delta work is O(log files) per key and the carried entries are
+    // one driver-side pass over the manifest lines (generous 6x bound
+    // + noise floor absorbs job-launch variance on a shared host)
     assert(tBig < tSmall * 6.0 + 1.0,
       s"merge at 1e5 files took ${tBig}s vs ${tSmall}s at 1e4 — not sublinear")
   }
 
-  test("parquet manifest: pointer protocol, txn watermark and schema survive the format") {
+  test("1e4-entry manifest: txn watermark, schema and replay guard hold") {
     import spark.implicits._
     val store = syntheticManifestStore(10000)
     val delta = (0L until 10L).map(k => (k, k * 9)).toDF("k", "a")
     store.mergeWith(delta, identity[DataFrame], lastWriteWins, txn = Some(7L))
-    assert(store.lastTxn.contains(7L), "txn must ride the header TSV")
+    assert(store.lastTxn.contains(7L), "txn must ride the manifest header")
     assert(store.schemaOf(1L).exists(_.fieldNames.sameElements(Array("k", "a"))))
     // replaying the same txn id is a no-op (the guard reads the
-    // header, not the parquet body)
+    // header line, not the entry lines)
     val v = store.mergeWith(delta, identity[DataFrame], lastWriteWins, txn = Some(7L))
     assert(v == 1L && store.currentVersion.contains(1L))
   }
 
-  protocols.foreach { case (pname, proto) =>
-  test(s"parquet manifest publish is crash-safe at both commit points [$pname]") {
+  test("a manifest in the retired parquet entry-list format fails loudly, by name") {
     import spark.implicits._
-    val store = syntheticManifestStore(10000, proto)
-    val delta = (0L until 50L).map(k => (k, k * 7)).toDF("k", "a")
-    store.mergeWith(delta, identity[DataFrame], lastWriteWins)
-    assert(store.currentVersion.contains(1L))
-    val mdir = java.nio.file.Paths.get(s"${store.root}/_manifests")
-    // CRASH POINT A: m1.parquet landed, but neither the header TSV
-    // nor the pointer — the store must still serve v0, and a
-    // re-publish of v1 must succeed over the stale parquet dir
-    java.nio.file.Files.delete(mdir.resolve("m1.tsv"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"${store.root}/LATEST"), "0")
-    assert(store.currentVersion.contains(0L))
-    assert(store.readRange(0L, 999L).count() == 1000L)
-    store.mergeWith(delta, identity[DataFrame], lastWriteWins)
-    assert(store.currentVersion.contains(1L))
-    assert(store.readRange(0L, 999L)
-      .filter(col("k") === 5L).select(col("a")).as[Long].head() == 35L)
-    // CRASH POINT B: manifest (both forms) landed, pointer not
-    // flipped — v0 serves; the completed v1 manifest is intact
-    // (entries parse; a real-file fixture could time-travel read
-    // it); a re-merge converges to the same v1
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"${store.root}/LATEST"), "0")
-    assert(store.currentVersion.contains(0L))
-    assert(store.manifest(1L).size > 10000)
-    assert(store.schemaOf(1L).isDefined)
-    store.mergeWith(delta, identity[DataFrame], lastWriteWins)
-    assert(store.currentVersion.contains(1L))
-    assert(store.manifestFrame(1L)
-      .filter(col("path").contains("synthetic-")).count() == 10000L)
-  }
-  } // protocols.foreach (crash-safe publish)
-
-  test("parquet manifest: secondary-index point planning probes blobs in Spark") {
-    import spark.implicits._
-    val store = new SnapshotStore(spark, newRoot(), "k",
-      indexCol = Some("grp"), parquetManifestFrom = 2)
-    store.commit((0L until 1000L).map(k => (k, s"g${k / 250}", k))
-      .toDF("k", "grp", "payload"))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"${store.root}/_manifests/m0.parquet")))
-    val all = store.manifest(0L)
-    assert(all.size == 4 && all.forall(_.bloom.isDefined))
-    // the distributed probe path prunes like the driver path: a
-    // clustered group plans a strict subset, exactness holds, and an
-    // absent value reads empty
-    assert(store.plannedFilesPoint("g0").size < all.size)
-    assertSameRows(store.readPoint("g2"),
-      store.read().get.filter(col("grp") === "g2"))
-    assert(store.readPoint("absent").count() == 0L)
-  }
-
-  test("a crashed parquet publish never shadows a TSV commit at the same version") {
-    import spark.implicits._
-    // TSV-regime store (default threshold). Simulate a publishParquet
-    // that crashed between the parquet-dir move and the header write:
-    // a stale m1.parquet exists with a BOGUS entry list and no header.
+    // what an older build wrote for a store past 4096 files: a TSV
+    // holding only the header, tagged, with the entries elsewhere
     val store = new SnapshotStore(spark, newRoot(), "k")
-    store.commit((0L until 1000L).map(k => (k, k * 2)).toDF("k", "a"))
-    val stale = java.nio.file.Paths.get(s"${store.root}/_manifests/m1.parquet")
-    Seq(("data/v0/bogus.parquet", 1L, 0L, 999L, null: Array[Byte]))
-      .toDF("path", "rows", "minKey", "maxKey", "bloom")
-      .write.parquet(stale.toString)
-    // next commit lands v1 via the TSV path — the committed header
-    // (no entries=parquet tag) must win over the stale directory
-    store.mergeWith((0L until 10L).map(k => (k, k * 7)).toDF("k", "a"),
-      identity[DataFrame], lastWriteWins)
-    assert(store.currentVersion.contains(1L))
-    val m1 = store.manifest(1L)
-    assert(!m1.exists(_.path.contains("bogus")),
-      "stale crashed parquet entry list shadowed the committed TSV manifest")
-    assert(!java.nio.file.Files.exists(stale),
-      "TSV publish must clear the stale crashed m1.parquet")
-    assert(store.readVersion(1L).count() == 1000L)
-    assert(store.readRange(5L, 5L).select(col("a")).as[Long].head() == 35L)
+    store.commit((0L until 10L).map(k => (k, k)).toDF("k", "a"))
+    val m0 = java.nio.file.Paths.get(store.root, "_manifests", "m0.tsv")
+    val header = java.nio.file.Files.readAllLines(m0).get(0)
+    java.nio.file.Files.writeString(m0, header + " entries=parquet")
+    def failure(read: => Any): String =
+      intercept[IllegalStateException](read).getMessage
+    Seq(failure(store.read()), failure(store.manifest(0L)),
+      failure(store.lastTxn), failure(store.readRange(0L, 5L))).foreach { msg =>
+      assert(msg.contains("manifest v0") && msg.contains(store.root) &&
+        msg.contains("optimize()"), msg)
+    }
   }
 
-  test("delete-heavy fold commits a carried-only version on the parquet path") {
+  test("delete-heavy fold commits a carried-only version") {
     import spark.implicits._
-    val store = new SnapshotStore(spark, newRoot(), "k", parquetManifestFrom = 2)
+    val store = new SnapshotStore(spark, newRoot(), "k")
     store.commit((0L until 1000L).map(k => (k, k * 2)).toDF("k", "a"))
     val before = store.manifest(0L)
     val affected = store.plannedFiles(0L, 10L)
@@ -744,8 +655,7 @@ class StoreSpec extends AnyFunSuite {
 
   test("plain reads plan blobless: range planning never pulls Bloom blobs to the driver") {
     import spark.implicits._
-    val store = new SnapshotStore(spark, newRoot(), "k",
-      indexCol = Some("grp"), parquetManifestFrom = 2)
+    val store = new SnapshotStore(spark, newRoot(), "k", indexCol = Some("grp"))
     store.commit((0L until 1000L).map(k => (k, s"g${k / 250}", k))
       .toDF("k", "grp", "payload"))
     // the blob-ful surface keeps its blobs (point planning needs them)
@@ -757,39 +667,6 @@ class StoreSpec extends AnyFunSuite {
     assert(store.readRange(0L, 249L).count() == 250L)
     assertSameRows(store.readPoint("g1"),
       store.read().get.filter(col("grp") === "g1"))
-  }
-
-  test("a store shrinking below the parquet threshold transitions back to TSV manifests") {
-    import spark.implicits._
-    // filesPerCommit 8 > threshold 6 => v0 lands parquet; optimize()
-    // would still publish 8 files, so shrink via a full commit at a
-    // 4-file clustering: 4 <= 6 => v1 lands TSV while m0.parquet
-    // exists — the cross-format version chain the header-tag
-    // dispatch (r11 ADVICE) must serve correctly on BOTH sides
-    val root = newRoot()
-    val big = new SnapshotStore(spark, root, "k",
-      filesPerCommit = 8, parquetManifestFrom = 6)
-    big.commit((0L until 1000L).map(k => (k, k * 2)).toDF("k", "a"))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$root/_manifests/m0.parquet")),
-      "v0 must land as a parquet manifest (8 files > threshold 6)")
-    val small = new SnapshotStore(spark, root, "k",
-      filesPerCommit = 4, parquetManifestFrom = 6)
-    small.commit(small.readVersion(0L))
-    assert(small.currentVersion.contains(1L))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$root/_manifests/m1.parquet")),
-      "v1 (4 files <= threshold) must land as a TSV manifest")
-    assert(small.manifest(1L).size == 4)
-    // both formats readable in the same retained chain
-    assert(small.readVersion(0L).count() == 1000L)
-    assert(small.readVersion(1L).count() == 1000L)
-    assertSameRows(small.readVersion(0L), small.readVersion(1L))
-    // and a merge against the TSV head keeps working
-    small.mergeWith((0L until 10L).map(k => (k, k * 9)).toDF("k", "a"),
-      identity[DataFrame], lastWriteWins)
-    assert(small.readRange(5L, 5L).select(col("a")).as[Long].head() == 45L)
-    assert(small.read().get.count() == 1000L)
   }
 
   test("bloom index stays exact across 20 CoW merge generations") {
@@ -916,14 +793,13 @@ class StoreSpec extends AnyFunSuite {
     // the same store read back through the default protocol proves
     // the seam changed no on-disk byte of the format
     assert(new SnapshotStore(spark, root, "k").read().get.count() === 2)
-    // parquet-manifest path: same order, landDir for the entry list
+    // a merge-on-read purge: the deletion vector lands (landDir)
+    // before the manifest that references it, inside the same section
     trace.clear()
-    val pqStore = new SnapshotStore(spark, newRoot(), "k",
-      parquetManifestFrom = 0, protocol = Tracing)
-    pqStore.commit(Seq((1L, "a")).toDF("k", "payload"))
+    store.purgeMor(Seq(1L).toDF("k"))
     val t2 = trace.toArray.map(_.toString).toSeq
-    assert(t2 === Seq("enter", "landDir", "landFile", "flip:0", "exit"),
-      s"parquet commit order through the seam: $t2")
+    assert(t2 === Seq("enter", "landDir", "landFile", "flip:1", "exit"),
+      s"purgeMor commit order through the seam: $t2")
   }
   } // protocols.foreach (commit seam)
 
@@ -1042,8 +918,7 @@ class StoreSpec extends AnyFunSuite {
     // full fold; the planning job collects nothing but a bounded count.
     import spark.implicits._
     val store = new SnapshotStore(spark, newRoot(), "k",
-      filesPerCommit = 1000, indexCol = Some("u"),
-      parquetManifestFrom = 2, maxPlannedBroadcast = 4096)
+      filesPerCommit = 1000, indexCol = Some("u"), maxPlannedBroadcast = 4096)
     store.commit(spark.range(0L, 10000L).select(col("id").as("k"),
       col("id").as("u"), lit(0L).as("tag")))
     assert(store.manifest(0L).size == 1000, "need the 10³-file manifest")
@@ -1096,14 +971,6 @@ class StoreSpec extends AnyFunSuite {
     store.purgeMor(Seq(20L).toDF("k"), txn = Some(1L))
     assert(store.currentVersion.contains(1L))
     assert(store.read().get.filter(col("k") === 20L).count() === 1)
-    // parquet-manifest twin: the DV machinery works over the frame path
-    val pq = new SnapshotStore(spark, newRoot(), "k", filesPerCommit = 8,
-      parquetManifestFrom = 2)
-    pq.commit(base)
-    pq.purgeMor(Seq(3L, 7L, 11L).toDF("k"))
-    assert(pq.manifest(1L).map(_.path).toSet ==
-      pq.manifest(0L).map(_.path).toSet)
-    assertSameRows(pq.read().get, got)
   }
 
   test("purgeMor: tombstones are per-file — an upsert of a purged key is visible again") {
@@ -1239,14 +1106,6 @@ class StoreSpec extends AnyFunSuite {
     store.mergeWith(Seq((3L, 6000000000L)).toDF("k", "a"),
       identity[DataFrame], lastWriteWins)
     assert(store.read().get.filter(col("k") === 3L).head.getLong(1) == 6000000000L)
-    // parquet-manifest twin: same rejection through mergeLarge
-    val pq = new SnapshotStore(spark, newRoot(), "k", filesPerCommit = 8,
-      parquetManifestFrom = 2)
-    pq.commit((0L until 400L).map(i => (i, i * 2, s"s$i")).toDF("k", "a", "b"))
-    intercept[IllegalStateException] {
-      pq.mergeWith(delta, identity[DataFrame], (base, _) => base.drop("b"))
-    }
-    assert(pq.currentVersion.contains(0L))
   }
 
   test("column rename: a metadata-only commit; carried files map forward by generation") {
@@ -1331,15 +1190,6 @@ class StoreSpec extends AnyFunSuite {
     // the widening updater
     assert(got.filter(col("k") === 200L).head.getLong(1) == 200L)
     assert(got.count() === 400L)
-    // parquet-manifest twin: rename through the frame path
-    val pq = new SnapshotStore(spark, newRoot(), "k", filesPerCommit = 4,
-      parquetManifestFrom = 2)
-    pq.commit((0L until 100L).map(i => (i, i * 2)).toDF("k", "a"))
-    pq.renameColumn("a", "b")
-    assert(pq.read().get.columns.toSeq == Seq("k", "b"))
-    assert(pq.read().get.filter(col("k") === 9L).head.getLong(1) == 18L)
-    assert(pq.manifest(1L).map(_.path).toSet ==
-      pq.manifest(0L).map(_.path).toSet)
   }
 
   test("widen whitelist is pinned to what the vectorized parquet reader serves") {
@@ -1490,8 +1340,7 @@ class StoreSpec extends AnyFunSuite {
     // protection) — the sandbox JVM's fs encoding is ASCII-only, so
     // non-ASCII roots can't be created here, but they ride the same
     // percent-decode path as the space
-    val root = java.nio.file.Files
-      .createTempDirectory("graft store+enc ").toString
+    val root = tempDir("graft store+enc ").toString
     val store = new SnapshotStore(spark, root, "k", filesPerCommit = 8)
     store.commit((0L until 100L).map(i => (i, s"p$i")).toDF("k", "payload"))
     store.purgeMor(Seq(3L, 7L).toDF("k"))
@@ -1611,9 +1460,7 @@ class StoreSpec extends AnyFunSuite {
   }
 
   test("CDC merge in k slices equals the whole-log soft-delete snapshot (randomized)") {
-    // seed -> manifest kind: the TSV and parquet merge paths both fold
-    // through store.merge
-    Seq(11L -> 4096, 23L -> 2, 37L -> 4096).foreach { case (seed, parquetFrom) =>
+    Seq(11L, 23L, 37L).foreach { seed =>
       val rng = new scala.util.Random(seed)
       var nextId = 0L
       def ts(): Option[String] =
@@ -1649,8 +1496,7 @@ class StoreSpec extends AnyFunSuite {
       val allNew = (1L to 5L).map(key => change("I", key)) ++
         (5000L to 5004L).map(key => change(randomOp(), key))
       val slices = withReplays :+ allNew
-      val store = new SnapshotStore(spark, newRoot(), "user_id",
-        parquetManifestFrom = parquetFrom)
+      val store = new SnapshotStore(spark, newRoot(), "user_id")
       slices.indices.foreach { i =>
         store.merge(changeFrame(slices(i)))
         val log = changeFrame(slices.take(i + 1).flatten)
@@ -1665,10 +1511,6 @@ class StoreSpec extends AnyFunSuite {
       assert(revived.length == 1 &&
         revived.head.getAs[String]("delete_state") == "0",
         s"seed $seed: a U after a D must revive the key")
-      if (parquetFrom == 2)
-        assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
-          s"${store.root}/_manifests/m${store.currentVersion.get}.parquet")),
-          "the parquet seed must fold through the parquet manifest path")
     }
   }
 
@@ -1696,35 +1538,30 @@ class StoreSpec extends AnyFunSuite {
       CdcOps.softDeleteSnapshot(changeFrame(Seq(other)), col("user_id")))
   }
 
-  test("CDC merges stay on the observed stats path on both manifest formats") {
+  test("CDC merges stay on the observed stats path") {
     import spark.implicits._
-    Seq(4096, 2).foreach { parquetFrom =>
-      val store = new SnapshotStore(spark, newRoot(), "user_id",
-        filesPerCommit = 8, parquetManifestFrom = parquetFrom)
-      def check(what: String): Unit = {
-        assert(!store.lastStatsFallback, s"$what fell back to the stats job")
-        store.manifest(store.currentVersion.get).foreach { e =>
-          val r = spark.read.parquet(e.path)
-            .agg(count(lit(1)), min(col("user_id")), max(col("user_id"))).head()
-          assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((e.rows, e.minKey, e.maxKey)),
-            s"$what: manifest stats disagree with ${e.path}")
-        }
+    val store = new SnapshotStore(spark, newRoot(), "user_id", filesPerCommit = 8)
+    def check(what: String): Unit = {
+      assert(!store.lastStatsFallback, s"$what fell back to the stats job")
+      store.manifest(store.currentVersion.get).foreach { e =>
+        val r = spark.read.parquet(e.path)
+          .agg(count(lit(1)), min(col("user_id")), max(col("user_id"))).head()
+        assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((e.rows, e.minKey, e.maxKey)),
+          s"$what: manifest stats disagree with ${e.path}")
       }
-      val log = parsedLog
-      // fewer distinct keys than filesPerCommit: some range partitions
-      // stay empty, on the first commit and on an all-new-key merge
-      store.merge(log.filter(col("user_id") === log.agg(min(col("user_id"))).as[Long].head()))
-      check("a one-key first commit")
-      store.merge(log)
-      check("a full-log merge")
-      store.merge(log.filter(pmod(col("id"), lit(7)) === 0)
-        .withColumn("current_ts", lit("2099-01-01 00:00:00.000000")))
-      check("a rewriting merge")
-      store.merge(log.limit(2).withColumn("user_id", col("user_id") + 1000000L))
-      check("a two-key all-new merge")
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
-        s"${store.root}/_manifests/m${store.currentVersion.get}.parquet")) == (parquetFrom == 2))
     }
+    val log = parsedLog
+    // fewer distinct keys than filesPerCommit: some range partitions
+    // stay empty, on the first commit and on an all-new-key merge
+    store.merge(log.filter(col("user_id") === log.agg(min(col("user_id"))).as[Long].head()))
+    check("a one-key first commit")
+    store.merge(log)
+    check("a full-log merge")
+    store.merge(log.filter(pmod(col("id"), lit(7)) === 0)
+      .withColumn("current_ts", lit("2099-01-01 00:00:00.000000")))
+    check("a rewriting merge")
+    store.merge(log.limit(2).withColumn("user_id", col("user_id") + 1000000L))
+    check("a two-key all-new merge")
   }
 
   test("a TSV-manifest copy-on-write CDC merge runs at most 4 Spark jobs") {

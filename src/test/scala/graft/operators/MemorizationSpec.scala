@@ -1,23 +1,22 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TempDirs
 
 /** C70 q_memorization — directed semantics on a constructed corpus:
   * full-copy evals read their whole length, partial overlaps read the
   * overlap run + W-1, short/novel docs read 0.
   */
-class MemorizationSpec extends AnyFunSuite {
+class MemorizationSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = graft.GraftSession.local(cores = 4, appName = "memorization-spec")
 
   test("longest memorized span: full copy, partial overlap, novel, short") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("mem-spec")
-    dir.toFile.deleteOnExit()
+    val dir = tempDir("mem-spec")
     def words(prefix: String, n: Int): String =
       (1 to n).map(i => s"$prefix$i").mkString(" ")
     // doc_id % 10 == 0 -> eval; else train

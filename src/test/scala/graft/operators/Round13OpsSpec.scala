@@ -4,13 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** Round-13 hardening — the r12 verdict's scale items: the BFS
   * join-form fallback equals the driver-form search level-for-level,
   * the assortativity corr2_ppm kernel survives moments that exhaust
   * decimal(38,0) headroom, and the KS cross-multiplication stays
   * exact past Long range.
   */
-class Round13OpsSpec extends AnyFunSuite {
+class Round13OpsSpec extends AnyFunSuite with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
   lazy val spark: SparkSession =
@@ -144,7 +146,7 @@ class Round13OpsSpec extends AnyFunSuite {
   }
 
   test("A34: an empty or all-null first batch skips the KS step instead of wedging") {
-    val store = java.nio.file.Files.createTempDirectory("drift-empty").toString
+    val store = tempDir("drift-empty").toString
     val empty = graft.sources.Tables(spark, sf).documents
       .filter(col("doc_id") < 0)
     graft.streaming.DriftMonitorStream.foldBatch(empty,

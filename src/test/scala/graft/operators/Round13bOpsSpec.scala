@@ -4,11 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** Round-13 second tier — kernel properties and cross-query
   * invariants for the diversity / policy / geometry / privacy /
   * cadence gates (C96-C101, E25, F22-F23, G11).
   */
-class Round13bOpsSpec extends AnyFunSuite {
+class Round13bOpsSpec extends AnyFunSuite with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
   lazy val spark: SparkSession =
@@ -328,7 +330,7 @@ class Round13bOpsSpec extends AnyFunSuite {
       (id, (0 until n).map(i => s"t${(i * 7 + id) % 37}").mkString(" "), "srcT")
     val docs = Seq(doc(1, 2), doc(2, 513), doc(3, 517), doc(4, 518),
       doc(5, 1200), doc(6, 100))
-    val dir = java.nio.file.Files.createTempDirectory("wcc-chunk").toString
+    val dir = tempDir("wcc-chunk").toString
     docs.toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // reference: the pre-chunking single-shot definition

@@ -1,18 +1,17 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.sources.Tables
 
 /** BackfillStream — the A31 repair half: accepted + quarantine
   * stores sum to the exact batch aggregate (no row lost to the
   * watermark), and a checkpoint restart folds nothing twice.
   */
-class BackfillStreamSpec extends AnyFunSuite {
+class BackfillStreamSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession =
     graft.GraftSession.local(cores = 4, appName = "backfill-spec")
@@ -20,35 +19,30 @@ class BackfillStreamSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
   private val delay = 3600L * 1000000L
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   test("repaired view equals the batch day aggregate; the late store is non-trivial") {
     val ev = Tables(spark, sfDir).events
       .select(col("event_id"), col("ts"), col("event_type"))
-    val inDir = tmp("bf-in").toString
-    val accDir = tmp("bf-acc").toString
-    val lateDir = tmp("bf-late").toString
+    val inDir = tempDir("bf-in").toString
+    val accDir = tempDir("bf-acc").toString
+    val lateDir = tempDir("bf-late").toString
     ev.filter(col("event_id") % 3 =!= 0).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
     val q = LateRouterStream.start(spark, inDir + "/*/", inDir + "/batch0",
-      accDir, lateDir, tmp("bf-hwm").toString, tmp("bf-ck1").toString, delay)
+      accDir, lateDir, tempDir("bf-hwm").toString, tempDir("bf-ck1").toString, delay)
     q.processAllAvailable()
     ev.filter(col("event_id") % 3 === 0).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch1")
     q.processAllAvailable()
     q.stop()
-    val accStore = tmp("bf-as").toString
-    val lateStore = tmp("bf-ls").toString
-    val ck2 = tmp("bf-ck2").toString
+    val accStore = tempDir("bf-as").toString
+    val lateStore = tempDir("bf-ls").toString
+    val ck2 = tempDir("bf-ck2").toString
     val qa = BackfillStream.start(spark, accDir + "/*/", inDir + "/batch0",
       accStore, ck2)
     qa.processAllAvailable(); qa.stop()
     val ql = BackfillStream.start(spark, lateDir + "/*/", inDir + "/batch0",
-      lateStore, tmp("bf-ck3").toString)
+      lateStore, tempDir("bf-ck3").toString)
     ql.processAllAvailable(); ql.stop()
     val a = BackfillStream.readTable(spark, accStore).get
       .select(col("d"), col("event_type"), col("n").as("na"))

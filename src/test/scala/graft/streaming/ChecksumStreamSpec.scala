@@ -1,10 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TempDirs
 import graft.sources.Tables
 
 /** A39 — the live sync-validation checksum: the streamed fold must
@@ -12,15 +12,12 @@ import graft.sources.Tables
   * batch id must be a no-op, and the arrival split must not matter
   * (the checksum is a commutative sum).
   */
-class ChecksumStreamSpec extends AnyFunSuite {
+class ChecksumStreamSpec extends AnyFunSuite with TempDirs {
 
   private val sfDir = "/root/testdata/sf0.001"
   lazy val spark: SparkSession =
     graft.GraftSession.local(cores = 4, appName = "checksum-stream-spec")
 
-  private def tmp(p: String) = {
-    val d = Files.createTempDirectory(p); d.toFile.deleteOnExit(); d.toString
-  }
 
   private def read1(storeDir: String): (Long, Long) = {
     val r = ChecksumStream.readChecksum(spark, storeDir).get.collect()(0)
@@ -29,7 +26,7 @@ class ChecksumStreamSpec extends AnyFunSuite {
 
   test("two-split streamed fold equals the batch A38 events checksum; replay is a no-op") {
     val events = Tables(spark, sfDir).events
-    val storeDir = tmp("ck-store")
+    val storeDir = tempDir("ck-store").toString
     val even = events.filter(col("event_id") % 2 === 0)
     val odd = events.filter(col("event_id") % 2 =!= 0)
     ChecksumStream.foldBatch(even, storeDir, batchId = 0L)
@@ -48,7 +45,7 @@ class ChecksumStreamSpec extends AnyFunSuite {
 
   test("arrival split order cannot move the checksum (commutative fold)") {
     val events = Tables(spark, sfDir).events
-    val s1 = tmp("ck-s1"); val s2 = tmp("ck-s2")
+    val s1 = tempDir("ck-s1").toString; val s2 = tempDir("ck-s2").toString
     val byUser = events.filter(col("user_id") % 2 === 0)
     val rest = events.filter(col("user_id") % 2 =!= 0)
     ChecksumStream.foldBatch(byUser, s1, 0L)

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.operators.DiagnosticsQueries
 import graft.sources.Tables
 
@@ -14,18 +13,13 @@ import graft.sources.Tables
   * prefix, the additive count fold is replay-guarded, and the log
   * upsert converges under replay.
   */
-class DriftMonitorStreamSpec extends AnyFunSuite {
+class DriftMonitorStreamSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession =
     graft.GraftSession.local(cores = 4, appName = "drift-spec")
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   private def fp(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -37,7 +31,7 @@ class DriftMonitorStreamSpec extends AnyFunSuite {
 
   test("per-batch drift rows equal the batch KS of each cumulative prefix") {
     val docs = Tables(spark, sfDir).documents
-    val storeDir = tmp("drift-store").toString
+    val storeDir = tempDir("drift-store").toString
     val b0 = docs.filter(col("doc_id") % 2 === 1)
     DriftMonitorStream.foldBatch(b0, refCounts, storeDir, batchId = 0L)
     DriftMonitorStream.foldBatch(docs.filter(col("doc_id") % 2 === 0),
@@ -66,7 +60,7 @@ class DriftMonitorStreamSpec extends AnyFunSuite {
 
   test("replayed batch is a no-op: counts txn-guarded, log row upserts identically") {
     val docs = Tables(spark, sfDir).documents
-    val storeDir = tmp("drift2-store").toString
+    val storeDir = tempDir("drift2-store").toString
     val b0 = docs.filter(col("doc_id") % 2 === 1)
     DriftMonitorStream.foldBatch(b0, refCounts, storeDir, batchId = 0L)
     val countsBefore = fp(DriftMonitorStream.readCounts(spark, storeDir).get)

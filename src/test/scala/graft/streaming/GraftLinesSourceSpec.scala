@@ -9,21 +9,18 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** The graftlines DataSourceV2 streaming source (A13's in-container
   * seam): offset JSON roundtrip, per-partition slicing, the
   * engine-side commit() path (which Spark only drives on multi-batch
   * runs — batch n-1 commits when batch n starts), admission control,
   * and resume-from-offset-log through `startingOffsets`.
   */
-class GraftLinesSourceSpec extends AnyFunSuite {
+class GraftLinesSourceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = graft.GraftSession.local(cores = 4, appName = "graftlines-spec")
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   private def writeSeg(dir: Path, topic: String, part: Int,
                        lines: Seq[String]): Unit =
@@ -43,9 +40,9 @@ class GraftLinesSourceSpec extends AnyFunSuite {
   }
 
   test("multi-batch drive: admission control slices batches, commit() writes the reference-format log") {
-    val seg = tmp("gl-seg")
-    val out = tmp("gl-out")
-    val ckpt = tmp("gl-ckpt")
+    val seg = tempDir("gl-seg")
+    val out = tempDir("gl-out")
+    val ckpt = tempDir("gl-ckpt")
     val log = seg.resolve("offset.log").toString
     writeSeg(seg, "pub", 0, (0 until 10).map(i => s"a$i"))
     writeSeg(seg, "pub", 1, (0 until 10).map(i => s"b$i"))
@@ -75,9 +72,9 @@ class GraftLinesSourceSpec extends AnyFunSuite {
   }
 
   test("resume-from-offset-log consumes exactly the uncommitted tail") {
-    val seg = tmp("gl2-seg")
-    val out = tmp("gl2-out")
-    val ckpt = tmp("gl2-ckpt")
+    val seg = tempDir("gl2-seg")
+    val out = tempDir("gl2-out")
+    val ckpt = tempDir("gl2-ckpt")
     writeSeg(seg, "pub", 0, (0 until 6).map(i => s"a$i"))
     writeSeg(seg, "pub", 1, (0 until 6).map(i => s"b$i"))
     // a stored log says lines < 4 (p0) / < 2 (p1) are already consumed

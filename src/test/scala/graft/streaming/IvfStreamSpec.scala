@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.ann.Ann
 import graft.sources.Tables
 import graft.store.SnapshotStore
@@ -15,27 +14,22 @@ import graft.store.SnapshotStore
   * build, identical query results, txn-guarded replay no-op, and
   * vector re-delivery idempotence.
   */
-class IvfStreamSpec extends AnyFunSuite {
+class IvfStreamSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = graft.GraftSession.local(cores = 4, appName = "ivfstream-spec")
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   private def fp(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
   test("two-arrival stream converges to the one-shot build; query results identical") {
     val emb = Tables(spark, sfDir).embeddings
-    val inDir = tmp("ivfs-in").toString
-    val indexDir = tmp("ivfs-index").toString
-    val storeDir = tmp("ivfs-store").toString
-    val ckpt = tmp("ivfs-ckpt").toString
+    val inDir = tempDir("ivfs-in").toString
+    val indexDir = tempDir("ivfs-index").toString
+    val storeDir = tempDir("ivfs-store").toString
+    val ckpt = tempDir("ivfs-ckpt").toString
     IvfStream.landCentroids(emb, indexDir, nLists = 8)
     emb.filter(col("vec_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
@@ -66,8 +60,8 @@ class IvfStreamSpec extends AnyFunSuite {
 
   test("IVF-PQ tier: maintained artifacts serve the same top-k as the one-shot build") {
     val emb = Tables(spark, sfDir).embeddings
-    val indexDir = tmp("ivfpq-index").toString
-    val storeDir = tmp("ivfpq-store").toString
+    val indexDir = tempDir("ivfpq-index").toString
+    val storeDir = tempDir("ivfpq-store").toString
     IvfStream.landIvfPq(emb, indexDir, nLists = 8, m = 8, k = 16)
     IvfStream.mergeBatch(emb.filter(col("vec_id") % 2 === 1),
       indexDir, storeDir, txn = Some(0L))
@@ -84,8 +78,8 @@ class IvfStreamSpec extends AnyFunSuite {
 
   test("replayed txn is a no-op; re-delivered vectors fold idempotently") {
     val emb = Tables(spark, sfDir).embeddings
-    val indexDir = tmp("ivfs2-index").toString
-    val storeDir = tmp("ivfs2-store").toString
+    val indexDir = tempDir("ivfs2-index").toString
+    val storeDir = tempDir("ivfs2-store").toString
     IvfStream.landCentroids(emb, indexDir, nLists = 8)
     val a = emb.filter(col("vec_id") % 2 === 1)
     val b = emb.filter(col("vec_id") % 2 === 0)

@@ -1,18 +1,17 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.sources.Tables
 
 /** LateRouterStream — watermark late-data routing: the two routes
   * tile the input exactly, the split replays the per-batch watermark
   * rule, and a checkpoint restart neither re-delivers nor loses rows.
   */
-class LateRouterStreamSpec extends AnyFunSuite {
+class LateRouterStreamSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession =
     graft.GraftSession.local(cores = 4, appName = "late-router-spec")
@@ -21,20 +20,15 @@ class LateRouterStreamSpec extends AnyFunSuite {
   private val cols = Seq("event_id", "ts", "event_type")
   private val delay = 3600L * 1000000L
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   test("routes tile the input; the split replays the per-batch watermark rule") {
     val ev = Tables(spark, sfDir).events
       .select(col("event_id"), col("ts"), col("event_type"))
-    val inDir = tmp("lr-in").toString
-    val accDir = tmp("lr-acc").toString
-    val lateDir = tmp("lr-late").toString
-    val hwmDir = tmp("lr-hwm").toString
-    val ckpt = tmp("lr-ckpt").toString
+    val inDir = tempDir("lr-in").toString
+    val accDir = tempDir("lr-acc").toString
+    val lateDir = tempDir("lr-late").toString
+    val hwmDir = tempDir("lr-hwm").toString
+    val ckpt = tempDir("lr-ckpt").toString
     ev.filter(col("event_id") % 3 =!= 0).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
     val q = LateRouterStream.start(spark, inDir + "/*/", inDir + "/batch0",
@@ -65,11 +59,11 @@ class LateRouterStreamSpec extends AnyFunSuite {
   test("checkpoint restart: no re-delivery, and a post-restart arrival routes on the accumulated mark") {
     val ev = Tables(spark, sfDir).events
       .select(col("event_id"), col("ts"), col("event_type"))
-    val inDir = tmp("lr2-in").toString
-    val accDir = tmp("lr2-acc").toString
-    val lateDir = tmp("lr2-late").toString
-    val hwmDir = tmp("lr2-hwm").toString
-    val ckpt = tmp("lr2-ckpt").toString
+    val inDir = tempDir("lr2-in").toString
+    val accDir = tempDir("lr2-acc").toString
+    val lateDir = tempDir("lr2-late").toString
+    val hwmDir = tempDir("lr2-hwm").toString
+    val ckpt = tempDir("lr2-ckpt").toString
     ev.filter(col("event_id") % 3 === 1).coalesce(1)
       .write.mode("overwrite").parquet(inDir + "/batch0")
     val q1 = LateRouterStream.start(spark, inDir + "/*/", inDir + "/batch0",

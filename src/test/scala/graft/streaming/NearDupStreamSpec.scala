@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.dedup.Dedup
 import graft.sources.Tables
 import graft.store.SnapshotStore
@@ -14,24 +13,19 @@ import graft.store.SnapshotStore
   * two-arrival convergence to the one-shot C2 scan, txn-guarded
   * replay no-op, re-delivery idempotence.
   */
-class NearDupStreamSpec extends AnyFunSuite {
+class NearDupStreamSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = graft.GraftSession.local(cores = 4, appName = "neardup-spec")
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   private def fp(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
   test("two arrivals converge to the one-shot C2 pair set") {
     val docs = Tables(spark, sfDir).documents
-    val storeDir = tmp("nd-store").toString
+    val storeDir = tempDir("nd-store").toString
     NearDupStream.mergeBatch(docs.filter(col("doc_id") % 2 === 1),
       storeDir, txn = Some(0L))
     NearDupStream.mergeBatch(docs.filter(col("doc_id") % 2 === 0),
@@ -44,7 +38,7 @@ class NearDupStreamSpec extends AnyFunSuite {
 
   test("replayed txn is a no-op; re-delivery under a new txn is idempotent") {
     val docs = Tables(spark, sfDir).documents
-    val storeDir = tmp("nd2-store").toString
+    val storeDir = tempDir("nd2-store").toString
     val b = docs.filter(col("doc_id") % 2 === 0)
     NearDupStream.mergeBatch(docs.filter(col("doc_id") % 2 === 1),
       storeDir, txn = Some(0L))
@@ -63,7 +57,7 @@ class NearDupStreamSpec extends AnyFunSuite {
 
   test("hot-bucket guard: a boilerplate flood fails the fold loudly; the read side has its own cap") {
     import spark.implicits._
-    val storeDir = tmp("nd3-store").toString
+    val storeDir = tempDir("nd3-store").toString
     // 100 identical docs: legal under the fold cap — the index lands
     val flood = (0L until 100L)
       .map(i => (i, "identical boilerplate text shared by every doc in this batch"))
@@ -78,7 +72,7 @@ class NearDupStreamSpec extends AnyFunSuite {
     assert(NearDupStream.pairs(spark, storeDir).count() == 100L * 99 / 2)
     // a flood past the FOLD cap fails the mergeBatch loudly instead of
     // landing an index whose every read would be quadratic
-    val storeDir2 = tmp("nd4-store").toString
+    val storeDir2 = tempDir("nd4-store").toString
     val bigFlood = (0L until (NearDupStream.maxFoldBucketDocs + 100L))
       .map(i => (i, "identical boilerplate text shared by every doc in this batch"))
       .toDF("doc_id", "text")

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.operators.CorpusQueries
 import graft.sources.Tables
 
@@ -13,17 +12,12 @@ import graft.sources.Tables
   * convergence to the one-shot batch admission, txn-guarded replay
   * no-op, and the gate genuinely drops sub-threshold material.
   */
-class QualityGateStreamSpec extends AnyFunSuite {
+class QualityGateStreamSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = graft.GraftSession.local(cores = 4, appName = "qgate-spec")
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   private def fp(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -32,7 +26,7 @@ class QualityGateStreamSpec extends AnyFunSuite {
     val docs = Tables(spark, sfDir).documents
     val deficits = CorpusQueries.lmDeficits(spark, sfDir).persist()
     val thr = QualityGateStream.modelThreshold(spark, sfDir)
-    val storeDir = tmp("qg-store").toString
+    val storeDir = tempDir("qg-store").toString
     QualityGateStream.mergeBatch(docs.filter(col("doc_id") % 2 === 1),
       deficits, storeDir, txn = Some(0L), threshold = thr)
     QualityGateStream.mergeBatch(docs.filter(col("doc_id") % 2 === 0),
@@ -56,7 +50,7 @@ class QualityGateStreamSpec extends AnyFunSuite {
   test("replayed txn is a no-op on both stores") {
     val docs = Tables(spark, sfDir).documents
     val deficits = CorpusQueries.lmDeficits(spark, sfDir).persist()
-    val storeDir = tmp("qg2-store").toString
+    val storeDir = tempDir("qg2-store").toString
     val thr = QualityGateStream.modelThreshold(spark, sfDir)
     val b0 = docs.filter(col("doc_id") % 2 === 1)
     QualityGateStream.mergeBatch(b0, deficits, storeDir, txn = Some(0L),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -8,21 +8,17 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.cdc.{CdcOps, ChangeModel}
 import graft.sources.Tables
 
 /** A9-A12: streaming behavior against the batch ops as ground truth. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = graft.GraftSession.local(cores = 4, appName = "streaming-spec")
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -47,9 +43,9 @@ class StreamingSpec extends AnyFunSuite {
 
     // split the change log into two "arrivals"
     val first = lines.filter(col("line").contains("\"ID\":1") === false)
-    val linesDir = tmp("cdc-lines")
-    val snapDir = tmp("cdc-snap")
-    val ckpt = tmp("cdc-ckpt")
+    val linesDir = tempDir("cdc-lines")
+    val snapDir = tempDir("cdc-snap")
+    val ckpt = tempDir("cdc-ckpt")
 
     first.coalesce(1).write.mode("overwrite").text(linesDir.resolve("batch0").toString)
     val q = CdcStream.start(spark, linesDir.toString + "/*/", snapDir.toString, ckpt.toString)
@@ -79,9 +75,9 @@ class StreamingSpec extends AnyFunSuite {
   test("A9: restart from checkpoint does not reprocess (exactly-once)") {
     val events = Tables(spark, sf).events
     val lines = ChangeModel.changeLines(events).select("line")
-    val linesDir = tmp("cdc2-lines")
-    val snapDir = tmp("cdc2-snap")
-    val ckpt = tmp("cdc2-ckpt")
+    val linesDir = tempDir("cdc2-lines")
+    val snapDir = tempDir("cdc2-snap")
+    val ckpt = tempDir("cdc2-ckpt")
 
     lines.coalesce(1).write.mode("overwrite").text(linesDir.resolve("b0").toString)
     val q1 = CdcStream.start(spark, linesDir.toString + "/*/", snapDir.toString, ckpt.toString)
@@ -102,9 +98,9 @@ class StreamingSpec extends AnyFunSuite {
     // the orders sink must see an empty route and commit nothing
     val evLines = mixed.filter(
       get_json_object(col("line"), "$.table") === "PUB.EVENTS")
-    val linesDir = tmp("rt-lines")
-    val storeRoot = tmp("rt-stores")
-    val ckpt = tmp("rt-ckpt")
+    val linesDir = tempDir("rt-lines")
+    val storeRoot = tempDir("rt-stores")
+    val ckpt = tempDir("rt-ckpt")
     evLines.coalesce(1).write.mode("overwrite")
       .text(linesDir.resolve("b0").toString)
     val q = CdcStream.startRouted(
@@ -146,9 +142,9 @@ class StreamingSpec extends AnyFunSuite {
   test("A13b: maxFilesPerTrigger bounds per-batch rows under an input burst") {
     val events = Tables(spark, sf).events
     val lines = ChangeModel.changeLines(events).select("line")
-    val linesDir = tmp("rl-lines")
-    val snapDir = tmp("rl-snap")
-    val ckpt = tmp("rl-ckpt")
+    val linesDir = tempDir("rl-lines")
+    val snapDir = tempDir("rl-snap")
+    val ckpt = tempDir("rl-ckpt")
     // burst: four files are already waiting when the query starts —
     // without rate limiting they'd form ONE giant micro-batch
     val perFile = (0 until 4).map { i =>
@@ -184,7 +180,7 @@ class StreamingSpec extends AnyFunSuite {
   test("A20: bloom decontamination blob prefilters a document stream (stream-static)") {
     import graft.functions.{bloom_agg, bloom_might_contain, rolling_hash64}
     val docs = Tables(spark, sf).documents
-    val docDir = tmp("bloom-in")
+    val docDir = tempDir("bloom-in")
     docs.write.mode("overwrite").parquet(docDir.resolve("p").toString)
     // the benchmark blob is STATIC (built once, broadcast into every
     // micro-batch) — the streaming form of the C25 decontamination
@@ -210,7 +206,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("A10: streaming windowed agg equals batch time-bucket agg") {
     val events = Tables(spark, sf).events
-    val evDir = tmp("ev-in")
+    val evDir = tempDir("ev-in")
     events.write.mode("overwrite").parquet(evDir.resolve("p").toString)
 
     val streamIn = spark.readStream
@@ -231,7 +227,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("A10c: streaming windowed HLL sketch equals the batch sketch") {
     val events = Tables(spark, sf).events
-    val evDir = tmp("hll-in")
+    val evDir = tempDir("hll-in")
     events.write.mode("overwrite").parquet(evDir.resolve("p").toString)
 
     val streamIn = spark.readStream
@@ -253,7 +249,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("A11b: native session_window aggregation — stream equals batch") {
     val events = Tables(spark, sf).events
-    val evDir = tmp("sw-in")
+    val evDir = tempDir("sw-in")
     events.write.mode("overwrite").parquet(evDir.resolve("p").toString)
     val streamIn = spark.readStream.schema(events.schema).parquet(evDir.toString + "/*/")
     val agg = streamIn
@@ -276,7 +272,7 @@ class StreamingSpec extends AnyFunSuite {
   test("A11: streaming sessionization emits exactly the closed sessions") {
     import spark.implicits._
     val events = Tables(spark, sf).events
-    val evDir = tmp("sess-in")
+    val evDir = tempDir("sess-in")
     events.write.mode("overwrite").parquet(evDir.resolve("p").toString)
 
     val streamIn = spark.readStream.schema(events.schema).parquet(evDir.toString + "/*/")
@@ -303,7 +299,7 @@ class StreamingSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val events = Tables(spark, sf).events
-      val evDir = tmp("tws-in")
+      val evDir = tempDir("tws-in")
       events.write.mode("overwrite").parquet(evDir.resolve("p").toString)
       val streamIn = spark.readStream.schema(events.schema).parquet(evDir.toString + "/*/")
         .select(col("user_id"), col("ts"), col("event_id"))
@@ -327,7 +323,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("A10b: stream-stream join equals the batch range join") {
     val events = Tables(spark, sf).events
-    val evDir = tmp("ssj-in")
+    val evDir = tempDir("ssj-in")
     events.write.mode("overwrite").parquet(evDir.resolve("p").toString)
 
     val streamIn = spark.readStream.schema(events.schema).parquet(evDir.toString + "/*/")
@@ -344,7 +340,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("A15: streaming dedup drops replayed events with bounded state") {
     val events = Tables(spark, sf).events
-    val evDir = tmp("dedup-in")
+    val evDir = tempDir("dedup-in")
     // simulate an at-least-once transport: the same 200 events land twice
     val chunk = events.limit(200)
     chunk.write.mode("overwrite").parquet(evDir.resolve("a").toString)
@@ -362,7 +358,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("A10d: watermark drops late events from the windowed aggregation") {
     import spark.implicits._
-    val dir = tmp("late-in")
+    val dir = tempDir("late-in")
     def ev(hour: Int, n: Int): Seq[(Timestamp, String, Double)] =
       (0 until n).map(i => (Timestamp.valueOf(f"2020-01-01 $hour%02d:10:0$i"),
         "click", 1.0))
@@ -423,9 +419,9 @@ class StreamingSpec extends AnyFunSuite {
   test("A12b: sync-log sink appends the batch log lines to a dated file") {
     import scala.jdk.CollectionConverters._
     val events = Tables(spark, sf).events
-    val evDir = tmp("slog-in")
+    val evDir = tempDir("slog-in")
     events.limit(150).write.mode("overwrite").parquet(evDir.resolve("p").toString)
-    val logDir = tmp("slog-out")
+    val logDir = tempDir("slog-out")
     val listener = new RateListener(logDir = Some(logDir.toString))
     spark.streams.addListener(listener)
     try {
@@ -452,9 +448,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("A22: continuously-maintained aggregate table equals the batch aggregate") {
     val events = Tables(spark, sf).events
-    val evDir = tmp("agg-in")
-    val storeDir = tmp("agg-store")
-    val ckpt = tmp("agg-ckpt")
+    val evDir = tempDir("agg-in")
+    val storeDir = tempDir("agg-store")
+    val ckpt = tempDir("agg-ckpt")
 
     // three arrivals; the fold must be additive across batches, so a
     // user present in all three accumulates, not last-write-wins
@@ -482,9 +478,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("A26: streaming corpus ingest == batch quality-filter + exact-dedup keep-first") {
     val docs = Tables(spark, sf).documents
-    val inDir = tmp("ing-in")
-    val storeDir = tmp("ing-store")
-    val ckpt = tmp("ing-ckpt")
+    val inDir = tempDir("ing-in")
+    val storeDir = tempDir("ing-store")
+    val ckpt = tempDir("ing-ckpt")
 
     // two arrivals; a text duplicated ACROSS arrivals must resolve to
     // the smallest doc_id regardless of which batch carried it — the
@@ -517,9 +513,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("A24: continuously-maintained sketch table == one-shot sketches, register-exact") {
     val events = Tables(spark, sf).events
-    val evDir = tmp("sk-in")
-    val storeDir = tmp("sk-store")
-    val ckpt = tmp("sk-ckpt")
+    val evDir = tempDir("sk-in")
+    val storeDir = tempDir("sk-store")
+    val ckpt = tempDir("sk-ckpt")
 
     // three arrivals splitting every day's users across batches, so
     // per-day registers only converge if the stored fold really
@@ -551,7 +547,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("A12: rate listener reports per-batch totals like LoggerManager") {
     val events = Tables(spark, sf).events
-    val evDir = tmp("rate-in")
+    val evDir = tempDir("rate-in")
     events.limit(100).write.mode("overwrite").parquet(evDir.resolve("p").toString)
 
     val listener = new RateListener
