@@ -39,10 +39,10 @@ object SparkEntry {
     *     Structured Streaming pipeline to completion and returns the
     *     sink as a batch frame;
     *   - iterative / snapshot kernels (k-core, PageRank fixpoints,
-    *     decile-lift's 10-row snapshot, the prefix scans'
-    *     per-partition offset pass): each
-    *     round must materialize before the next builds on it, and
-    *     generation caches release once the small result is out;
+    *     the running-aggregate prefix scans' per-partition offset
+    *     pass): each round must materialize before the next builds on
+    *     it, and generation caches release once the small result is
+    *     out;
     *   - landed-artifact reads (the BPE vocab collect, the shingle
     *     df-skew stat): a tiny job per construction against a
     *     DerivedTable-landed table.
@@ -72,7 +72,7 @@ object SparkEntry {
     "q_stream_session_tws", "q_stream_rate_limit", "q_stream_decontaminate",
     "q_stream_sync_log", "q_stream_coverage", "q_stream_drift",
     "q_stream_checksum",
-    "q_kcore", "q_pagerank", "q_decile_lift",
+    "q_kcore", "q_pagerank",
     "q_pps_sample", "q_lateness_audit", "q_tokenizer_apply",
     "q_tokenizer_fertility",
     // two-pass prefix-scan (per-partition min job at construction, r9)
@@ -81,17 +81,6 @@ object SparkEntry {
     // hot-bucket pre-check aggregates the band keys at construction
     // (r15 verdict task 4 guard)
     "q_dedup_minhash",
-    // the zipWithIndex total-rank pattern (the scale-correct
-    // alternative to a single-partition row_number window) counts
-    // partitions with an eager job at construction
-    "q_curriculum_order", "q_export_shards", "q_global_shuffle",
-    "q_rarity_score", "q_rfm", "q_winsorize", "q_lm_buckets",
-    // NOT q_rank_migration (since r16): its two top-20 ranks come off
-    // a TakeOrdered whose RDD is single-partition, so zipWithIndex
-    // skips its partition-count job — construction is lazy again
-    "q_zipf_octaves",
-    // composes q_lm_buckets, inheriting its eager rank pass
-    "q_quality_confusion",
     // eager-checkpoints its result to release the barrier caches
     // it pins during the build (ADVICE r10 release-path fix)
     "q_bloom_contamination",
@@ -115,6 +104,10 @@ object SparkEntry {
     "q_hybrid_search",
     // streaming drive + per-arrival optimize policy (A35)
     "q_stream_auto_optimize")
+  // NOT in the set: the total-rank queries (q_curriculum_order,
+  // q_rfm, q_decile_lift, q_lm_buckets, …) — `row_position()` ranks
+  // inside the plan, and its partition-count job runs when the query
+  // executes, not when the frame is built.
   // NOT in the set: q_store_concurrent — its two-thread CAS-retry
   // build is a cold-DerivedTable landing (idempotent cache warming,
   // like the q_cdc_* lines table); once the store directory exists

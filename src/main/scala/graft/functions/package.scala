@@ -189,6 +189,17 @@ package object functions {
   def cosine_double(a: Column, b: Column): Column =
     dot_double(a, b) / (norm_double(a) * norm_double(b))
 
+  /** 0-based position of each row in its input's order — the
+    * distributed total rank. Select it directly above an
+    * `orderBy(total key)`: Spark's `AttachDistributedSequence` node
+    * numbers the sorted partitions in order (per-partition counts,
+    * then offsets), so no single-partition window is involved and the
+    * count job runs when the query executes, not when the frame is
+    * built. Pinned by RowPositionSpec.
+    */
+  def row_position(): Column =
+    toCol(org.apache.spark.sql.catalyst.expressions.DistributedSequenceID())
+
   /** Register SQL names for ALL custom expressions on an
     * already-built session (`getOrCreate()` silently ignores
     * `.withExtensions` when a session exists) — the same function

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.row_position
 import graft.sources.Tables
 
 /** E-block: product/ops analytics shapes a curation team runs next to
@@ -192,109 +193,54 @@ object AnalyticsQueries {
   /** E6: RFM segmentation — recency/frequency/monetary quintiles per
     * customer. Each quintile needs a global rank over the customer
     * aggregate; a single-partition window would serialize that, so
-    * ranks come from a distributed total sort + zipWithIndex — the
-    * same no-single-partition pattern as the C30 curriculum order.
+    * ranks come from a distributed total sort + `row_position()` —
+    * the same no-single-partition pattern as the C30 curriculum order.
     * The three metrics are MELTED into one (custkey, metric_id,
     * sort_val) frame of 3n rows and ranked in a SINGLE global sort
     * keyed (metric_id, sort_val, custkey): each metric occupies a
-    * contiguous index block of exactly n rows, so per-metric rank =
-    * global_index - metric_id*n. Recency ranks descending via sign
-    * flip. One sort + one zipWithIndex + one pivot-back groupBy
-    * replaces three sorts, three zipWithIndex jobs, and three joins
-    * (2.7s -> ~1.2s at sf0.1); the melt is 3x the customer frame but
-    * still aggregate-sized, and every stage stays range-partitioned
-    * at cluster scale. Scores are 1 + (5*(rank-1)) div n (exact
-    * integer bucketing, identical in both engines; ties broken by
-    * custkey so the order is total). Job shape is the G3 two-phase
-    * scan, not zipWithIndex: the range-sorted melt freezes into ONE
-    * cached RDD lineage, phase 1 collects one count per partition
-    * (which also yields n — no separate count subplan), phase 2
-    * seeds each partition's global index from the exclusive prefix
-    * sum and folds the three metric slots with a reduceByKey pivot.
-    * The recency origin (max order date) also falls out of phase 1
-    * as a per-partition max, so there is NO separate max-date
-    * subplan (measured ~1.5s zipWithIndex+SQL-pivot -> ~0.6s at
-    * sf0.1); output row order is left to the driver's row-sorted
-    * compare. At scale every stage is range- or hash-partitioned;
-    * nothing driver-sized but the 32 per-partition (count, max)
-    * pairs.
+    * contiguous position block of exactly n rows, so per-metric
+    * 0-based rank = pos - metric_id*n. Recency orders by epoch-days
+    * ascending (stalest first). n and the recency origin (max order
+    * date) come from ONE broadcast scalar aggregate over the customer
+    * frame, and a groupBy(o_custkey) with one max(when(mid = …)) slot
+    * per metric pivots the three ranked rows back into one. Scores
+    * are 1 + (5*rank) div n (exact integer bucketing, identical in
+    * both engines; ties broken by custkey so the order is total).
+    * At scale every stage is range- or hash-partitioned; nothing
+    * driver-sized.
     */
   def qRfm(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val per = Tables(spark, dir).orders
       .groupBy(col("o_custkey"))
       .agg(max(to_date(col("o_orderdate"))).as("last_d"),
         count(lit(1)).as("frequency"),
         sum(round(col("o_totalprice") * 100).cast("long")).as("monetary_cents"))
-    // melt: metric_id 0 = recency, 1 = frequency, 2 = monetary. The
-    // recency ORDER key is epoch-days of last_d ascending (stalest
-    // first) — identical ordering to the old -(mxd - last_d) sign
-    // flip but with NO max-date subplan: the recency origin falls
-    // out of phase 1 below as max(epoch_days), so the whole melt is
-    // one straight-line pipeline over the customer aggregate
-    val melted = per
       .withColumn("epoch_days",
         datediff(col("last_d"), lit(java.sql.Date.valueOf("1970-01-01")))
           .cast("long"))
+    val stats = broadcast(per.agg(count(lit(1)).as("n"),
+      max(col("epoch_days")).as("mxd")))
+    // melt: metric_id 0 = recency, 1 = frequency, 2 = monetary
+    val ranked = per
       .select(col("o_custkey"), expr(
       """stack(3,
-        |  0L, epoch_days,      epoch_days,
-        |  1L, frequency,       frequency,
-        |  2L, monetary_cents,  monetary_cents) AS (mid, sort_val, v)""".stripMargin))
-      .select(col("o_custkey"), col("mid"), col("sort_val"), col("v"))
-    // freeze the range-sorted melt into one cached RDD lineage (the
-    // G3 contract: both phases read the same materialized shuffle)
-    val parts = melted
-      .repartitionByRange(32, col("mid"), col("sort_val"), col("o_custkey"))
-      .sortWithinPartitions(col("mid"), col("sort_val"), col("o_custkey"))
-      .as[(Long, Long, Long, Long)].rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // phase 1: ONE (count, max-epoch-day) pair per partition (this
-    // is the query's eager job; it materializes the cache the final
-    // job reads) — the count seeds global ranks, the max is the
-    // recency origin
-    val phase1 = parts.mapPartitionsWithIndex { (i, it) =>
-      var c = 0L; var mx = Long.MinValue
-      it.foreach { t => c += 1; if (t._2 == 0L && t._4 > mx) mx = t._4 }
-      Iterator((i, c, mx))
-    }.collect().sortBy(_._1)
-    val offsets = phase1.map(_._2).scanLeft(0L)(_ + _)
-    val n = math.max(offsets.last / 3, 1L)
-    val mxdDays = phase1.map(_._3).max
-    // phase 2: offset-seeded global index -> per-metric rank ->
-    // quintile score, then a reduceByKey pivot merging the three
-    // metric slots element-wise (scores are >= 1 and metric values
-    // >= 0, so zero-init + max merge is exact)
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val folded = parts.mapPartitionsWithIndex { (i, it) =>
-      var gidx = offsets(i) - 1
-      it.map { case (ck, mid, _, v) =>
-        gidx += 1
-        val slots = new Array[Long](6)
-        slots(mid.toInt) = if (mid == 0L) mxdDays - v else v
-        slots(3 + mid.toInt) = 1L + (5L * (gidx - mid * n)) / n
-        (ck, slots)
-      }
-    }
-      .reduceByKey { (a, b) =>
-        var i = 0
-        while (i < 6) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
-        a
-      }
-      .map { case (ck, s) => Row(ck, s(0), s(1), s(2), s(3), s(4), s(5),
-        s(3) * 100 + s(4) * 10 + s(5)) }
-    val out = spark.createDataFrame(folded, StructType(Seq(
-      "o_custkey", "recency_days", "frequency", "monetary_cents",
-      "r_score", "f_score", "m_score", "rfm_code")
-      .map(StructField(_, LongType, nullable = false))))
-      // eager-checkpoint the customer-sized result, then RELEASE the
-      // fact-sized melt pin (ADVICE r10): rank correctness needs both
-      // phases to read one materialization, but once the result
-      // exists the melt cache would otherwise outlive the query call
-      .localCheckpoint(true)
-    parts.unpersist(blocking = false)
-    out
+        |  0L, epoch_days,
+        |  1L, frequency,
+        |  2L, monetary_cents) AS (mid, v)""".stripMargin))
+      .orderBy(col("mid"), col("v"), col("o_custkey"))
+      .select(col("o_custkey"), col("mid"), col("v"), row_position().as("pos"))
+    def slot(m: Long, c: org.apache.spark.sql.Column) = max(when(col("mid") === m, c))
+    val score = expr("1 + (5 * (pos - mid * n)) div n")
+    ranked.crossJoin(stats)
+      .groupBy(col("o_custkey"))
+      .agg(slot(0L, col("mxd") - col("v")).as("recency_days"),
+        slot(1L, col("v")).as("frequency"),
+        slot(2L, col("v")).as("monetary_cents"),
+        slot(0L, score).as("r_score"),
+        slot(1L, score).as("f_score"),
+        slot(2L, score).as("m_score"))
+      .withColumn("rfm_code",
+        col("r_score") * 100 + col("f_score") * 10 + col("m_score"))
   }
 
   /** E7: Benford first-digit audit over order totals — the classic
@@ -656,59 +602,39 @@ object AnalyticsQueries {
 
   /** E15: decile lift chart — the campaign-targeting report: score
     * customers by total spend, cut into spend deciles by distributed
-    * rank (the E6 zipWithIndex total sort — no single-partition
+    * rank (the E6 `row_position()` total sort — no single-partition
     * window at any scale), and compare each decile's conversion rate
     * (>= 1 urgent-priority order) against the base rate. Lift is
     * computed ppm-over-ppm — conv_ppm·10⁶ div base_ppm — so every
     * intermediate stays <= 10¹² regardless of corpus size (the raw
     * cross-product form n_conv·n_c·10⁶ would overflow at billions of
-    * customers). Ten-row output; one fact-sized aggregate + one
+    * customers). Ten-row output; one fact-sized aggregate (its
+    * exchange serves both the rank and the base-rate scalar) + one
     * customer-frame sort. A degenerate corpus with zero conversions
     * yields null lift (nullif guard on the base rate, identical in
     * the oracle) rather than an engine-divergent div-by-zero.
-    *
-    * EAGER-EXECUTION CONTRACT (the qKcore/qPagerank precedent): the
-    * decile cut needs a distributed total rank — `rdd.zipWithIndex`
-    * launches its partition-count job at call time — and the scored
-    * customer frame is cached across two consumers, so the builder
-    * runs the job and returns the ten-row snapshot as a local
-    * relation, releasing the cache in a finally.
     */
   def qDecileLift(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val per = Tables(spark, dir).orders
       .groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("spend_cents"),
         max(when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L))
           .as("converted"))
-      .cache()
-    val ranked = per
-      .orderBy(col("spend_cents").desc, col("o_custkey"))
-      .select(col("o_custkey"), col("spend_cents"), col("converted"))
-      .as[(Long, Long, Long)].rdd.zipWithIndex()
-      .map { case ((_, _, cv), i) => (cv, i + 1L) }
-      .toDF("converted", "rnk")
     val nF = broadcast(per.agg(count(lit(1)).as("n_c"),
       sum(col("converted")).as("tot_conv")))
-    try {
-      val out = ranked.crossJoin(nF)
-        .select(expr("1 + (10 * (rnk - 1)) div n_c").as("decile"),
-          col("converted"), col("n_c"), col("tot_conv"))
-        .groupBy(col("decile"))
-        .agg(count(lit(1)).as("n_customers"), sum(col("converted")).as("n_converted"),
-          max(col("n_c")).as("n_c"), max(col("tot_conv")).as("tot_conv"))
-        .select(col("decile"), col("n_customers"), col("n_converted"),
-          expr("n_converted * 1000000 div n_customers").as("conv_ppm"),
-          expr("(n_converted * 1000000 div n_customers) * 1000000 div " +
-            "nullif(tot_conv * 1000000 div n_c, 0)").as("lift_ppm"))
-        .orderBy(col("decile"))
-      val rows = out.collect() // ten-row snapshot so the scored frame can release
-      rows.map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3),
-          if (x.isNullAt(4)) null.asInstanceOf[java.lang.Long] else java.lang.Long.valueOf(x.getLong(4))))
-        .toSeq.toDF("decile", "n_customers", "n_converted", "conv_ppm", "lift_ppm")
-    } finally {
-      per.unpersist()
-    }
+    per.orderBy(col("spend_cents").desc, col("o_custkey"))
+      .select(col("converted"), row_position().as("pos"))
+      .crossJoin(nF)
+      .select(expr("1 + (10 * pos) div n_c").as("decile"),
+        col("converted"), col("n_c"), col("tot_conv"))
+      .groupBy(col("decile"))
+      .agg(count(lit(1)).as("n_customers"), sum(col("converted")).as("n_converted"),
+        max(col("n_c")).as("n_c"), max(col("tot_conv")).as("tot_conv"))
+      .select(col("decile"), col("n_customers"), col("n_converted"),
+        expr("n_converted * 1000000 div n_customers").as("conv_ppm"),
+        expr("(n_converted * 1000000 div n_customers) * 1000000 div " +
+          "nullif(tot_conv * 1000000 div n_c, 0)").as("lift_ppm"))
+      .orderBy(col("decile"))
   }
 
   /** E17: per-user session features — the behavioral feature block a
@@ -1157,23 +1083,25 @@ object AnalyticsQueries {
     */
   def qHitsScores(spark: SparkSession, dir: String): DataFrame = {
     val e = supplierPartEdges(spark, dir)
-    // r17 (guide §2.1/§2.4, verdict item 7): the four layers used to
-    // shuffle their edge-scale join output once EACH (4 exchanges, 4
-    // edge scans). The edge frame is now exchanged exactly twice —
-    // once keyed by p, once by s — and every layer is arranged so its
-    // groupBy key matches its edge side's partitioning: the
-    // mutual-reinforcement joins attach the previous (aggregate-
-    // sized, degree-bounded) layer by BROADCAST, which preserves the
-    // streamed side's partitioning, so all four aggregates are
-    // exchange-free and ReuseExchange serves each repartition to both
-    // of its consumers (2 edge scans total). Values are unchanged:
-    // the same joins, the same decimal(38,0) sums.
+    // The edge frame is exchanged exactly twice — once keyed by p,
+    // once by s — and every layer is arranged so its groupBy key
+    // matches its edge side's partitioning: each mutual-reinforcement
+    // join attaches the previous (aggregate-sized, degree-bounded)
+    // layer as the right side of a LEFT join. Every edge key has a row
+    // in the previous layer, so left = inner here, and a left join
+    // can only build its right side: no hint is needed, the edge side
+    // is never the build side, and the planner (AQE at runtime)
+    // broadcasts the layer while it fits and shuffles it when it does
+    // not. A broadcast keeps the streamed side's partitioning, so all
+    // four aggregates are exchange-free, and ReuseExchange serves the
+    // s-keyed repartition to both h-layers. Values are the same joins
+    // and the same decimal(38,0) sums.
     val ep = e.repartition(col("p"))
     val es = e.repartition(col("s"))
     val a1 = ep.groupBy(col("p")).agg(count(lit(1)).cast("decimal(38,0)").as("a1"))
-    val h1 = es.join(broadcast(a1), Seq("p")).groupBy(col("s")).agg(sum(col("a1")).as("h1"))
-    val a2 = ep.join(broadcast(h1), Seq("s")).groupBy(col("p")).agg(sum(col("h1")).as("a2"))
-    val h2 = es.join(broadcast(a2), Seq("p")).groupBy(col("s")).agg(sum(col("a2")).as("h2"))
+    val h1 = es.join(a1, Seq("p"), "left").groupBy(col("s")).agg(sum(col("a1")).as("h1"))
+    val a2 = ep.join(h1, Seq("s"), "left").groupBy(col("p")).agg(sum(col("h1")).as("a2"))
+    val h2 = es.join(a2, Seq("p"), "left").groupBy(col("s")).agg(sum(col("a2")).as("h2"))
     h1.join(h2, Seq("s"))
       .select(col("s").as("l_suppkey"),
         col("h1").cast("long").as("hub1"), col("h2").cast("long").as("hub2"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.row_position
 import graft.sources.Tables
 
 /** C-block extensions, round 4: corpus-scale ingest/curation
@@ -148,24 +149,18 @@ object CorpusQueries {
     * total order by md5(seed || doc_id) is uniform (no hot range),
     * reproducible in any engine, and re-materializing the corpus
     * yields the identical order. The position is assigned by
-    * range-partitioned sort + zipWithIndex (per-partition counts ->
-    * cumulative offsets -> local ranks), NOT a global row_number
-    * window — the window's empty partition spec would collapse the
-    * whole corpus into ONE task. zipWithIndex is one of the rare
-    * legitimate RDD drops: a global contiguous index is per-partition
-    * imperative logic the DataFrame API cannot express without that
-    * single-partition window. Seed pinned ("graft-shuffle-42").
+    * range-partitioned sort + `row_position()` (per-partition counts
+    * -> cumulative offsets -> local ranks, inside the plan), NOT a
+    * global row_number window — the window's empty partition spec
+    * would collapse the whole corpus into ONE task. Seed pinned
+    * ("graft-shuffle-42").
     */
   def qGlobalShuffle(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val key = md5(concat(lit("graft-shuffle-42:"), col("doc_id").cast("string")))
-    val sorted = Tables(spark, dir).documents
+    Tables(spark, dir).documents
       .select(col("doc_id"), key.as("k"))
       .orderBy(col("k"), col("doc_id")) // range partition + in-partition sort
-    sorted.select(col("doc_id")).as[Long].rdd
-      .zipWithIndex() // preserves the range-sorted partition order
-      .map { case (id, i) => (id, i + 1L) }
-      .toDF("doc_id", "pos")
+      .select(col("doc_id"), (row_position() + 1L).as("pos"))
       .orderBy(col("doc_id"))
   }
 
@@ -183,20 +178,17 @@ object CorpusQueries {
     * dataloader relies on), manifest = per-shard doc count, char
     * volume, and an id-sum checksum the loader can verify against.
     * Same scan shape as C27 (range sort on the md5 key +
-    * zipWithIndex, no single-partition window); the 16-row manifest
-    * aggregate is free. A real export would partitionBy(shard_id) on
-    * write — the manifest is what's checkable cross-engine.
+    * `row_position()`, no single-partition window); the 16-row
+    * manifest aggregate is free. A real export would
+    * partitionBy(shard_id) on write — the manifest is what's
+    * checkable cross-engine.
     */
   def qExportShards(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val key = md5(concat(lit("graft-shard-13:"), col("doc_id").cast("string")))
-    val ordered = Tables(spark, dir).documents
+    Tables(spark, dir).documents
       .select(col("doc_id"), col("n_chars"), key.as("k"))
       .orderBy(col("k"), col("doc_id"))
-    ordered.select(col("doc_id"), col("n_chars")).as[(Long, Long)].rdd
-      .zipWithIndex()
-      .map { case ((id, nc), i) => (i % 16, id, nc) }
-      .toDF("shard_id", "doc_id", "n_chars")
+      .select((row_position() % 16L).as("shard_id"), col("doc_id"), col("n_chars"))
       .groupBy(col("shard_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
         sum(col("doc_id")).as("id_sum"))
@@ -631,34 +623,21 @@ object CorpusQueries {
     * Scale shape: the per-language rank does NOT use a per-lang
     * window (a hot language would collapse into one task). It is the
     * C27/C30 pattern — ONE range-partitioned global sort on
-    * (lang, score, doc_id) + zipWithIndex — and per-language ranks
-    * fall out by subtracting each language's first global position,
-    * a #langs-row broadcast. Corpus-sized data crosses exactly one
-    * range exchange beyond the C69 scoring passes.
+    * (lang, score, doc_id) + `row_position()` — and per-language
+    * ranks fall out by subtracting each language's first global
+    * position, a #langs-row broadcast. Corpus-sized data crosses
+    * exactly one range exchange beyond the C69 scoring passes; the
+    * offset aggregate and the rank join read it through one reused
+    * exchange.
     */
   def qLmBuckets(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val scores = lmScoreFrame(spark, dir)
+    val ranked = lmScoreFrame(spark, dir)
       .select(col("doc_id"), col("ppl_milli_ebits"))
       .join(Tables(spark, dir).documents.select(col("doc_id"), col("lang")),
         Seq("doc_id"))
-    // persist the SORTED rdd before zipWithIndex (r16, guide §5:
-    // reused AND expensive): zipWithIndex's partition-offset job
-    // materializes it into the cache, and the two ranked consumers
-    // below (the per-lang offset aggregate and the rank join) then
-    // read it back — without the pin the global sort AND the whole
-    // upstream C69 scoring pass re-ran once per consumer (3 full
-    // computations per call, measured 16 jobs on q_quality_confusion).
-    // Bench purges persistent RDDs between queries, so every timed
-    // run still pays the sort+score once from parquet.
-    val sorted = scores
-      .select(col("lang"), col("ppl_milli_ebits"), col("doc_id"))
       .orderBy(col("lang"), col("ppl_milli_ebits"), col("doc_id"))
-      .as[(String, Long, Long)].rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ranked = sorted.zipWithIndex()
-      .map { case ((lang, ppl, id), i) => (lang, ppl, id, i + 1L) }
-      .toDF("lang", "ppl_milli_ebits", "doc_id", "gpos")
+      .select(col("lang"), col("ppl_milli_ebits"), col("doc_id"),
+        (row_position() + 1L).as("gpos"))
     val offs = ranked.groupBy(col("lang"))
       .agg(min(col("gpos")).as("off"), count(lit(1)).as("n"))
     ranked.join(broadcast(offs), Seq("lang"))
@@ -957,24 +936,21 @@ object CorpusQueries {
     * template-collapsed or generated corpus shows up immediately as a
     * fat head (decay ≪ 1e6) or truncated tail — the corpus-health
     * twin of C31's rarity score, exact-integer end to end. Vocab rank
-    * is the C31 discipline (distributed sort + zipWithIndex, never a
-    * single-partition window); octave assignment is exact map-side
+    * is the C31 discipline (distributed sort + `row_position()`, never
+    * a single-partition window); octave assignment is exact map-side
     * bit arithmetic — length(bin(rank)) − 1 IS floor(log2) for
     * positive integers on both engines, no range join, no float log;
-    * the decay lag runs over the ≤40-row octave frame. At 100 TB the
-    * vocabulary (~1e9 types ≪ 2^40) is the only post-aggregate frame
-    * and it range-sorts in parallel.
+    * the decay lag is a single-partition window over the octave
+    * frame, which has ≤ 64 rows because rank < 2^63 (≤ 40 at any
+    * real vocabulary). At 100 TB the vocabulary (~1e9 types ≪ 2^40)
+    * is the only post-aggregate frame and it range-sorts in parallel.
     */
   def qZipfOctaves(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val freq = spreadIfOneSplit(Tables(spark, dir).documents.select(col("text")))
       .select(explode(split(col("text"), " ")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val rk = freq.orderBy(col("cnt").desc, col("tok"))
-      .select(col("tok"), col("cnt")).as[(String, Long)].rdd
-      .zipWithIndex()
-      .map { case ((_, cnt), i) => (i + 1L, cnt) }
-      .toDF("rank", "cnt")
+      .select((row_position() + 1L).as("rank"), col("cnt"))
     val byOct = rk
       .withColumn("octave", (length(expr("bin(rank)")) - 1).cast("long"))
       .groupBy(col("octave"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.row_position
 import graft.sources.Tables
 import graft.text.TextAnalysis
 
@@ -242,20 +243,16 @@ object CurationQueries {
   /** C30: curriculum ordering — global training order by quality tier
     * (word-count bucket, easy-to-hard) with a deterministic shuffle
     * WITHIN each tier (md5 priority, like C27). Position assignment
-    * is range-sort + zipWithIndex, never a single-partition window.
+    * is range-sort + `row_position()`, never a single-partition window.
     */
   def qCurriculumOrder(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val d = Tables(spark, dir).documents
       .withColumn("tier",
         least(lit(3L), floor(size(split(col("text"), " ")) / lit(50.0)).cast("long")))
     val key = md5(concat(lit("graft-curr-1:"), col("doc_id").cast("string")))
     d.select(col("doc_id"), col("tier"), key.as("k"))
       .orderBy(col("tier"), col("k"), col("doc_id"))
-      .select(col("doc_id"), col("tier")).as[(Long, Long)].rdd
-      .zipWithIndex()
-      .map { case ((id, t), i) => (id, t, i + 1L) }
-      .toDF("doc_id", "tier", "pos")
+      .select(col("doc_id"), col("tier"), (row_position() + 1L).as("pos"))
       .orderBy(col("doc_id"))
   }
 
@@ -265,19 +262,15 @@ object CurationQueries {
     * ranks, scaled mean), so the score is bit-reproducible anywhere —
     * the trap this sidesteps is summing per-word log-probs in
     * doubles, whose aggregation order drifts across partitionings.
-    * Vocab ranking is sort + zipWithIndex (no single-partition
+    * Vocab ranking is sort + `row_position()` (no single-partition
     * window); the doc-side join shuffles on the word key.
     */
   def qRarityScore(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val w = Tables(spark, dir).documents
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
     val freq = w.groupBy(col("word")).agg(count(lit(1)).as("cnt"))
     val rk = freq.orderBy(col("cnt").desc, col("word"))
-      .select(col("word"), col("cnt")).as[(String, Long)].rdd
-      .zipWithIndex()
-      .map { case ((word, _), i) => (word, i + 1L) }
-      .toDF("word", "rank")
+      .select(col("word"), (row_position() + 1L).as("rank"))
     w.join(rk, "word")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
@@ -434,26 +427,19 @@ object CurationQueries {
     * thresholds are EXACT order statistics (rank n div 100 + 1 and
     * n - n div 100 over (cents, orderkey) — a total order, so both
     * engines agree), found by the C30/E6 distributed-total-rank
-    * pattern: range-partitioned sort + zipWithIndex, never a
+    * pattern: range-partitioned sort + `row_position()`, never a
     * single-partition window. The two threshold rows broadcast back
-    * against the fact scan for the clip aggregate. zipWithIndex
-    * launches its partition-count job at call time (the documented
-    * eager-materialization contract of every rank-based query here).
+    * against the fact scan for the clip aggregate.
     */
   def qWinsorize(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val cents = Tables(spark, dir).orders
       .select(round(col("o_totalprice") * 100).cast("long").as("cents"),
         col("o_orderkey"))
     val nF = broadcast(cents.agg(count(lit(1)).as("n")))
     val ranked = cents.orderBy(col("cents"), col("o_orderkey"))
-      .as[(Long, Long)].rdd.zipWithIndex()
-      .map { case ((c, _), i) => (c, i + 1L) }
-      .toDF("cents", "r")
-    // BOTH thresholds picked in ONE pass over the ranked frame: the
-    // previous two-subplan form (separate lo and hi filters) put two
-    // RDDScan branches in the final plan, re-running the total sort +
-    // zipWithIndex twice
+      .select(col("cents"), (row_position() + 1L).as("r"))
+    // BOTH thresholds picked in ONE pass over the ranked frame: two
+    // separate lo and hi filters would rank the sorted frame twice
     val thresholds = ranked.crossJoin(nF)
       .filter(col("r") === expr("n div 100 + 1") ||
         col("r") === expr("n - n div 100"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.functions.row_position
 import graft.operators.CorpusQueries
 import graft.store.SnapshotStore
 
@@ -65,17 +66,17 @@ object QualityGateStream {
     * model corpus (CCNet's percentile cut — an absolute constant
     * would not transfer across corpora; measured: the sf0.01-tuned
     * constant admitted 6 of 5000 docs at sf0.1). Computed ONCE per
-    * model, offline, with the C27 range-sort + zipWithIndex pattern
-    * (never a single-partition window), and frozen alongside the
-    * deficit table.
+    * model, offline, with the C27 range-sort + `row_position()`
+    * pattern (never a single-partition window), and frozen alongside
+    * the deficit table.
     */
   def modelThreshold(spark: SparkSession, modelDir: String): Long = {
-    import spark.implicits._
     val scores = CorpusQueries.lmScoreFrame(spark, modelDir)
       .select(col("ppl_milli_ebits"))
     val k = (scores.count() + 1L) / 2L
-    scores.orderBy(col("ppl_milli_ebits")).as[Long].rdd
-      .zipWithIndex().filter(_._2 == k - 1L).map(_._1).first()
+    scores.orderBy(col("ppl_milli_ebits"))
+      .select(col("ppl_milli_ebits"), row_position().as("pos"))
+      .filter(col("pos") === k - 1L).first().getLong(0)
   }
 
   /** Score one batch against the frozen model: (admitted rows in the

@@ -107,6 +107,16 @@ class ContractSpec extends AnyFunSuite with TempDirs {
       s"files that build a SparkSession: ${builders.mkString(", ")} (only GraftSession.scala may)")
   }
 
+  test("no source numbers rows with the RDD zipWithIndex()") {
+    // a total rank is `row_position()` over a sorted frame: it stays in
+    // the plan, where the RDD form leaves it and runs its partition-
+    // count job while the frame is built. Only the RDD method takes
+    // parens; a Scala collection's zipWithIndex does not.
+    val rddRanks = mainSourcesMatching("""zipWithIndex\s*\(\s*\)""".r)
+    assert(rddRanks.isEmpty,
+      s"files that call zipWithIndex(): ${rddRanks.mkString(", ")} (rank with row_position())")
+  }
+
   test("DerivedTable is the only place graft picks a temporary directory") {
     // a directory made under the shared tmpdir outlives the session
     // and is visible to every other process on the host; derived and

@@ -32,8 +32,8 @@ class PlanShapeSpec extends AnyFunSuite with TempDirs {
     // prefix-scan template in r9 and is window-free now. A NEW
     // global window failing this list
     // is exactly the regression this test exists to catch — either
-    // rewrite it on the zipWithIndex pattern or prove its frame
-    // bounded and allowlist it here with the proof.
+    // rewrite it as a sort + `row_position()` total rank or prove its
+    // frame bounded and allowlist it here with the proof.
     import org.apache.spark.sql.catalyst.plans.logical.Window
     val allowed: Map[String, Set[String]] = Map(
       "q_anomaly"        -> Set("d"),           // day calendar
@@ -47,6 +47,9 @@ class PlanShapeSpec extends AnyFunSuite with TempDirs {
       // bounded by the value domain (~hundreds of lengths), never
       // corpus size (G9)
       "q_ks_drift"       -> Set("n_chars"),
+      // lag over the rank-octave frame: octave = floor(log2(rank))
+      // and rank < 2^63, so <= 64 octave rows (C75)
+      "q_zipf_octaves"   -> Set("octave"),
       "q_revenue_share"  -> Set(""))            // 25-row nation frame
     val found = scala.collection.mutable.Map
       .empty[String, Set[String]].withDefaultValue(Set.empty)
