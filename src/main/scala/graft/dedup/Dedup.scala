@@ -549,30 +549,7 @@ object Dedup {
     * oracle-checkable twin; production-scale candidate generation is
     * LSH (graft.ann.Ann).
     */
-  /** Dup-cluster formation: connected components over a near-dup pair
-    * graph by LARGE-STAR/SMALL-STAR alternation (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14 — the
-    * public algorithm behind every production-scale CC). Round count
-    * is O(log n) in component size instead of the O(diameter) of
-    * min-label propagation (r15 verdict task 5): on a chain-shaped
-    * component the old hash-min loop paid one full-graph shuffle PER
-    * HOP and its 50-round safety cap silently returned unconverged
-    * labels past diameter 50 — the star alternation converges a
-    * 2^50-node component inside the same cap, and the cap now throws
-    * instead of silently mislabeling.
-    *
-    * Returns (id, cluster_id = min doc id reachable).
-    *
-    * NOTE: the returned frame lazily references one cached DataFrame
-    * (the final label propagation step) which therefore cannot be
-    * unpersisted here. One-shot callers (queries, demos) can ignore
-    * it; a long-lived service should use [[connectedComponentsReleasable]]
-    * and call the release handle after materializing the result.
-    */
-  def connectedComponents(pairs: DataFrame, vertices: DataFrame): DataFrame =
-    connectedComponentsReleasable(pairs, vertices)._1
-
-  /** Rounds the last [[connectedComponentsReleasable]] loop ran —
+  /** Rounds the last [[connectedComponents]] star loop ran —
     * spec-visible so the O(log n) bound is pinned by a test.
     */
   @volatile private[graft] var lastCcRounds: Int = 0
@@ -606,10 +583,22 @@ object Dedup {
       .distinct()
   }
 
-  /** [[connectedComponents]] plus a release handle that unpersists the
-    * internally-cached label frame. Call it only AFTER the result has
-    * been fully materialized (written / collected) — unpersisting
-    * first re-runs the whole propagation lineage at the next action.
+  /** Dup-cluster formation: connected components over a near-dup pair
+    * graph by LARGE-STAR/SMALL-STAR alternation (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14 — the
+    * public algorithm behind every production-scale CC). Round count
+    * is O(log n) in component size instead of the O(diameter) of
+    * min-label propagation (r15 verdict task 5): on a chain-shaped
+    * component the old hash-min loop paid one full-graph shuffle PER
+    * HOP and its 50-round safety cap silently returned unconverged
+    * labels past diameter 50 — the star alternation converges a
+    * 2^50-node component inside the same cap, and the cap now throws
+    * instead of silently mislabeling.
+    *
+    * Returns (id, cluster_id = min doc id reachable). The frame reads
+    * local checkpoints (the edge list, the final labels), which
+    * Spark's context cleaner frees once the frame is unreferenced, so
+    * there is no cache for the caller to release.
     *
     * `driverFormAt` (r16 optimization): below this EDGE-COUNT bound
     * the kernel runs union-find on the driver instead of the star
@@ -627,9 +616,8 @@ object Dedup {
     * adds no job. PipelineSpec pins both forms to identical labels
     * and forces `driverFormAt = 0` to exercise the star loop.
     */
-  def connectedComponentsReleasable(
-      pairs: DataFrame, vertices: DataFrame,
-      driverFormAt: Long = 1L << 20): (DataFrame, () => Unit) = {
+  def connectedComponents(pairs: DataFrame, vertices: DataFrame,
+                          driverFormAt: Long = 1L << 20): DataFrame = {
     // canonical undirected edge list (u > v, no self-loops) — the
     // eager localCheckpoint evaluates the (possibly expensive)
     // candidate-generation lineage exactly once; every loop round
@@ -703,7 +691,7 @@ object Dedup {
           math.max(1, labelRows.length / 500000)), schema)
       val singletons = vertices.join(labels, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("cluster_id"))
-      return (labels.unionAll(singletons), () => ())
+      return labels.unionAll(singletons)
     }
     val loopParts = math.max(1, math.min(
       edges0.rdd.getNumPartitions, (nEdges / 100000L).toInt + 1))
@@ -766,7 +754,7 @@ object Dedup {
     // result would re-run the whole lineage at the caller's action
     val singletons = vertices.join(labels, Seq("id"), "left_anti")
       .select(col("id"), col("id").as("cluster_id"))
-    (labels.unionAll(singletons), () => ())
+    labels.unionAll(singletons)
   }
 
   /** C19/C36 shared lineage: the PERSISTED cluster map. Real curation
@@ -792,11 +780,8 @@ object Dedup {
       val d = docs
       val pairs = ngramJaccardPairs(d, minJaccard = minJaccard, lenBand = lenBand)
         .select("id_a", "id_b")
-      val (cc, release) =
-        connectedComponentsReleasable(pairs, d.select(col("doc_id").as("id")))
-      // an action: the snapshot parquet is written here
-      new graft.store.SnapshotStore(spark, tmp, keyCol = "id").commit(cc)
-      release()
+      new graft.store.SnapshotStore(spark, tmp, keyCol = "id")
+        .commit(connectedComponents(pairs, d.select(col("doc_id").as("id"))))
     })(root => new graft.store.SnapshotStore(spark, root, keyCol = "id").read()
       .getOrElse(throw new IllegalStateException(s"cluster table commit failed under $root")))
 

@@ -791,24 +791,14 @@ object PipelineQueries {
     * the C58 gate and C76's labeling pass — the second consumer reads
     * the same parquet artifact, never re-runs CC.
     */
-  private[graft] def embClustersFrame(spark: SparkSession, dir: String): DataFrame = {
-    // the release handle must fire AFTER readOrBuild's parquet write
-    // materializes the CC frame (unpersisting first would force the
-    // write to replay the whole iterative lineage uncached)
-    var release: Option[() => Unit] = None
-    val out = graft.sources.DerivedTable.readOrBuild(
+  private[graft] def embClustersFrame(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.DerivedTable.readOrBuild(
       spark, "emb-clusters", dir, Seq("embeddings"), "t=0.4") {
       val emb = Tables(spark, dir).embeddings
       val pairs = Dedup.embeddingNearDups(emb, threshold = 0.4)
         .select(col("id_a"), col("id_b"))
-      val (cc, rel) = Dedup.connectedComponentsReleasable(
-        pairs, emb.select(col("vec_id").as("id")))
-      release = Some(rel)
-      cc
+      Dedup.connectedComponents(pairs, emb.select(col("vec_id").as("id")))
     }
-    release.foreach(_())
-    out
-  }
 
   /** C76: cluster labeling — the human-auditable name for every
     * multi-doc C58 cluster: top-3 terms by cluster-level TF x

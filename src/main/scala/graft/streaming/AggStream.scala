@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.store.SnapshotStore
 
 /** A22: continuously-maintained aggregate table — the streaming form
@@ -61,24 +61,18 @@ object AggStream {
   def start(spark: SparkSession, eventsDir: String, schemaDir: String,
             storeDir: String, checkpointDir: String): StreamingQuery = {
     Files.createDirectories(Paths.get(storeDir))
-    val schema = spark.read.parquet(schemaDir).schema
-    spark.readStream.schema(schema).parquet(eventsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val store = new SnapshotStore(batch.sparkSession, storeDir, keyCol)
-        // persist: mergeWith evaluates the delta twice (key pruning +
-        // fold); the partial aggregate is tiny (one row per key).
-        // txn = batchId: an additive fold is NOT replay-idempotent,
-        // so redelivery after a crash between merge and checkpoint
-        // commit must be a no-op (the store skips txn <= last).
-        val p = partials(batch).persist()
-        try store.mergeWith(p, init = identity[DataFrame], fold = foldAdd,
-          txn = Some(batchId))
-        finally p.unpersist()
-        ()
-      }
-      .start()
+    FileFoldStream.start(spark, eventsDir, schemaDir, checkpointDir) { (batch, batchId) =>
+      val store = new SnapshotStore(batch.sparkSession, storeDir, keyCol)
+      // persist: mergeWith evaluates the delta twice (key pruning +
+      // fold); the partial aggregate is tiny (one row per key).
+      // txn = batchId: an additive fold is NOT replay-idempotent,
+      // so redelivery after a crash between merge and checkpoint
+      // commit must be a no-op (the store skips txn <= last).
+      val p = partials(batch).persist()
+      try store.mergeWith(p, init = identity[DataFrame], fold = foldAdd,
+        txn = Some(batchId))
+      finally p.unpersist()
+      ()
+    }
   }
 }

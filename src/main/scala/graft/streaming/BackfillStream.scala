@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.store.SnapshotStore
 
 /** A32: late-data BACKFILL — the repair half of the A31 lifecycle.
@@ -59,20 +59,13 @@ object BackfillStream {
   def start(spark: SparkSession, routedGlob: String, schemaDir: String,
             storeDir: String, checkpointDir: String): StreamingQuery = {
     Files.createDirectories(Paths.get(storeDir))
-    val schema = spark.read.parquet(schemaDir).schema
-    spark.readStream.schema(schema).parquet(routedGlob)
-      .select(col("ts"), col("event_type"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val store = new SnapshotStore(batch.sparkSession, storeDir, keyCol)
-        val p = partials(batch).persist()
-        try store.mergeWith(p, init = identity[DataFrame], fold = foldAdd,
-          txn = Some(batchId))
-        finally p.unpersist()
-        ()
-      }
-      .start()
+    FileFoldStream.start(spark, routedGlob, schemaDir, checkpointDir) { (batch, batchId) =>
+      val store = new SnapshotStore(batch.sparkSession, storeDir, keyCol)
+      val p = partials(batch.select(col("ts"), col("event_type"))).persist()
+      try store.mergeWith(p, init = identity[DataFrame], fold = foldAdd,
+        txn = Some(batchId))
+      finally p.unpersist()
+      ()
+    }
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.store.SnapshotStore
 
 /** A39: continuously-maintained table checksum — the A38 sync-
@@ -80,14 +80,7 @@ object ChecksumStream {
   def start(spark: SparkSession, eventsDir: String, schemaDir: String,
             storeDir: String, checkpointDir: String): StreamingQuery = {
     Files.createDirectories(Paths.get(storeDir))
-    val schema = spark.read.parquet(schemaDir).schema
-    spark.readStream.schema(schema).parquet(eventsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, storeDir, batchId)
-      }
-      .start()
+    FileFoldStream.start(spark, eventsDir, schemaDir, checkpointDir)(
+      foldBatch(_, storeDir, _))
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.DiagnosticsQueries
 import graft.store.SnapshotStore
@@ -86,34 +86,8 @@ object DriftMonitorStream {
             refCounts: DataFrame, storeDir: String,
             checkpointDir: String): StreamingQuery = {
     Files.createDirectories(Paths.get(storeDir))
-    val schema = spark.read.parquet(schemaDir).schema
-    val ref = refCounts.persist()
-    ref.count()
-    val q = spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, ref, storeDir, batchId)
-      }
-      .start()
-    // release the frozen-artifact pin when THIS query terminates
-    // (the QualityGateStream listener discipline)
-    val qid = q.id
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-          if (e.id == qid) {
-            ref.unpersist()
-            spark.streams.removeListener(this)
-          }
-      })
-    q
+    FileFoldStream.start(spark, docsDir, schemaDir, checkpointDir,
+      pins = Seq(refCounts))(foldBatch(_, refCounts, storeDir, _))
   }
 
   def readLog(spark: SparkSession, storeDir: String): Option[DataFrame] =

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.store.SnapshotStore
 import graft.text.TextAnalysis
 
@@ -75,19 +75,13 @@ object IngestStream {
   def start(spark: SparkSession, docsDir: String, schemaDir: String,
             storeDir: String, checkpointDir: String): StreamingQuery = {
     Files.createDirectories(Paths.get(storeDir))
-    val schema = spark.read.parquet(schemaDir).schema
-    spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val store = new SnapshotStore(batch.sparkSession, storeDir, keyCol)
-        val cand = candidates(batch).persist()
-        try store.mergeWith(cand, init = identity[DataFrame],
-          fold = foldKeepFirst, txn = Some(batchId))
-        finally cand.unpersist()
-        ()
-      }
-      .start()
+    FileFoldStream.start(spark, docsDir, schemaDir, checkpointDir) { (batch, batchId) =>
+      val store = new SnapshotStore(batch.sparkSession, storeDir, keyCol)
+      val cand = candidates(batch).persist()
+      try store.mergeWith(cand, init = identity[DataFrame],
+        fold = foldKeepFirst, txn = Some(batchId))
+      finally cand.unpersist()
+      ()
+    }
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ann.Ann
 import graft.store.SnapshotStore
@@ -132,16 +132,10 @@ object IvfStream {
             indexDir: String, storeDir: String,
             checkpointDir: String): StreamingQuery = {
     Files.createDirectories(Paths.get(storeDir))
-    val schema = spark.read.parquet(schemaDir).schema
-    spark.readStream.schema(schema).parquet(vecsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, indexDir, storeDir, Some(batchId))
-        ()
-      }
-      .start()
+    FileFoldStream.start(spark, vecsDir, schemaDir, checkpointDir) { (batch, batchId) =>
+      mergeBatch(batch, indexDir, storeDir, Some(batchId))
+      ()
+    }
   }
 
   /** IVF top-k against the maintained index: landed centroids + the

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.store.SnapshotStore
 
 /** A31: watermark late-data ROUTING — the side-output Structured
@@ -53,47 +53,42 @@ object LateRouterStream {
     Files.createDirectories(Paths.get(acceptedDir))
     Files.createDirectories(Paths.get(lateDir))
     Files.createDirectories(Paths.get(hwmDir))
-    val schema = spark.read.parquet(schemaDir).schema
-    spark.readStream.schema(schema).parquet(eventsGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        val ledger = new SnapshotStore(ss, hwmDir, keyCol)
-        // pre-batch hwm: strictly earlier ledger rows only, so a
-        // replayed batch routes against the same mark as its first run
-        val hwmPrev: Option[Long] = ledger.read().flatMap { l =>
-          val r = l.filter(col(keyCol) < batchId)
-            .agg(max(col("mx_micros"))).head()
-          if (r.isNullAt(0)) None else Some(r.getLong(0))
-        }
-        val stamped = batch.withColumn("ts_micros", unix_micros(col("ts"))).persist()
-        try {
-          val isLate = hwmPrev match {
-            case Some(h) => col("ts_micros") < lit(h - delayMicros)
-            case None    => lit(false)
-          }
-          val routed = stamped.withColumn("is_late", isLate)
-          val outCols = schema.fieldNames.map(col).toSeq
-          routed.filter(!col("is_late")).select(outCols: _*)
-            .write.mode("overwrite")
-            .parquet(s"$acceptedDir/rec=b$batchId")
-          routed.filter(col("is_late")).select(outCols: _*)
-            .write.mode("overwrite")
-            .parquet(s"$lateDir/rec=b$batchId")
-          val mxRow = stamped.agg(max(col("ts_micros"))).head()
-          if (!mxRow.isNullAt(0)) {
-            val delta = ss.range(1).select(lit(batchId).as(keyCol),
-              lit(mxRow.getLong(0)).as("mx_micros"))
-            ledger.mergeWith(delta, init = identity[DataFrame],
-              fold = (base, d) => base.unionByName(d)
-                .groupBy(col(keyCol)).agg(max(col("mx_micros")).as("mx_micros")),
-              txn = Some(batchId))
-          }
-        } finally stamped.unpersist()
-        ()
+    // both routes land the source columns only (no ts_micros/is_late)
+    val outCols = spark.read.parquet(schemaDir).schema.fieldNames.map(col).toSeq
+    FileFoldStream.start(spark, eventsGlob, schemaDir, checkpointDir) { (batch, batchId) =>
+      val ss = batch.sparkSession
+      val ledger = new SnapshotStore(ss, hwmDir, keyCol)
+      // pre-batch hwm: strictly earlier ledger rows only, so a
+      // replayed batch routes against the same mark as its first run
+      val hwmPrev: Option[Long] = ledger.read().flatMap { l =>
+        val r = l.filter(col(keyCol) < batchId)
+          .agg(max(col("mx_micros"))).head()
+        if (r.isNullAt(0)) None else Some(r.getLong(0))
       }
-      .start()
+      val stamped = batch.withColumn("ts_micros", unix_micros(col("ts"))).persist()
+      try {
+        val isLate = hwmPrev match {
+          case Some(h) => col("ts_micros") < lit(h - delayMicros)
+          case None    => lit(false)
+        }
+        val routed = stamped.withColumn("is_late", isLate)
+        routed.filter(!col("is_late")).select(outCols: _*)
+          .write.mode("overwrite")
+          .parquet(s"$acceptedDir/rec=b$batchId")
+        routed.filter(col("is_late")).select(outCols: _*)
+          .write.mode("overwrite")
+          .parquet(s"$lateDir/rec=b$batchId")
+        val mxRow = stamped.agg(max(col("ts_micros"))).head()
+        if (!mxRow.isNullAt(0)) {
+          val delta = ss.range(1).select(lit(batchId).as(keyCol),
+            lit(mxRow.getLong(0)).as("mx_micros"))
+          ledger.mergeWith(delta, init = identity[DataFrame],
+            fold = (base, d) => base.unionByName(d)
+              .groupBy(col(keyCol)).agg(max(col("mx_micros")).as("mx_micros")),
+            txn = Some(batchId))
+        }
+      } finally stamped.unpersist()
+      ()
+    }
   }
 }

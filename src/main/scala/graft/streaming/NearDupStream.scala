@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.dedup.Dedup
 import graft.store.SnapshotStore
@@ -130,15 +130,8 @@ object NearDupStream {
   def start(spark: SparkSession, docsDir: String, schemaDir: String,
             storeDir: String, checkpointDir: String): StreamingQuery = {
     Files.createDirectories(Paths.get(storeDir))
-    val schema = spark.read.parquet(schemaDir).schema
-    spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, storeDir, Some(batchId))
-      }
-      .start()
+    FileFoldStream.start(spark, docsDir, schemaDir, checkpointDir)(
+      (batch, batchId) => mergeBatch(batch, storeDir, Some(batchId)))
   }
 
   /** Forget-propagation (r14, the A43/C105 compliance family): hard-

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.row_position
 import graft.operators.CorpusQueries
@@ -124,39 +124,13 @@ object QualityGateStream {
             modelDir: String, storeDir: String, checkpointDir: String,
             threshold: Option[Long] = None): StreamingQuery = {
     Files.createDirectories(Paths.get(storeDir))
-    val schema = spark.read.parquet(schemaDir).schema
-    // frozen: materialized once per query start, shared by every batch
+    // frozen: pinned once per query start, shared by every batch
     val deficits = CorpusQueries.lmDeficits(spark, modelDir)
-      .persist()
-    deficits.count()
-    val thr = threshold.getOrElse(modelThreshold(spark, modelDir))
-    val q = spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, deficits, storeDir, Some(batchId), thr)
-      }
-      .start()
-    // release the frozen-artifact pin when THIS query terminates
-    // (the IvfPqIndex release-handle discipline): without it every
-    // start() in a session would pin another copy for the session's
-    // lifetime. The listener self-removes after firing.
-    val qid = q.id
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-          if (e.id == qid) {
-            deficits.unpersist()
-            spark.streams.removeListener(this)
-          }
-      })
-    q
+    FileFoldStream.start(spark, docsDir, schemaDir, checkpointDir,
+        pins = Seq(deficits)) {
+      val thr = threshold.getOrElse(modelThreshold(spark, modelDir))
+      (batch, batchId) => mergeBatch(batch, deficits, storeDir, Some(batchId), thr)
+    }
   }
 
   def readAdmitted(spark: SparkSession, storeDir: String): Option[DataFrame] =

@@ -18,18 +18,38 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * and store folds — the honest cost of the drive, comparable
   * round-over-round at a pinned SF (default sf0.01, the Verify
   * scale the SURVEY prose numbers came from).
+  *
+  * `input_rows` is read behind a fence on the listener bus: a
+  * query's progress events precede its QueryTerminatedEvent on the
+  * bus, and QueryStartedEvent reaches listeners before `start()`
+  * returns, so once every started query's termination has been
+  * delivered the counter holds all of the gate's rows. A gate whose
+  * queries do not all terminate within `fenceMs` (one left
+  * running, or a stalled bus) is booked as failed.
   */
 object StreamBench {
+  private val fenceMs = 30000L
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = graft.GraftSession.local(32, "stream-bench")
     val inputRows = new AtomicLong(0)
+    val started = new AtomicLong(0)
+    val terminated = new AtomicLong(0)
     spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.incrementAndGet()
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
         inputRows.addAndGet(e.progress.numInputRows)
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.incrementAndGet()
     })
+    def fenced(): Boolean = {
+      val deadline = System.currentTimeMillis() + fenceMs
+      while (terminated.get() < started.get() && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      terminated.get() >= started.get()
+    }
     val gates = graft.SparkEntry.queries.keys.filter(_.startsWith("q_stream_"))
       .toSeq.sorted
     val out = new StringBuilder
@@ -37,14 +57,13 @@ object StreamBench {
     gates.zipWithIndex.foreach { case (name, i) =>
       inputRows.set(0)
       val t0 = System.nanoTime()
-      val (rowsOut, ok) =
+      val (rowsOut, ran) =
         try {
           val df = graft.SparkEntry.queries(name)(spark, sfDir)
           (df.count(), true)
         } catch { case NonFatal(_) => (-1L, false) }
       val wall = (System.nanoTime() - t0) / 1e9
-      // drain the async listener bus before reading the counter
-      Thread.sleep(300)
+      val ok = fenced() && ran
       val in = inputRows.get()
       val rps = if (ok && wall > 0) in / wall else -1.0
       if (ok) total += wall

@@ -117,6 +117,15 @@ class ContractSpec extends AnyFunSuite with TempDirs {
       s"files that call zipWithIndex(): ${rddRanks.mkString(", ")} (rank with row_position())")
   }
 
+  test("one file-arrival stream shell: only it, CdcStream and the gates start a writeStream") {
+    // the file-fold modules pass their fold to FileFoldStream, which
+    // owns the source, checkpoint, trigger and pin release; a module
+    // that wires its own writeStream is a second copy of that shell
+    val writers = mainSourcesMatching("""writeStream""".r)
+    assert(writers == Seq("CdcStream.scala", "FileFoldStream.scala", "StreamQueries.scala"),
+      s"files that start a writeStream: ${writers.mkString(", ")}")
+  }
+
   test("DerivedTable is the only place graft picks a temporary directory") {
     // a directory made under the shared tmpdir outlives the session
     // and is visible to every other process on the host; derived and
@@ -260,9 +269,16 @@ class ContractSpec extends AnyFunSuite with TempDirs {
   }
 
   test("every query runs against sf0.001 without throwing") {
-    val failures = SparkEntry.queries.flatMap { case (name, fn) =>
-      try { fn(spark, "/root/testdata/sf0.001").count(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(100)}") }
+    // a builder must also leave no streaming query running, whether
+    // it succeeds or throws
+    val failures = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      val err =
+        try { fn(spark, "/root/testdata/sf0.001").count(); None }
+        catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(100)}") }
+      val running = spark.streams.active
+      running.foreach(_.stop())
+      err.toSeq ++ (if (running.isEmpty) Nil
+        else Seq(s"$name: left ${running.length} streaming queries running"))
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }

@@ -273,7 +273,7 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     val verts = (0L until n).toDF("id")
     // driverFormAt = 0 forces the distributed star loop (the default
     // dispatch would union-find a 255-edge graph on the driver)
-    val labs = Dedup.connectedComponentsReleasable(pairs, verts, 0L)._1
+    val labs = Dedup.connectedComponents(pairs, verts, driverFormAt = 0L)
     val got = labs.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got.size == n && got.values.forall(_ == 0L),
       "a 256-node path must collapse to one component rooted at 0")
@@ -295,9 +295,13 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     val m = Dedup.connectedComponents(multi, mv).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(m == expected)
-    val mStar = Dedup.connectedComponentsReleasable(multi, mv, 0L)._1
+    val mStar = Dedup.connectedComponents(multi, mv, driverFormAt = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(mStar == expected)
+    // one edge beside an isolated vertex
+    val one = Dedup.connectedComponents(Seq((1L, 2L)).toDF("id_a", "id_b"),
+      (1L to 3L).toDF("id")).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(one == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
     // empty pair set: every vertex is its own component
     val e = Dedup.connectedComponents(
       Seq.empty[(Long, Long)].toDF("id_a", "id_b"), mv)
@@ -441,16 +445,6 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     val got = Dedup.connectedComponents(pairs, verts)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
-  }
-
-  test("dup clusters: releasable variant frees its cache after materialization") {
-    import spark.implicits._
-    val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
-    val verts = (1L to 3L).toDF("id")
-    val (res, release) = Dedup.connectedComponentsReleasable(pairs, verts)
-    val got = res.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
-    release() // must not throw; frees the internally-pinned frame
   }
 
   test("dup clusters: clustersTable persists once and is shared across callers") {

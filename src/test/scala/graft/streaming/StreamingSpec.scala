@@ -566,4 +566,68 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       assert(listener.formatted.head.contains("rec/s"))
     } finally spark.streams.removeListener(listener)
   }
+
+  test("a gate whose arrival throws while it lands stops its query") {
+    import graft.operators.StreamQueries.drive
+    val ok = spark.range(20).toDF("id")
+    val boom = spark.range(20).select(
+      when(col("id") === 7, raise_error(lit("arrival 1 failed to land")))
+        .otherwise(col("id")).as("id"))
+    val e = intercept[Exception] {
+      drive("fail-land", "parquet", Seq(ok, boom)) { (glob, first) =>
+        FileFoldStream.start(spark, glob, first, tempDir("fail-land-ckpt").toString) {
+          (b, _) => b.count(); ()
+        }
+      }
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("arrival 1 failed to land")), e)
+    assert(spark.streams.active.isEmpty, "the failed drive left its query running")
+  }
+
+  test("a gate whose fold throws stops its query") {
+    import graft.operators.StreamQueries.drive
+    val arrivals = Seq(spark.range(10).toDF("id"), spark.range(10, 20).toDF("id"))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drive("fail-fold", "parquet", arrivals) { (glob, first) =>
+        FileFoldStream.start(spark, glob, first, tempDir("fail-fold-ckpt").toString) {
+          (_, batchId) =>
+            if (batchId == 1) throw new IllegalStateException("fold of batch 1 failed")
+        }
+      }
+    }
+    assert(String.valueOf(e.getCause.getMessage).contains("fold of batch 1 failed"), e)
+    assert(spark.streams.active.isEmpty, "the failed drive left its query running")
+  }
+
+  test("a stream's pinned frame is released when the stream stops") {
+    import org.apache.spark.storage.StorageLevel
+    val docs = Tables(spark, sf).documents
+    val inDir = tempDir("pin-in")
+    docs.coalesce(1).write.mode("overwrite").parquet(inDir.resolve("batch0").toString)
+    val (glob, first) = (inDir.toString + "/*/", inDir.resolve("batch0").toString)
+    // the listener bus that delivers the termination is asynchronous
+    def released(pinned: => DataFrame): Boolean = {
+      val deadline = System.currentTimeMillis() + 10000
+      while (pinned.storageLevel != StorageLevel.NONE && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      pinned.storageLevel == StorageLevel.NONE
+    }
+    val ref = docs.select(col("n_chars").as("v")).groupBy(col("v")).agg(count(lit(1)).as("c"))
+    val drift = DriftMonitorStream.start(spark, glob, first, ref,
+      tempDir("pin-drift").toString, tempDir("pin-drift-ckpt").toString)
+    try {
+      drift.processAllAvailable()
+      assert(ref.storageLevel != StorageLevel.NONE, "the drift reference is pinned while it runs")
+    } finally drift.stop()
+    assert(released(ref), "the drift reference stayed cached after its stream stopped")
+    def deficits = graft.operators.CorpusQueries.lmDeficits(spark, sf)
+    val gate = QualityGateStream.start(spark, glob, first, sf,
+      tempDir("pin-qg").toString, tempDir("pin-qg-ckpt").toString)
+    try {
+      gate.processAllAvailable()
+      assert(deficits.storageLevel != StorageLevel.NONE, "the LM deficits are pinned while the gate runs")
+    } finally gate.stop()
+    assert(released(deficits), "the LM deficits stayed cached after the gate stopped")
+  }
 }
