@@ -1,12 +1,15 @@
 package graft.store
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.cdc.CdcOps
 import graft.sources.Tables
@@ -47,7 +50,16 @@ final case class DataFileEntry(path: String, rows: Long, minKey: Long, maxKey: L
   * manifest at DataFrame-construction time, never by directory
   * listing — a concurrent merge can add files and flip the pointer
   * without tearing an in-flight reader (vacuum retains enough
-  * versions for readers to finish; see `keepVersions`).
+  * versions for readers to finish; see `keepVersions`). Two paths
+  * serve a read. A lookup ([[readRange]], [[readPoint]]) whose planned
+  * files hold at most [[SnapshotStore.LocalReadMaxRows]] rows (65 536;
+  * its Scaladoc has the measured crossover) reads them on the driver
+  * at CALL time, through Spark's own parquet reader, and returns a
+  * local relation: collecting it starts no job, and no vacuum can
+  * delete its rows under the caller. Every other read — a larger
+  * lookup, [[read]], [[readVersion]], [[changes]] and the base reads
+  * of the merges, purges and [[optimize]] — is a lazy Spark scan,
+  * the path that keeps driver memory bounded for a large plan.
   *
   * This is deliberately the smallest honest subset of a
   * Delta/Iceberg-style format: manifest-level file skipping,
@@ -171,7 +183,7 @@ final class SnapshotStore(
     SnapshotStore.Header(
       txn = " txn=(-?\\d+)".r.findFirstMatchIn(h).map(_.group(1).toLong),
       schema = tag("schema").map(s => org.apache.spark.sql.types.DataType
-        .fromJson(b64(s)).asInstanceOf[org.apache.spark.sql.types.StructType]),
+        .fromJson(b64(s)).asInstanceOf[StructType]),
       renames = tag("renames").map(s => b64(s).split(";").toSeq.filter(_.nonEmpty)
         .map { tok =>
           val Array(rv, f, t) = tok.split(">")
@@ -196,7 +208,7 @@ final class SnapshotStore(
     * from before schema tracking (read falls back to parquet's own
     * schema resolution).
     */
-  def schemaOf(v: Long): Option[org.apache.spark.sql.types.StructType] =
+  def schemaOf(v: Long): Option[StructType] =
     header(v).schema
 
   /** Snapshot-isolated read of the current version (None if nothing
@@ -207,7 +219,7 @@ final class SnapshotStore(
   def readVersion(v: Long): DataFrame = {
     val files = manifestLite(v).map(_.path)
     require(files.nonEmpty, s"version $v has no data files")
-    readFiles(v, files)
+    readFiles(header(v), files)
   }
 
   /** The rename log of version v's manifest header (r15, the second
@@ -276,57 +288,61 @@ final class SnapshotStore(
     * before it carry the OLD name on disk. Files group by write
     * generation (how many renames postdate them — parsed from the
     * path, no footer read), each group reads through the current
-    * schema with names mapped BACK for its generation, maps them
-    * forward with `withColumnRenamed`, and the groups union by name.
+    * schema with names mapped BACK for its generation ([[generations]]),
+    * maps them forward by position, and the groups union by name.
     * A column ADDED after a rename freed its name cannot exist in a
     * pre-rename file (the name was taken), so the back-mapped schema
     * drops it for that group and the union null-fills it — the one
     * collision case, spec-pinned.
     */
-  private def readGenerations(st: org.apache.spark.sql.types.StructType,
-                              rens: Seq[(Long, String, String)],
-                              files: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    val groups = files.groupBy(f => rens.count(_._1 > writeVersionOf(f)))
-    groups.toSeq.sortBy(_._1).map { case (cut, fs) =>
-      if (cut == 0) spark.read.schema(st).parquet(fs: _*)
-      else {
+  private def readGenerations(st: StructType, rens: Seq[(Long, String, String)],
+                              files: Seq[String]): DataFrame =
+    generations(st, rens, files).map { g =>
+      val df = spark.read.schema(g.schema).parquet(g.files: _*)
+      if (g.names == g.schema.fieldNames.toSeq) df else df.toDF(g.names: _*)
+    }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+      .select(st.fieldNames.map(col).toIndexedSeq: _*)
+
+  /** The rename mapping both read paths share: files grouped by write
+    * generation, each with the schema its files are read through (the
+    * current types under this generation's on-disk names) and the
+    * current name every field of that schema maps forward to. A
+    * current column missing from a generation is null-filled by the
+    * reader of the whole set.
+    */
+  private def generations(st: StructType, rens: Seq[(Long, String, String)],
+                          files: Seq[String]): Seq[SnapshotStore.Generation] =
+    files.groupBy(f => rens.count(_._1 > writeVersionOf(f))).toSeq.sortBy(_._1).map {
+      case (0, fs) => SnapshotStore.Generation(fs, st, st.fieldNames.toSeq)
+      case (cut, fs) =>
         val applied = rens.takeRight(cut) // oldest-first renames to map
         // map current names back to this generation's on-disk names
         // (newest rename first), dropping any field whose back-mapped
         // name collides with another current field — that field was
         // added AFTER the rename freed the name, so it cannot be in
-        // these files; the final unionByName null-fills it
+        // these files, and it reads as null
         val backName: String => String =
           applied.reverse.foldLeft(identity[String] _) { (acc, r) =>
             (n: String) => { val m = acc(n); if (m == r._3) r._2 else m }
           }
         val mapped = st.fields.map(f => f.copy(name = backName(f.name)))
         val dup = mapped.groupBy(_.name).filter(_._2.length > 1).keySet
-        val fields = mapped.zip(st.fields).collect {
+        val kept = mapped.zip(st.fields).collect {
           // on a name collision keep the field that was RENAMED into
           // the clash (back-name ≠ current name) — the same-named
           // field was added after the rename freed the name
-          case (m, orig) if !dup.contains(m.name) || m.name != orig.name => m
-        }
+          case (m, orig) if !dup.contains(m.name) || m.name != orig.name => (m, orig.name)
+        }.toSeq
         // two CHANGED names colliding (rename → re-add → rename again,
         // read a first-generation file) cannot be disambiguated from
         // the log alone — fail loudly rather than read wrong columns
-        require(fields.map(_.name).distinct.length == fields.length,
+        require(kept.map(_._1.name).distinct.length == kept.length,
           s"ambiguous rename history: two current columns map to the " +
-            s"same on-disk name for generation-$cut files (${fields.map(_.name).mkString(",")})")
-        var df = spark.read.schema(StructType(fields)).parquet(fs: _*)
-        applied.foreach { case (_, from, to) =>
-          if (df.columns.contains(from)) df = df.withColumnRenamed(from, to)
-        }
-        df
-      }
-    }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-      .select(st.fieldNames.map(col).toIndexedSeq: _*)
-  }
+            s"same on-disk name for generation-$cut files (${kept.map(_._1.name).mkString(",")})")
+        SnapshotStore.Generation(fs, StructType(kept.map(_._1)), kept.map(_._2))
+    }
 
-  private def readFiles(v: Long, files: Seq[String]): DataFrame = {
-    val h = header(v)
+  private def readFiles(h: SnapshotStore.Header, files: Seq[String]): DataFrame = {
     val base = h.schema match {
       case Some(st) if h.renames.nonEmpty => readGenerations(st, h.renames, files)
       case Some(st) => spark.read.schema(st).parquet(files: _*)
@@ -371,17 +387,18 @@ final class SnapshotStore(
   /** Key-range read: file-skip via the manifest index (files are
     * range-clustered at commit, so a point/range lookup touches a
     * fraction of the table — Kudu's key-range-partition read path),
-    * then the exact row filter on what remains.
+    * then the exact row filter on what remains. A plan of at most
+    * [[SnapshotStore.LocalReadMaxRows]] (65 536, measured; see there)
+    * planned rows is read on the driver at call time and its frame
+    * starts no Spark job; a larger plan is a lazy Spark scan. See
+    * [[lookup]].
     */
   def readRange(lo: Long, hi: Long): DataFrame = {
     val v = currentVersion.getOrElse(
       throw new IllegalStateException(s"no committed version in $root"))
     val all = manifestLite(v)
-    val hit = all.filter(f => f.maxKey >= lo && f.minKey <= hi)
-    val base =
-      if (hit.isEmpty) readFiles(v, Seq(all.head.path)).limit(0)
-      else readFiles(v, hit.map(_.path))
-    base.filter(col(keyCol) >= lo && col(keyCol) <= hi)
+    lookup(header(v), all, all.filter(f => f.maxKey >= lo && f.minKey <= hi),
+      col(keyCol) >= lo && col(keyCol) <= hi)
   }
 
   /** Files that might contain `value` in the secondary index column —
@@ -392,6 +409,11 @@ final class SnapshotStore(
     */
   def plannedFilesPoint(value: Any): Seq[DataFileEntry] = {
     require(indexCol.isDefined, "store has no secondary index column")
+    currentVersion.toSeq.flatMap(v => bloomHits(header(v), manifest(v), value))
+  }
+
+  private def bloomHits(h: SnapshotStore.Header, entries: Seq[DataFileEntry],
+                        value: Any): Seq[DataFileEntry] = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
     // hash through the INDEX COLUMN's type, not the passed value's
     // runtime type: xxhash64 takes different byte paths per type, so
@@ -400,16 +422,14 @@ final class SnapshotStore(
     // everything — a silent false NEGATIVE, the one failure mode the
     // index must never have
     val lit0 = Literal(value)
-    currentVersion.toSeq.flatMap { v =>
-      val colType = schemaOf(v)
-        .flatMap(st => st.fields.find(_.name == indexCol.get).map(_.dataType))
-        .getOrElse(lit0.dataType)
-      val probe = if (lit0.dataType == colType) lit0
-                  else Cast(lit0, colType, Some("UTC"))
-      val h = XxHash64(Seq(probe), 42L).eval(null).asInstanceOf[Long]
-      manifest(v).filter(f =>
-        f.bloom.forall(b => graft.functions.BloomAlgos.mightContain(b, h)))
-    }
+    val colType = h.schema
+      .flatMap(st => st.fields.find(_.name == indexCol.get).map(_.dataType))
+      .getOrElse(lit0.dataType)
+    val probe = if (lit0.dataType == colType) lit0
+                else Cast(lit0, colType, Some("UTC"))
+    val hash = XxHash64(Seq(probe), 42L).eval(null).asInstanceOf[Long]
+    entries.filter(f =>
+      f.bloom.forall(b => graft.functions.BloomAlgos.mightContain(b, hash)))
   }
 
   /** Point read on the SECONDARY column: Bloom-skip data files, then
@@ -418,18 +438,187 @@ final class SnapshotStore(
     * (tenant within time, source within id range), a point predicate
     * touches a fraction of the table without any second sort order.
     * False positives only cost extra file reads; the row filter keeps
-    * the result exact.
+    * the result exact. As in [[readRange]], a plan of at most
+    * [[SnapshotStore.LocalReadMaxRows]] planned rows is read on the
+    * driver at call time and its frame starts no Spark job; a larger
+    * plan is a lazy Spark scan. See [[lookup]].
     */
   def readPoint(value: Any): DataFrame = {
+    require(indexCol.isDefined, "store has no secondary index column")
     val v = currentVersion.getOrElse(
       throw new IllegalStateException(s"no committed version in $root"))
-    val hit = plannedFilesPoint(value)
-    val base =
-      // empty plan (every file pruned — the index's best case): build
-      // the zero-row frame from ONE file, not all N footers
-      if (hit.isEmpty) readFiles(v, Seq(manifestLite(v).head.path)).limit(0)
-      else readFiles(v, hit.map(_.path))
-    base.filter(col(indexCol.get) === lit(value))
+    val h = header(v)
+    val all = manifest(v)
+    lookup(h, all, bloomHits(h, all, value), col(indexCol.get) === lit(value))
+  }
+
+  /** The one read path of [[readRange]] and [[readPoint]]: the planned
+    * files `hit` of one version (`h`, `all`) under the lookup's exact
+    * row filter `cond`.
+    *
+    * When the planned files hold at most
+    * [[SnapshotStore.LocalReadMaxRows]] rows (the manifest's `rows`
+    * column), they are read HERE, on the driver, through Spark's own
+    * parquet reader ([[scanLocal]]) with the manifest schema as the
+    * requested schema, so the reader's own widening and null-fill
+    * apply, and the rename mapping is [[generations]], the same as
+    * [[readFiles]]'. A row is kept only when it passes `cond` (as the
+    * analyzer resolved it, coercions included) as it is decoded, and
+    * the version's deletion-vector tombstones for those files are read
+    * the same way and subtracted. The result is a `LocalRelation` with
+    * the same `.filter(cond)` on top, which the optimizer evaluates
+    * (`ConvertToLocalRelation`): collecting it starts no job. The rows
+    * are read at CALL time, so a vacuum after the call cannot delete
+    * them under the caller.
+    *
+    * Larger plans, manifests from before schema tracking and schemas
+    * the vectorized reader does not serve keep the Spark scan through
+    * [[readFiles]], as every other read does: only a distributed scan
+    * keeps driver memory bounded for a large plan.
+    */
+  private def lookup(h: SnapshotStore.Header, all: Seq[DataFileEntry],
+                     hit: Seq[DataFileEntry], cond: Column): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetUtils
+    h.schema match {
+      case Some(st) if hit.map(_.rows).sum <= SnapshotStore.LocalReadMaxRows &&
+          ParquetUtils.isBatchReadSupportedForSchema(Bridge.sqlConf(spark), st) =>
+        lookupLocal(h, st, hit.map(_.path), cond)
+      case _ =>
+        // empty plan (every file pruned): build the zero-row frame from
+        // ONE file, not all N footers
+        val base =
+          if (hit.isEmpty) readFiles(h, Seq(all.head.path)).limit(0)
+          else readFiles(h, hit.map(_.path))
+        base.filter(cond)
+    }
+  }
+
+  private def lookupLocal(h: SnapshotStore.Header, st: StructType,
+                          files: Seq[String], cond: Column): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference,
+      Cast, Expression, InterpretedUnsafeProjection, Literal, Predicate}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    import org.apache.spark.sql.types.LongType
+    val out = DataTypeUtils.toAttributes(Bridge.asNullable(st))
+    def frame(rows: Seq[InternalRow]): DataFrame =
+      Bridge.ofRows(spark, LocalRelation(out, rows)).filter(cond)
+    val condition = Bridge.logicalPlan(frame(Nil)) match {
+      case Filter(c, _) => c
+      case p => throw new IllegalStateException(s"unexpected lookup plan: $p")
+    }
+    val tombstones = localTombstones(h.dv, files.toSet)
+    val key = out.find(_.name == keyCol).get
+    val kept = Vector.newBuilder[InternalRow]
+    generations(st, h.renames, files).foreach { g =>
+      // the output's attributes bound to this generation's read
+      // schema; a column the generation lacks reads as null
+      val ordinal = g.names.zipWithIndex.toMap
+      def bind(e: Expression): Expression = e.transform {
+        case a: AttributeReference =>
+          ordinal.get(a.name).fold[Expression](Literal(null, a.dataType))(
+            BoundReference(_, a.dataType, nullable = true))
+      }
+      val keep = Predicate.createInterpreted(bind(condition))
+      val keyOf = bind(Cast(key, LongType))
+      val project = InterpretedUnsafeProjection.createProjection(out.map(bind))
+      g.files.foreach { file =>
+        val dead = tombstones.getOrElse(file, Set.empty[Long])
+        scanLocal(g.schema, file) { row =>
+          if (keep.eval(row) && (dead.isEmpty || {
+                val k = keyOf.eval(row)
+                k == null || !dead(k.asInstanceOf[Long])
+              }))
+            kept += project(row).copy()
+        }
+      }
+    }
+    frame(kept.result())
+  }
+
+  /** Version `dv`'s tombstones of `files` (absolute paths), read on the
+    * driver through [[scanLocal]]: a deletion vector is
+    * purge-batch-sized by construction, the bound the Spark path's
+    * broadcast relies on too.
+    */
+  private def localTombstones(dv: Option[String],
+                              files: Set[String]): Map[String, Set[Long]] =
+    dv.fold(Map.empty[String, Set[Long]]) { name =>
+      val parts = {
+        val ls = Files.list(deletesDir.resolve(name))
+        try ls.iterator().asScala.map(_.toString).filter { p =>
+          val n = Paths.get(p).getFileName.toString
+          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+        }.toVector
+        finally ls.close()
+      }
+      val got = Vector.newBuilder[(String, Long)]
+      parts.foreach(p => scanLocal(SnapshotStore.DvSchema, p) { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          val path = resolvePath(r.getUTF8String(0).toString)
+          if (files(path)) got += path -> r.getLong(1)
+        }
+      })
+      got.result().groupMap(_._1)(_._2).map { case (f, ks) => f -> ks.toSet }
+    }
+
+  /** Spark's own parquet reader (`ParquetFileFormat`), built once per
+    * requested schema per store and reused: building it broadcasts the
+    * Hadoop conf, so a lookup that reuses it creates no broadcast.
+    * Batches are returned when the format supports them for the schema
+    * (`supportBatch`), as in Spark's own scan. The reader captures the
+    * session's SQL conf (and the Hadoop conf derived from it) when it is
+    * built, so it is rebuilt when those settings have changed since:
+    * a lookup decodes under the conf the Spark scan would use.
+    */
+  private final class LocalReader(
+      val conf: Map[String, String],
+      val read: org.apache.spark.sql.execution.datasources.PartitionedFile =>
+        Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      val batched: Boolean)
+  private val localReaders =
+    new java.util.concurrent.ConcurrentHashMap[StructType, LocalReader]()
+  /** Readers built so far (spec hook: reuse and conf-change rebuilds). */
+  private[graft] val localReaderBuilds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Decode every row of one parquet `file` through `schema` on the
+    * driver, handing each to `f` (a row is valid only during the
+    * call). The per-file iterator is closed in a `finally`: outside a
+    * task no completion listener closes a reader an exception
+    * abandoned.
+    */
+  private def scanLocal(schema: StructType, file: String)(
+      f: org.apache.spark.sql.catalyst.InternalRow => Unit): Unit = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.vectorized.ColumnarBatch
+    val conf = Bridge.sqlConf(spark).getAllConfs
+    val reader = localReaders.compute(schema, (st, old) =>
+      if (old != null && old.conf == conf) old
+      else {
+        val format = new ParquetFileFormat
+        val batch = format.supportBatch(spark, st)
+        localReaderBuilds.incrementAndGet()
+        new LocalReader(conf,
+          format.buildReaderWithPartitionValues(spark, st, new StructType(), st, Nil,
+            Map(FileFormat.OPTION_RETURNING_BATCH -> batch.toString),
+            Bridge.newHadoopConf(spark)), batch)
+      })
+    val p = Paths.get(file)
+    val size = Files.size(p)
+    val it = reader.read(PartitionedFile(InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPathString(file), 0L, size,
+      Array.empty[String], Files.getLastModifiedTime(p).toMillis, size))
+    try {
+      if (reader.batched) it.asInstanceOf[Iterator[AnyRef]].foreach(b =>
+        b.asInstanceOf[ColumnarBatch].rowIterator().asScala.foreach(f))
+      else it.foreach(f)
+    } finally it match {
+      case c: java.io.Closeable => c.close()
+      case _ => ()
+    }
   }
 
   private def attemptToken(): String =
@@ -609,7 +798,7 @@ final class SnapshotStore(
     */
   private def headerLine(prior: Option[SnapshotStore.Header],
                          txn: Option[Long],
-                         schema: Option[org.apache.spark.sql.types.StructType],
+                         schema: Option[StructType],
                          dv: Option[String],
                          renames: Option[Seq[(Long, String, String)]])
       : String = {
@@ -720,7 +909,7 @@ final class SnapshotStore(
     */
   private def publish(v: Long, entries: Seq[DataFileEntry],
                       txn: Option[Long] = None,
-                      schema: Option[org.apache.spark.sql.types.StructType] = None,
+                      schema: Option[StructType] = None,
                       expectedParent: Option[Long] = None,
                       dvAdd: Option[DataFrame] = None,
                       renames: Option[Seq[(Long, String, String)]] = None)
@@ -761,7 +950,17 @@ final class SnapshotStore(
         // next successful publish's vacuum
         Files.deleteIfExists(tmpM); dropDvStage(dvStage); throw e
     }
-    vacuum(v)
+    // v is committed once the pointer flips: a vacuum failure from
+    // here on must not tell the caller otherwise (a caller that
+    // believed it and retried would apply the change twice). Whatever
+    // this vacuum left, the next one reclaims.
+    try vacuum(v)
+    catch {
+      case NonFatal(e) =>
+        SnapshotStore.log.warn(
+          s"v$v of store $root is committed, but its vacuum failed; " +
+            "the next commit's vacuum reclaims what it left", e)
+    }
     v
   }
 
@@ -1002,7 +1201,7 @@ final class SnapshotStore(
       s"no column $from in ${st.fieldNames.mkString(",")}")
     require(!st.fieldNames.contains(to), s"column $to already exists")
     val v = cur + 1L
-    val newSchema = org.apache.spark.sql.types.StructType(
+    val newSchema = StructType(
       st.fields.map(f => if (f.name == from) f.copy(name = to) else f))
     val log = renamesOf(cur) :+ ((v, from, to))
     publish(v, manifest(cur), txn, Some(newSchema),
@@ -1077,7 +1276,7 @@ final class SnapshotStore(
     val (affected, carried) = manifest(cur).partition(e => probes.exists(h =>
       e.bloom.forall(b => graft.functions.BloomAlgos.mightContain(b, h))))
     if (affected.isEmpty) return cur // no file can hold any affected key
-    val folded = fold(readFiles(cur, affected.map(_.path)), dimDelta)
+    val folded = fold(readFiles(header(cur), affected.map(_.path)), dimDelta)
     if (carried.nonEmpty)
       schemaOf(cur).foreach(validateCarriedEvolution(_, folded.schema))
     publish(v, writeDataFiles(folded, v) ++ carried, txn,
@@ -1102,8 +1301,8 @@ final class SnapshotStore(
     * commits rewrite every file, so they may reshape freely.
     */
   private def validateCarriedEvolution(
-      from: org.apache.spark.sql.types.StructType,
-      to: org.apache.spark.sql.types.StructType): Unit = {
+      from: StructType,
+      to: StructType): Unit = {
     import org.apache.spark.sql.types._
     // Pinned to what Spark 4.1's VECTORIZED parquet reader actually
     // serves (ParquetVectorUpdaterFactory has IntegerToLong,
@@ -1213,8 +1412,8 @@ final class SnapshotStore(
           if (affected.isEmpty) {
             // no file covers any delta key (all-new keys): merge the
             // delta against an empty keyed base of the stored schema
-            readFiles(cur, Seq(all.head.path)).limit(0)
-          } else readFiles(cur, affected.map(_.path))
+            readFiles(header(cur), Seq(all.head.path)).limit(0)
+          } else readFiles(header(cur), affected.map(_.path))
         val folded = fold(baseAffected, keyed)
         // the fold's schema becomes the TABLE schema (add/widen
         // evolution: carried files null-fill new columns and widen
@@ -1331,10 +1530,10 @@ final class SnapshotStore(
     // runs one every call)
     val newRows =
       if (added.isEmpty) readVersion(vTo).limit(0)
-      else readFiles(vTo, added)
+      else readFiles(header(vTo), added)
     val oldRows =
       if (dropped.isEmpty) newRows.limit(0)
-      else readFiles(vFrom, dropped)
+      else readFiles(header(vFrom), dropped)
     newRows.exceptAll(oldRows)
   }
 
@@ -1393,17 +1592,18 @@ final class SnapshotStore(
     // anything dot-prefixed older than the staging retention window
     // is a dead writer's garbage and is reclaimed here, mirroring how
     // orphaned data files are.
+    val now = System.currentTimeMillis()
+    def pastStagingWindow(p: Path): Boolean = {
+      val age = try now - Files.getLastModifiedTime(p).toMillis
+        catch { case _: java.io.IOException => -1L }
+      age > SnapshotStore.dvStageRetentionMs
+    }
     if (Files.exists(deletesDir)) {
       val retainedDvs: Set[String] = retainedVersions.flatMap(dvName).toSet
-      val now = System.currentTimeMillis()
       val dl = Files.list(deletesDir)
       try dl.forEach { d =>
         val name = d.getFileName.toString
-        val orphanedStage = name.startsWith(".") && {
-          val age = try now - Files.getLastModifiedTime(d).toMillis
-            catch { case _: java.io.IOException => -1L }
-          age > SnapshotStore.dvStageRetentionMs
-        }
+        val orphanedStage = name.startsWith(".") && pastStagingWindow(d)
         if ((!name.startsWith(".") && !retainedDvs.contains(name)) ||
             orphanedStage)
           org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
@@ -1411,24 +1611,16 @@ final class SnapshotStore(
     }
     val dataRoot = Paths.get(root, "data")
     if (Files.exists(dataRoot)) {
+      // an attempt dir a live writer is still filling: its parquet
+      // sits under `_temporary` until the job commits, and entries
+      // vanish from it as tasks commit. Neither pass enters it while
+      // it is younger than the staging window.
+      def inFlight(d: Path): Boolean =
+        d.getParent == dataRoot && Files.exists(d.resolve("_temporary")) &&
+          !pastStagingWindow(d)
       // pass 1: delete unreferenced parquet files (+ checksum
-      // siblings). Materialize the listing BEFORE deleting — a lazy
-      // walk throws NoSuchFileException when entries vanish under it.
-      val files = {
-        val walk = Files.walk(dataRoot)
-        try {
-          val buf = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-          walk.forEach(p => buf += p)
-          buf.toSeq
-        } finally walk.close()
-      }
-      val now = System.currentTimeMillis()
-      def pastAttemptRetention(p: java.nio.file.Path): Boolean = {
-        val age = try now - Files.getLastModifiedTime(p).toMillis
-          catch { case _: java.io.IOException => -1L }
-        age > SnapshotStore.dvStageRetentionMs
-      }
-      files.foreach { f =>
+      // siblings). The listing is materialized BEFORE deleting.
+      listTree(dataRoot, inFlight).foreach { f =>
         val name = f.getFileName.toString
         val norm = normalizePath(f.toUri.toString)
         if (name.endsWith(".parquet") && Files.isRegularFile(f) &&
@@ -1436,39 +1628,52 @@ final class SnapshotStore(
             // never-referenced files (a live concurrent attempt, or a
             // crashed one) are only reclaimed past the staging window;
             // files a dropped manifest referenced go immediately
-            (droppedRefs(norm) || pastAttemptRetention(f))) {
+            (droppedRefs(norm) || pastStagingWindow(f))) {
           Files.deleteIfExists(f)
           Files.deleteIfExists(f.resolveSibling(s".$name.crc"))
         }
       }
       // pass 2: a version dir with no parquet left holds only write
-      // markers — remove it, EXCEPT a dir a live writer is still
-      // filling (its parquet sits under `_temporary` until the job
-      // commits): skip any dir that still has a _temporary entry and
-      // is younger than the staging window
-      val dirs = Files.list(dataRoot)
-      try dirs.forEach { d =>
-        if (Files.isDirectory(d)) {
-          val ls = Files.list(d)
-          val (hasParquet, inFlight) =
-            try {
-              var pq = false; var tmp = false
-              ls.forEach { p =>
-                val n = p.getFileName.toString
-                if (n.endsWith(".parquet")) pq = true
-                if (n == "_temporary") tmp = true
-              }
-              (pq, tmp)
-            } finally ls.close()
-          if (!hasParquet && !(inFlight && !pastAttemptRetention(d))) {
-            val w = Files.walk(d)
-            try w.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => Files.deleteIfExists(p))
-            finally w.close()
-          }
+      // markers — remove it, unless a live writer is still filling it
+      listTree(dataRoot, _ => true).filter(d => Files.isDirectory(d) && !inFlight(d))
+        .foreach { d =>
+          if (!listTree(d, _ => true).exists(_.getFileName.toString.endsWith(".parquet")))
+            (listTree(d, _ => false).reverse :+ d).foreach { p =>
+              try Files.deleteIfExists(p)
+              catch { case _: java.nio.file.DirectoryNotEmptyException => () }
+            }
         }
-      } finally dirs.close()
     }
+  }
+
+  /** Every path under `dir` (not `dir` itself), parents before their
+    * children, listed with `walkFileTree`: an entry that vanishes
+    * under the walk (a concurrent writer's task commit moves its
+    * `_temporary` files) is passed over, and no directory for which
+    * `prune` holds is entered (it is listed itself).
+    */
+  private def listTree(dir: Path, prune: Path => Boolean): Seq[Path] = {
+    import java.nio.file.{FileVisitResult, NoSuchFileException, SimpleFileVisitor}
+    import java.nio.file.attribute.BasicFileAttributes
+    val out = Vector.newBuilder[Path]
+    def gone(e: java.io.IOException): FileVisitResult = e match {
+      case null | _: NoSuchFileException => FileVisitResult.CONTINUE
+      case _ => throw e
+    }
+    Files.walkFileTree(dir, new SimpleFileVisitor[Path] {
+      override def preVisitDirectory(d: Path, a: BasicFileAttributes): FileVisitResult =
+        if (d == dir) FileVisitResult.CONTINUE
+        else {
+          out += d
+          if (prune(d)) FileVisitResult.SKIP_SUBTREE else FileVisitResult.CONTINUE
+        }
+      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
+        out += f; FileVisitResult.CONTINUE
+      }
+      override def visitFileFailed(f: Path, e: java.io.IOException): FileVisitResult = gone(e)
+      override def postVisitDirectory(d: Path, e: java.io.IOException): FileVisitResult = gone(e)
+    })
+    out.result()
   }
 
   /** input_file_name() and Path.toUri render the same file as
@@ -1517,9 +1722,43 @@ final class ConcurrentCommitException(msg: String, cause: Throwable = null)
 object SnapshotStore {
   /** The fields of one manifest header line. */
   private final case class Header(txn: Option[Long],
-                                  schema: Option[org.apache.spark.sql.types.StructType],
+                                  schema: Option[StructType],
                                   renames: Seq[(Long, String, String)],
                                   dv: Option[String])
+
+  /** One write generation of a read (the store's `generations`):
+    * its files, the schema they are read through, and the current name
+    * each field of that schema maps forward to.
+    */
+  private final case class Generation(files: Seq[String], schema: StructType,
+                                      names: Seq[String])
+
+  /** The on-disk schema of a deletion vector: (root-relative path, key). */
+  private val DvSchema: StructType = StructType(Seq(
+    org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("key", org.apache.spark.sql.types.LongType)))
+
+  /** The most rows a lookup's planned files may hold (the manifest's
+    * `rows`) for the lookup to read them on the driver (the store's
+    * `lookup`). Measured on one parquet file of N rows × 7 columns at
+    * 4 cores, JIT warm, median wall of `collect()` on the driver read
+    * against the same file's Spark scan:
+    *   - a point lookup (1 row kept) crosses over near 250 000 rows
+    *     (200 000: 54 against 65 ms; 400 000: 105 against 65 ms), and a
+    *     500-key range (a 1% range read of a 50 000-key store) near
+    *     270 000 rows;
+    *   - a range that keeps EVERY planned row crosses over near 25 000
+    *     rows (25 000: 84 against 80 ms; 50 000: 170 against 136 ms),
+    *     because each kept row then passes through the local relation's
+    *     own planning and collect.
+    * 65 536 keeps the selective lookups the store serves (a point or a
+    * 1% range planning one to five 12 500-row files) on the driver, and
+    * bounds both the worst case (a range keeping all of them, under 2×
+    * the scan) and the driver memory a lookup can take.
+    */
+  private[graft] val LocalReadMaxRows: Long = 65536L
+
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[SnapshotStore])
 
   /** A dot-prefixed `_deletes` staging dir older than this belongs to
     * a crashed writer (a live stage→land window is seconds) and is

@@ -68,19 +68,47 @@ object GraftLines {
   /** Line count = next offset to produce (files end each record with
     * a newline, the text-writer convention).
     */
-  def countLines(p: java.nio.file.Path): Long = {
-    val in = Files.newInputStream(p)
+  def countLines(p: java.nio.file.Path): Long = advance(p, LineCursor(0L, 0L)).lines
+
+  /** A segment's line count and the byte offset just past its last
+    * newline, where the next count resumes.
+    */
+  final case class LineCursor(lines: Long, bytes: Long)
+
+  /** `c` advanced over the bytes appended to `p` since `c` was taken:
+    * only those bytes are read. A partial last line is left for the
+    * next call.
+    *
+    * Segments are append-only: a writer adds lines at the end and never
+    * rewrites what a reader may already have counted (a line offset,
+    * once served, names the same record forever). So the one rewrite
+    * this checks for is a file shorter than the cursor, counted again
+    * from its first byte; a rewrite that leaves the file at least as
+    * long as the cursor breaks that contract and is not detected.
+    */
+  def advance(p: java.nio.file.Path, c: LineCursor): LineCursor = {
+    val ch = java.nio.channels.FileChannel.open(p, java.nio.file.StandardOpenOption.READ)
     try {
-      val buf = new Array[Byte](64 * 1024)
-      var n = 0L
-      var r = in.read(buf)
+      val from = if (ch.size() < c.bytes) LineCursor(0L, 0L) else c
+      ch.position(from.bytes)
+      val buf = java.nio.ByteBuffer.allocate(64 * 1024)
+      val bytes = buf.array()
+      var lines = from.lines
+      var end = from.bytes
+      var pos = from.bytes
+      var r = ch.read(buf)
       while (r > 0) {
         var i = 0
-        while (i < r) { if (buf(i) == '\n') n += 1; i += 1 }
-        r = in.read(buf)
+        while (i < r) {
+          if (bytes(i) == '\n') { lines += 1; end = pos + i + 1 }
+          i += 1
+        }
+        pos += r
+        buf.clear()
+        r = ch.read(buf)
       }
-      n
-    } finally in.close()
+      LineCursor(lines, end)
+    } finally ch.close()
   }
 
   /** The Kafka-source offset JSON: `{"topic": {"0": 12, "1": 7}}`. */
@@ -149,9 +177,17 @@ class GraftLinesStream(path: String, startingOffsets: String,
 
   override def initialOffset(): Offset = initial
 
+  /** Per segment, where the last count stopped: a trigger reads only
+    * the bytes appended since, not the whole segment again.
+    */
+  private val cursors =
+    new java.util.concurrent.ConcurrentHashMap[java.nio.file.Path, GraftLines.LineCursor]()
+
   private def latestAvailable(): GraftLinesOffset =
-    GraftLinesOffset(GraftLines.segments(path)
-      .map { case (t, p, f) => (t, p) -> GraftLines.countLines(f) }.toMap)
+    GraftLinesOffset(GraftLines.segments(path).map { case (t, p, f) =>
+      (t, p) -> cursors.compute(f, (_, c) =>
+        GraftLines.advance(f, Option(c).getOrElse(GraftLines.LineCursor(0L, 0L)))).lines
+    }.toMap)
 
   override def latestOffset(): Offset = latestAvailable()
 

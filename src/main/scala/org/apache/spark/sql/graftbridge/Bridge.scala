@@ -38,4 +38,19 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The session's SQL conf and a fresh Hadoop conf carrying it: what
+    * Spark's own file scans build their readers with.
+    */
+  def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
+  def newHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+
+  /** A file source's output schema: every field nullable, nested ones
+    * too, as a `spark.read.schema(st)` scan reports it.
+    */
+  def asNullable(st: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = st.asNullable
 }

@@ -1623,4 +1623,159 @@ class StoreSpec extends AnyFunSuite with TempDirs {
       }
     } finally spark.experimental.extraStrategies = Nil
   }
+
+  /** A lookup's rows against the Spark scan's: `read().get.filter(cond)`
+    * on the same store, as a multiset, under the same schema.
+    */
+  private def assertLookup(store: SnapshotStore, got: DataFrame,
+                           cond: org.apache.spark.sql.Column, what: String): Unit = {
+    val all = store.read().get
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(got.schema == all.schema, s"$what: schema")
+    assert(rows(got) == rows(all.filter(cond)), what)
+  }
+
+  test("local lookups equal the Spark scan on randomized stores with evolution, renames and DVs") {
+    import spark.implicits._
+    val lwwAdd = (b: DataFrame, d: DataFrame) => d.unionByName(
+      b.join(d.select(col("k").as("dk")), col("k") === col("dk"), "left_anti")
+        .drop("dk"), allowMissingColumns = true)
+    Seq(5L, 19L).foreach { seed =>
+      val rng = new scala.util.Random(seed)
+      val n = 300 + rng.nextInt(200)
+      val store = new SnapshotStore(spark, newRoot(), "k", filesPerCommit = 4)
+      // v0: even keys, an INT column and a payload
+      store.commit((0 until n).map(i => (i * 2L, rng.nextInt(1000), s"p$i")).toDF("k", "a", "payload")
+        .select(col("k"), col("a").cast("int").as("a"), col("payload")))
+      // a fold widens `a` to BIGINT; untouched files stay int32 on disk
+      store.mergeWith(Seq((2L * rng.nextInt(n), 6000000000L, "wide")).toDF("k", "a", "payload"),
+        identity[DataFrame], lwwAdd)
+      // a column added after the files were written
+      store.mergeWith(Seq((2L * rng.nextInt(n), 7L, "x", "added")).toDF("k", "a", "payload", "extra"),
+        identity[DataFrame], lwwAdd)
+      // a rename: files from before it are a second generation
+      store.renameColumn("payload", "body")
+      store.mergeWith(Seq((2L * rng.nextInt(n) + 1L, 8L, "after", "e")).toDF("k", "a", "body", "extra"),
+        identity[DataFrame], lwwAdd)
+      // merge-on-read purge, then a re-upsert of one purged key
+      val purged = Seq.fill(6)(2L * rng.nextInt(n))
+      store.purgeMor(purged.toDF("k"))
+      store.mergeWith(Seq((purged.head, 9L, "reborn", "r")).toDF("k", "a", "body", "extra"),
+        identity[DataFrame], lwwAdd)
+      val v = store.currentVersion.get
+      assert(store.dvName(v).isDefined, s"seed $seed: the store keeps a deletion vector")
+      assert(store.renamesOf(v).nonEmpty)
+      val m = store.manifest(v)
+      // every file boundary, just outside it, the purged keys, keys
+      // outside every file (an empty plan) and random keys
+      val points = m.flatMap(e => Seq(e.minKey, e.maxKey, e.minKey - 1, e.maxKey + 1)) ++
+        purged ++ Seq(-7L, 10L * n) ++ Seq.fill(10)(rng.nextInt(2 * n).toLong)
+      points.distinct.foreach { k =>
+        assertLookup(store, store.readRange(k, k), col("k") === k, s"seed $seed: key $k")
+      }
+      val ranges = Seq.fill(6) {
+        val lo = rng.nextInt(2 * n).toLong - 20L
+        (lo, lo + rng.nextInt(150))
+      } ++ Seq((-100L, -1L), (10L * n, 11L * n), (m.map(_.minKey).min, m.map(_.maxKey).max))
+      ranges.foreach { case (lo, hi) =>
+        assertLookup(store, store.readRange(lo, hi), col("k").between(lo, hi),
+          s"seed $seed: range $lo-$hi")
+      }
+    }
+  }
+
+  test("local readPoint: an Int probe against a BIGINT index column, with tombstones") {
+    import spark.implicits._
+    val store = new SnapshotStore(spark, newRoot(), "k", indexCol = Some("grp"))
+    store.commit((0L until 400L).map(k => (k, k / 50, s"p$k")).toDF("k", "grp", "payload"))
+    assert(store.schemaOf(0L).get("grp").dataType == org.apache.spark.sql.types.LongType)
+    store.purgeMor(Seq(3L, 60L, 399L).toDF("k"))
+    (0 to 8).foreach { g =>
+      val got = store.readPoint(g) // an Int probe
+      assertLookup(store, got, col("grp") === g.toLong, s"group $g")
+      assert(got.count() == (if (g == 8) 0L else if (g == 0 || g == 1 || g == 7) 49L else 50L))
+    }
+  }
+
+  test("lookups on a small store start no Spark job; a plan above the limit runs the scan") {
+    import spark.implicits._
+    val store = new SnapshotStore(spark, newRoot(), "k", indexCol = Some("grp"))
+    store.commit((0L until 400L).map(k => (k, k / 50, s"p$k")).toDF("k", "grp", "payload"))
+    store.purgeMor(Seq(3L).toDF("k"))
+    val ((point, byIndex, gone), rec) = SparkEvents.record(spark) {
+      (store.readRange(5L, 5L).collect(), store.readPoint(1L).collect(),
+        store.readRange(3L, 3L).collect())
+    }
+    assert(rec.jobs.isEmpty, s"local lookups started jobs: ${rec.jobs}")
+    assert(point.map(_.getString(2)).toSeq == Seq("p5"))
+    assert(byIndex.length == 50 && gone.isEmpty)
+    // one file holding more rows than the limit: the Spark scan, same rows
+    val big = new SnapshotStore(spark, newRoot(), "k", filesPerCommit = 1)
+    big.commit(spark.range(SnapshotStore.LocalReadMaxRows + 1)
+      .select(col("id").as("k"), (col("id") * 2).as("v")))
+    assert(big.plannedFiles(7L, 7L).map(_.rows).sum > SnapshotStore.LocalReadMaxRows)
+    val (rows, bigRec) = SparkEvents.record(spark)(big.readRange(7L, 9L).collect())
+    assert(bigRec.jobs.nonEmpty, "a plan above the limit must run the Spark scan")
+    assert(rows.map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
+      Seq((7L, 14L), (8L, 16L), (9L, 18L)))
+  }
+
+  test("the local reader is reused, and rebuilt after a session conf change") {
+    import spark.implicits._
+    val store = new SnapshotStore(spark, newRoot(), "k")
+    store.commit((0L until 400L).map(k => (k, s"p$k")).toDF("k", "payload"))
+    store.readRange(1L, 1L).collect()
+    val built = store.localReaderBuilds.get()
+    (0 until 20).foreach(i => store.readRange(i, i + 3).collect())
+    assert(store.localReaderBuilds.get() == built, "an unchanged conf must reuse the reader")
+    val key = "spark.sql.parquet.columnarReaderBatchSize"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "7")
+    try {
+      assertLookup(store, store.readRange(3L, 40L), col("k").between(3L, 40L), "after conf change")
+      assert(store.localReaderBuilds.get() == built + 1,
+        "a lookup after a conf change must rebuild the reader")
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    store.readRange(1L, 1L).collect()
+    assert(store.localReaderBuilds.get() == built + 2, "restoring the conf rebuilds again")
+  }
+
+  test("local lookups, failed ones included, do not grow the open file descriptors") {
+    import spark.implicits._
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "needs /proc/self/fd")
+    val store = new SnapshotStore(spark, newRoot(), "k")
+    store.commit((0L until 400L).map(k => (k, s"p$k")).toDF("k", "payload"))
+    store.purgeMor(Seq(4L, 200L).toDF("k")) // the deletion vector is read too
+    // an Int probe against a STRING index column casts every decoded
+    // value (ANSI), and a non-numeric one raises mid-file: the reader
+    // that exception abandons must be closed too
+    val failing = new SnapshotStore(spark, newRoot(), "k", indexCol = Some("tag"))
+    failing.commit((0L until 400L).map(k => (k, if (k < 3) "5" else s"t$k")).toDF("k", "tag"))
+    (0 until 20).foreach(i => store.readRange(i, i).collect())
+    intercept[Exception](failing.readPoint(5).collect())
+    val before = fds.list().length
+    (0 until 500).foreach(i => store.readRange(i % 400, i % 400).collect())
+    (0 until 100).foreach(_ => intercept[Exception](failing.readPoint(5).collect()))
+    val after = fds.list().length
+    assert(after - before < 50,
+      s"open descriptors went from $before to $after over 600 lookups")
+  }
+
+  test("a vacuum failure after the pointer flip never fails the commit that landed") {
+    import spark.implicits._
+    val root = newRoot()
+    val store = new SnapshotStore(spark, root, "k", keepVersions = 2)
+    store.commit(Seq((1L, "a")).toDF("k", "payload"))
+    store.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "payload"))
+    // v2's vacuum drops m0 and reads it first: a line it cannot parse
+    // makes that vacuum throw after the flip
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "_manifests", "m0.tsv"),
+      "# graft-manifest v1 key=k\nnot a manifest line\n")
+    val v = store.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "payload"))
+    assert(v == 2L)
+    assert(store.currentVersion.contains(2L))
+    assert(store.read().get.count() == 3L)
+  }
 }

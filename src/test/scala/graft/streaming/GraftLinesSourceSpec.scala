@@ -93,4 +93,38 @@ class GraftLinesSourceSpec extends AnyFunSuite with TempDirs {
       .select("line").collect().map(_.getString(0)).sorted.toSeq
     assert(got == Seq("a4", "a5", "b2", "b3", "b4", "b5"))
   }
+
+  test("the offset cursor reads only appended bytes and always equals countLines") {
+    import GraftLines.LineCursor
+    val seg = tempDir("gl-cursor").resolve("pub-0.log")
+    var c = LineCursor(0L, 0L)
+    def append(s: String): Unit =
+      Files.write(seg, s.getBytes(UTF_8), java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.APPEND)
+    def step(): LineCursor = {
+      c = GraftLines.advance(seg, c)
+      assert(c.lines == GraftLines.countLines(seg), s"cursor $c")
+      c
+    }
+    append("a\nb\n")
+    assert(step() == LineCursor(2L, 4L))
+    // an append that ends mid-line: the partial line is not counted,
+    // and the cursor stays after the last newline
+    append("c\nd")
+    assert(step() == LineCursor(3L, 6L))
+    assert(step() == LineCursor(3L, 6L), "no append, no change")
+    append("dd\n")
+    assert(step() == LineCursor(4L, 10L))
+    // appends that cross the 64 KiB read buffer, lines of every length
+    val rng = new scala.util.Random(3)
+    (0 until 40).foreach { _ =>
+      append(Seq.fill(rng.nextInt(5))("x" * rng.nextInt(40000) + "\n").mkString +
+        "y" * rng.nextInt(3))
+      step()
+    }
+    assert(c.bytes <= Files.size(seg))
+    // a file shorter than its cursor was rewritten: counted from byte 0
+    Files.write(seg, "z\n".getBytes(UTF_8))
+    assert(step() == LineCursor(1L, 2L))
+  }
 }
